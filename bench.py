@@ -3,41 +3,45 @@
     {"metric": ..., "value": <sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
 Two parts:
-1. Batch operator suite at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-   on local[$SPARK_GRAFT_CPUS] — per-query wall seconds.
-2. Streaming CEP scaling evidence (north rule): the identical tumbling-window
-   job run at executor-count N (one JVM) and 4N (four concurrent JVMs), every
-   JVM taskset-pinned to its own disjoint 8-core cpuset slice so both levels
-   give each executor identical CPU resources; reports clips/sec at both and
-   scaling efficiency T(4N) / (4 * T(N)), median-of-reps measured entirely
-   within THIS invocation (no merging with prior runs). Also rewrites
-   BENCH/BASELINE.md with the numbers and appends the raw run to
-   BENCH/history.jsonl.
+1. Batch operator suite at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]:
+   per-query wall seconds, best of 3.
+2. Streaming CEP scaling evidence (north rule): clips/sec of the same job
+   at N and 4N executors and the paired efficiency T(4N) / (4 * T(N)), all
+   measured within THIS invocation (method: `run_scaling`, SCALE.md §8).
 
-Set SPARK_GRAFT_BENCH_SKIP_SCALING=1 to skip part 2 (it spawns JVM fleets).
+Each run appends its JSON line (plus the git `code`) to BENCH/history.jsonl
+and re-renders BENCH/BASELINE.md from that file.
+
+Environment:
+    SPARK_GRAFT_SF_DIR              batch input dir (default: the sf0.1 test data)
+    SPARK_GRAFT_CPUS                batch suite cores (default 32)
+    SPARK_GRAFT_BENCH_WORK          scaling work dir (default /dev/shm/core_spark_bench)
+    SPARK_GRAFT_BENCH_SKIP_SCALING  set to skip part 2 (it spawns JVM fleets)
+    SPARK_GRAFT_BENCH_CLIPS         scaling input size in clips (default 480000)
+    SPARK_GRAFT_BENCH_BUDGET_SEC    soft wall budget of the whole run (default 3300)
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-import shutil as _shutil
+import shutil
+import statistics
 import subprocess
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 
-
-def _git_head() -> str:
-    try:
-        out = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-            capture_output=True, text=True, timeout=10,
-        )
-        return out.stdout.strip() or "unknown"
-    except Exception:
-        return "unknown"
+CORES_LO = 2  # local[k] of the calibrated pairs (footprint: run_scaling)
+HEAP_LO = "4g"  # right-sized heap, identical at both levels of a pair
+SF_CORES, SF_HEAP = 6, "8g"  # spec-form pairs: the BASELINE.json footprint
+N_EXEC = 4  # executors at the 4N level
+REPEATS = 5  # calibrated pairs: 3 graded + 2 budget-optional tighteners
+PROBE_BAND = (0.7, 1 / 0.7)  # spec-form probe_fleet/probe_lo gate
 
 BATCH_QUERIES = [
     "ts_resample_avg",
@@ -59,27 +63,34 @@ BATCH_QUERIES = [
     "ts_cep_contiguous",
     "audio_vad_stats",
     "dedup_audio_fingerprint",
-    # stateful streaming verb end-to-end (readStream -> applyInPandasWithState
-    # -> watermark-closed emission) over the sf events table
-    "stream_twa",
-    # whole-suite single-pass expectations validation over the events table
-    "dq_expectations",
-    # round-4 expectation types incl. the range-partitioned monotonicity pass
-    "dq_expectations_extended",
+    "stream_twa",  # stateful streaming verb end-to-end over the events table
+    "dq_expectations",  # whole-suite single-pass expectations validation
+    "dq_expectations_extended",  # incl. the range-partitioned monotonicity pass
     "dq_expectations_conditioned",
 ]
 
 
+def _git_head() -> str:
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
+            capture_output=True, text=True, timeout=10,
+        ).stdout.strip() or "unknown"
+    except Exception:
+        return "unknown"
+
+
 def run_batch(sf_dir: str, cores: int) -> dict[str, float]:
-    from core_spark.session import get_spark
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import PandasUDFType
+
     from core_spark import registry
+    from core_spark.session import get_spark
 
     spark = get_spark("bench", cores=cores, shuffle_partitions=cores)
     # warm the JVM + the Python/Arrow worker pool once so per-query times
     # measure the queries, not the one-time fork of `cores` UDF workers
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType
 
     @F.pandas_udf("double", PandasUDFType.SCALAR)
     def _warm(v):
@@ -88,12 +99,8 @@ def run_batch(sf_dir: str, cores: int) -> dict[str, float]:
     spark.range(0, cores * 1000, 1, cores).select(
         _warm(F.col("id").cast("double"))
     ).count()
-    # min of 3 runs per query (standard steady-state DB-bench practice):
-    # the first execution of each distinct plan shape pays one-time JVM
-    # C2/codegen compilation (~4s on the first heavy join), which is
-    # amortized to zero in the long-running-cluster regime being modeled;
-    # the third rep narrows the shared-host ±25% drift band that made the
-    # r03 artifact over-report dedup_ngram_jaccard from a single pass
+    # min of 3 runs per query: the first run of each plan shape pays one-time
+    # JIT/codegen compilation, and the third narrows shared-host drift
     times: dict[str, float] = {}
     for name in BATCH_QUERIES:
         fn = registry.QUERIES[name]
@@ -108,11 +115,26 @@ def run_batch(sf_dir: str, cores: int) -> dict[str, float]:
     return times
 
 
+def _run_batch_isolated(sf_dir: str, cores: int) -> dict[str, float]:
+    """Run the batch suite in a CHILD process so its local[32] JVM (a
+    pre-touched multi-GB heap plus `cores` Python workers) has exited before
+    the scaling fleet is measured; left resident, even idle, it steals
+    memory bandwidth and LLC from the pinned fleet JVMs."""
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--batch-only"],
+        cwd=REPO, env=dict(os.environ, PYTHONPATH=REPO),
+        stdout=subprocess.PIPE, text=True, timeout=3600,
+    )
+    lines = [l for l in (out.stdout or "").splitlines() if l.startswith("{")]
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(f"batch suite child failed (rc={out.returncode})")
+    return json.loads(lines[-1])["times"]
+
+
 def _bench_root() -> str:
-    """Scaling work dirs live on tmpfs when available: checkpoints, state
-    stores, and sink merges then never contend on the host's single real
-    disk — the honest single-host analog of a cluster where every executor
-    has its own local disks. Override with $SPARK_GRAFT_BENCH_WORK."""
+    """Scaling work dirs live on tmpfs when available, so checkpoints, state
+    stores and sink merges never contend on one real disk (a cluster gives
+    every executor its own). Override with $SPARK_GRAFT_BENCH_WORK."""
     env = os.environ.get("SPARK_GRAFT_BENCH_WORK")
     if env:
         return env
@@ -133,25 +155,16 @@ def _job_cmd(
     mode: str = "tumbling",
 ) -> list[str]:
     batches = max(1, 336 // files_per_trigger)  # input is written as 336 files
-    # Pin the whole JVM (its GC/JIT threads AND the Python workers it forks,
-    # which inherit the affinity mask) to a fixed cpuset slice. Without this
-    # a nominally-local[6] JVM on an otherwise idle 32-core host freely
-    # schedules GC, JIT, shuffle IO and Python workers onto the idle cores,
-    # inflating the level-N measurement and biasing efficiency DOWN — the
-    # levels must give each executor identical CPU resources to be a scaling
-    # measurement at all.
-    pin = (
-        ["taskset", "-c", cpuset]
-        if cpuset and _shutil.which("taskset")
-        else []
-    )
+    # pin the whole JVM and the Python workers it forks (they inherit the
+    # mask): unpinned, the level-N JVM borrows idle cores and biases the
+    # efficiency down
+    pin = ["taskset", "-c", cpuset] if cpuset and shutil.which("taskset") else []
     cmd = pin + [
         sys.executable, "-m", "core_spark.streaming.job",
         "--cores", str(cores), "--mode", mode, "--salt", "8",
         "--n-clips", str(n_clips), "--work", work,
-        # throughput mode: 480k clips (112 x ~19MB files) per micro-batch —
-        # big enough to amortize per-batch overhead; latency mode passes a
-        # smaller files_per_trigger for many short batches over the SAME input
+        # throughput mode: 112 files (a third of the input) per micro-batch;
+        # latency mode passes fewer for many short batches over the same input
         "--input", in_dir, "--batches", str(batches),
         "--files-per-trigger", str(files_per_trigger),
     ]
@@ -163,10 +176,9 @@ def _job_cmd(
 def _run_job(cmd: list[str], heap: str | None = None) -> dict:
     env = dict(os.environ, PYTHONPATH=REPO)
     if heap:
-        # scaling jobs run a right-sized heap at BOTH levels (identical
-        # config, fair ratio): a local[6] slice job on a 20 GB AlwaysPreTouch
-        # heap wastes startup on 20 GB of page-zeroing (4 concurrent = a
-        # fleet-wide fault storm) and measures ~15% slower from GC locality
+        # a local[k] slice job on the default 20 GB AlwaysPreTouch heap wastes
+        # startup on page-zeroing (4 concurrent = a fleet-wide fault storm)
+        # and measures ~15% slower from GC locality
         env["SPARK_GRAFT_DRIVER_MEM"] = heap
     out = subprocess.run(
         cmd, cwd=REPO, env=env, capture_output=True, text=True, timeout=3600
@@ -177,9 +189,23 @@ def _run_job(cmd: list[str], heap: str | None = None) -> dict:
     return json.loads(line[-1])
 
 
+def _synth_input(n_clips: int, files_per_trigger: int) -> str:
+    """The n-clip input dir (3 x files_per_trigger files), synthesized once in
+    an unpinned step so its writeback never overlaps a measured run."""
+    in_dir = os.path.join(_bench_root(), f"clips_input_{n_clips}")
+    if not os.path.isdir(in_dir):
+        _run_job(
+            [sys.executable, "-m", "core_spark.streaming.job",
+             "--cores", "32", "--mode", "tumbling", "--n-clips", str(n_clips),
+             "--work", os.path.join(_bench_root(), f"synth_{n_clips}"),
+             "--input", in_dir, "--batches", "3",
+             "--files-per-trigger", str(files_per_trigger), "--synth-only"]
+        )
+    return in_dir
+
+
 def _median_by(runs: list[dict], key: str) -> dict:
-    """The run whose <key> is the median — keeps every reported metric from
-    ONE coherent measurement instead of mixing fields across runs."""
+    # the run whose <key> is the median: every metric from ONE measurement
     s = sorted(runs, key=lambda r: r.get(key) or 0.0)
     return s[len(s) // 2]
 
@@ -188,142 +214,23 @@ def _slice(i: int, width: int = 8) -> str:
     return f"{i * width}-{i * width + width - 1}"
 
 
-_CALIB_SRC = r"""
+# pure-CPU kernel (64 KB working set): prints its rate once after a 5 s
+# window (argv "5 0", the calibration) or every 2 s forever ("2 1", the probe)
+_CPU_SRC = r"""
 import sys, time
 import numpy as np
-x = np.random.rand(8192).astype(np.float32)  # 64 KB working set: pure CPU
-t0 = time.time(); n = 0
-while time.time() - t0 < 5:
-    for _ in range(50):
-        y = np.sin(x) * np.cos(x)
-    n += 50
-print(n / (time.time() - t0))
-"""
-
-
-_PROBE_SRC = r"""
-import time, numpy as np
 x = np.random.rand(8192).astype(np.float32)
+window, forever = float(sys.argv[1]), sys.argv[2] == "1"
 while True:
     t0 = time.time(); n = 0
-    while time.time() - t0 < 2:
+    while time.time() - t0 < window:
         for _ in range(20):
             y = np.sin(x) * np.cos(x)
         n += 20
     print(n / (time.time() - t0), flush=True)
+    if not forever:
+        break
 """
-
-_PROBE_CORE = "31"  # reserved: no job slice touches it (slices are 7-wide)
-
-
-def _start_host_probe():
-    """1-core pure-CPU probe on the reserved core, emitting its rate every
-    2 s for the duration of a measured run. Its median rate is the host's
-    DELIVERED per-core speed during that exact window — the quantity that
-    drifts ±25% minute-to-minute on this shared sandbox. Normalizing each
-    level's throughput by its own window's probe rate cancels that drift
-    from the scaling ratio to first order; raw ratios are reported
-    alongside. The probe's 64 KB working set stays L2-resident, so engine
-    DRAM traffic barely touches it (the bias this could add is toward
-    UNDER-correcting, and the raw ratio bounds it)."""
-    if not _shutil.which("taskset"):
-        return None
-    return subprocess.Popen(
-        ["taskset", "-c", _PROBE_CORE, sys.executable, "-c", _PROBE_SRC],
-        stdout=subprocess.PIPE, text=True,
-    )
-
-
-def _stop_host_probe(p) -> float | None:
-    if p is None:
-        return None
-    import statistics
-
-    p.terminate()
-    # per-token parse: terminate() can truncate the final line mid-token,
-    # and one bad token must not discard the whole window's samples
-    rates = []
-    try:
-        out = p.stdout.read()
-    except Exception:
-        out = ""
-    finally:
-        try:
-            p.wait(timeout=10)  # reap — no zombie per measured run
-        except Exception:
-            pass
-    for tok in (out or "").split():
-        try:
-            rates.append(float(tok))
-        except ValueError:
-            continue
-    if not rates:
-        return None
-    # median over the run: startup windows (pre-barrier JVM spin-up) are a
-    # minority of samples, so the median lands inside the data phase
-    return round(statistics.median(rates), 0) if rates else None
-
-
-def _calib_level(n_procs: int) -> float:
-    """Aggregate rate of n_procs pure-compute workers, one pinned per core.
-    Returns 0.0 when the level can't run (e.g. fewer cores than n_procs —
-    taskset fails and the child prints nothing); callers skip such levels."""
-    procs = [
-        subprocess.Popen(
-            ["taskset", "-c", str(i), sys.executable, "-c", _CALIB_SRC],
-            stdout=subprocess.PIPE, text=True,
-        )
-        for i in range(n_procs)
-    ]
-    total = 0.0
-    for p in procs:
-        out = p.communicate()[0]
-        try:
-            total += float(out)
-        except (TypeError, ValueError):
-            return 0.0
-    return total
-
-
-def host_cpu_calibration() -> dict:
-    """Control measurement: how much CPU does this host actually DELIVER as
-    core occupancy grows? A 64 KB-working-set numpy kernel (no DRAM traffic,
-    no IO, no Spark) is run 1-per-core at 2/8/12/24 busy cores; the ratios
-    are a property of the sandbox's shared hypervisor alone. Measured on
-    this host: ~0.95 at 2->8, ~0.82-0.85 at 3->12 and 4->16, ~0.71 at
-    6->24 — i.e. beyond ~12 busy vCPUs the HOST is strongly sublinear, so
-    an engine scaling measurement that occupies 24+ cores measures the
-    hypervisor, not the engine. This control pins the scaling footprint
-    below that knee and is recorded in the artifact so the choice is
-    auditable.
-
-    The control must itself survive the host's minute-scale throttle
-    windows (a single 10 s sample can read 2x low and turn the ratios into
-    nonsense): levels are measured in 3 interleaved rounds
-    (2,8,12,24, 2,8,12,24, ...) and each level keeps its MAX round — the
-    least-throttled window is the best estimate of delivered CAPACITY,
-    which is what the footprint decision needs."""
-    if not _shutil.which("taskset"):
-        return {}
-    best = {2: 0.0, 8: 0.0, 12: 0.0, 24: 0.0}
-    for _ in range(3):
-        for lvl in best:
-            best[lvl] = max(best[lvl], _calib_level(lvl))
-    r2, r8, r12, r24 = best[2], best[8], best[12], best[24]
-    out = {
-        "pure_cpu_rate_2": round(r2, 0),
-        "pure_cpu_rate_8": round(r8, 0),
-        "pure_cpu_rate_12": round(r12, 0),
-        "pure_cpu_rate_24": round(r24, 0),
-    }
-    if r2 > 0:  # ratio only for levels the host could actually run
-        for lvl, r in (("8", r8), ("12", r12), ("24", r24)):
-            if r > 0:
-                out[f"pure_cpu_eff_2_to_{lvl}"] = round(
-                    r / (int(lvl) / 2 * r2), 3
-                )
-    return out
-
 
 _TRIAD_SRC = r"""
 import time
@@ -339,989 +246,412 @@ dt = time.time() - t0
 print(it * 5 * n * 8 / dt / 1e9)  # 5 array passes/iter -> GB/s delivered
 """
 
+_PROBE_CORE = "31"  # reserved: the 7-wide calibrated slices end at core 27
 
-def _membw_level(n_procs: int) -> float:
-    """Aggregate stream-triad GB/s of n_procs workers, one pinned per core.
-    0.0 when the level can't run (mirrors _calib_level)."""
-    procs = [
-        subprocess.Popen(
-            ["taskset", "-c", str(i), sys.executable, "-c", _TRIAD_SRC],
-            stdout=subprocess.PIPE, text=True,
-        )
-        for i in range(n_procs)
-    ]
-    total = 0.0
-    for p in procs:
+
+def _start_host_probe():
+    """1-core pure-CPU probe on the reserved core for the length of a
+    measured run: its median rate is the per-core speed the host DELIVERED
+    in that window (it drifts ±25% minute-to-minute on a shared host). The
+    64 KB working set stays L2-resident: engine DRAM traffic barely moves it."""
+    if not shutil.which("taskset"):
+        return None
+    return subprocess.Popen(
+        ["taskset", "-c", _PROBE_CORE, sys.executable, "-c", _CPU_SRC, "2", "1"],
+        stdout=subprocess.PIPE, text=True,
+    )
+
+
+def _stop_host_probe(p) -> float | None:
+    if p is None:
+        return None
+    p.terminate()
+    try:
+        out = p.communicate(timeout=10)[0]  # reap — no zombie per measured run
+    except subprocess.TimeoutExpired:
+        p.kill()
         out = p.communicate()[0]
+    # per token: terminate() can cut the last line, which must not cost the rest
+    rates = []
+    for tok in (out or "").split():
         try:
-            total += float(out)
-        except (TypeError, ValueError):
-            return 0.0
-    return total
+            rates.append(float(tok))
+        except ValueError:
+            continue
+    # median over the run: pre-barrier JVM spin-up windows are a minority
+    return round(statistics.median(rates), 0) if rates else None
 
 
-def host_membw_calibration() -> dict:
-    """Control measurement #2: how much MEMORY BANDWIDTH does this host
-    deliver as core occupancy grows? The 64 KB pure-CPU control shows
-    near-linear CPU delivery even at 24 busy cores (r03 measured 1.054),
-    so CPU throttling cannot explain the spec-form 4x local[6] gap; this
-    control measures the other shared resource. A 3x64 MB stream-triad
-    kernel (a = b + s*c, no LLC residency, no Spark) runs 1-per-core at
-    1/6/24 busy cores — exactly the spec-form footprint's two levels plus
-    a single-core anchor. If aggregate GB/s at 24 cores is ~flat vs 6
-    cores, the DRAM controller is saturated BY THE HOST at the 4x level
-    and the engine's spec-form ratio is bandwidth-bound, not a scaling
-    defect; separate cluster machines would not share this ceiling.
+def _probed(fn):
+    """fn() inside a reserved-core probe window -> (result, probe rate)."""
+    probe = _start_host_probe()
+    try:
+        res = fn()
+    finally:
+        rate = _stop_host_probe(probe)
+    return res, rate
 
-    Same throttle-window discipline as the CPU control: 3 interleaved
-    rounds per level, keep each level's MAX (delivered capacity)."""
-    if not _shutil.which("taskset"):
-        return {}
-    best = {1: 0.0, 6: 0.0, 24: 0.0}
+
+def _best_rates(src: str, levels: tuple[int, ...], *args: str) -> dict[int, float]:
+    """Summed printed rate of n copies of `src`, one pinned per core, for
+    each n in `levels`; 0.0 where the host can't run a level (fewer cores).
+    A host control must survive minute-scale throttle windows (one 10 s
+    sample can read 2x low), so the levels run in 3 interleaved rounds and
+    each keeps its MAX: the best estimate of delivered capacity."""
+    best = dict.fromkeys(levels, 0.0)
     for _ in range(3):
-        for lvl in best:
-            best[lvl] = max(best[lvl], _membw_level(lvl))
-    r1, r6, r24 = best[1], best[6], best[24]
-    out = {
-        "triad_gbps_1": round(r1, 2),
-        "triad_gbps_6": round(r6, 2),
-        "triad_gbps_24": round(r24, 2),
-    }
-    if r6 > 0 and r24 > 0:
-        # the spec-form analog: 4x the cores -> how much more bandwidth?
-        out["membw_eff_6_to_24"] = round(r24 / (4.0 * r6), 3)
-    if r1 > 0 and r6 > 0:
-        out["membw_eff_1_to_6"] = round(r6 / (6.0 * r1), 3)
+        for lvl in levels:
+            procs = [
+                subprocess.Popen(
+                    ["taskset", "-c", str(i), sys.executable, "-c", src, *args],
+                    stdout=subprocess.PIPE, text=True,
+                )
+                for i in range(lvl)
+            ]
+            outs = [p.communicate()[0] for p in procs]
+            try:
+                best[lvl] = max(best[lvl], sum(float(o) for o in outs))
+            except (TypeError, ValueError):
+                pass
+    return best
+
+
+def host_cpu_calibration() -> dict:
+    """Control: how much CPU does this host DELIVER as core occupancy grows?
+    The pure-CPU kernel (no DRAM traffic, no IO, no Spark) runs one per core
+    at 2/8/12/24 busy cores; the ratios are a property of the hypervisor
+    alone and justify the calibrated pairs' footprint."""
+    if not shutil.which("taskset"):
+        return {}
+    r = _best_rates(_CPU_SRC, (2, 8, 12, 24), "5", "0")
+    out = {f"pure_cpu_rate_{lvl}": round(v, 0) for lvl, v in r.items()}
+    if r[2] > 0:  # ratio only for levels the host could actually run
+        for lvl in (8, 12, 24):
+            if r[lvl] > 0:
+                out[f"pure_cpu_eff_2_to_{lvl}"] = round(r[lvl] / (lvl / 2 * r[2]), 3)
     return out
 
 
+def host_membw_calibration() -> dict:
+    """Control: how much MEMORY BANDWIDTH does this host deliver as core
+    occupancy grows? The stream-triad kernel runs one per core at 1/6/24
+    busy cores — the spec-form footprint's two levels plus a single-core
+    anchor; membw_eff_6_to_24 is the host's own ceiling for that pair."""
+    if not shutil.which("taskset"):
+        return {}
+    r = _best_rates(_TRIAD_SRC, (1, 6, 24))
+    out = {f"triad_gbps_{lvl}": round(v, 2) for lvl, v in r.items()}
+    if r[6] > 0 and r[24] > 0:
+        out["membw_eff_6_to_24"] = round(r[24] / (4.0 * r[6]), 3)
+    if r[1] > 0 and r[6] > 0:
+        out["membw_eff_1_to_6"] = round(r[6] / (6.0 * r[1]), 3)
+    return out
+
+
+def _staggered(cmds: list[list[str]], heap: str) -> list[dict]:
+    # concurrent, started 1 s apart to spread heap-pretouch fault bursts
+    def one(i: int) -> dict:
+        time.sleep(1.0 * i)
+        return _run_job(cmds[i], heap=heap)
+
+    with ThreadPoolExecutor(max_workers=len(cmds)) as ex:
+        return list(ex.map(one, range(len(cmds))))
+
+
+def _pair(wdir: str, cores: int, width: int, heap: str, n_clips: int, in_dir: str):
+    """One N-vs-4N pair: a local[cores] run pinned to slice 0, then N_EXEC
+    concurrent ones on slices 0..N_EXEC-1 that meet on a barrier after their
+    untimed warm-up, each level inside its own probe window. Returns (lo
+    result, summed fleet result, ratios); the normalized efficiency scales
+    the raw one by probe_lo / probe_fleet."""
+    lo, probe_lo = _probed(lambda: _run_job(
+        _job_cmd(cores, n_clips, os.path.join(wdir, "lo"), in_dir,
+                 cpuset=_slice(0, width)),
+        heap=heap,
+    ))
+    bdir = os.path.join(wdir, "barrier")
+    cmds = [
+        _job_cmd(cores, n_clips, os.path.join(wdir, f"fleet{i}"), in_dir,
+                 cpuset=_slice(i, width), barrier_dir=bdir, barrier_count=N_EXEC)
+        for i in range(N_EXEC)
+    ]
+    rs, probe_fleet = _probed(lambda: _staggered(cmds, heap))
+    fleet = {
+        "clips_per_sec": round(sum(r["clips_per_sec"] for r in rs), 1),
+        "clips_per_sec_steady": round(sum(r["clips_per_sec_steady"] or 0 for r in rs), 1),
+        "batch_ms_p50": max(r["batch_ms_p50"] for r in rs),
+        "batch_ms_p99": max(r["batch_ms_p99"] for r in rs),
+    }
+    raw = fleet["clips_per_sec"] / (4.0 * lo["clips_per_sec"])
+    probed = bool(probe_lo and probe_fleet)
+    return lo, fleet, {
+        "efficiency_raw": round(raw, 3),
+        "efficiency_normalized": round(raw * probe_lo / probe_fleet, 3) if probed else None,
+        "probe_lo": probe_lo,
+        "probe_fleet": probe_fleet,
+        "probe_ratio": round(probe_fleet / probe_lo, 3) if probed else None,
+    }
+
+
 def run_scaling(n_clips: int, deadline: float | None = None) -> dict:
-    """North-rule scaling evidence: N vs 4N EXECUTORS, same job, same input.
-
-    An executor is a JVM process, so the faithful single-host stand-in for
-    "4N executors" is 4 concurrent local[k]-core JVMs (each its own driver,
-    state stores, Python worker pool, sink), NOT one local[4k] JVM: a single
-    JVM running 4k task threads + 4k Python workers oversubscribes its one
-    thread pool and conflates intra-JVM contention with scaling.
-
-    Executor footprint (k = 2 task cores by default): chosen from the host
-    CPU calibration control (``host_cpu_calibration``). This sandbox's
-    shared hypervisor delivers near-linear CPU only up to ~12 busy vCPUs
-    (pure-compute control: 0.95 at 2->8 busy cores, 0.85 at 4->16, 0.71 at
-    6->24 — with NO engine code involved), so a fleet that occupies 24+
-    cores measures the hypervisor's throttling curve, not the engine. Four
-    local[2] executors (+ their Python workers and JVM service threads,
-    ~12 busy cores) sit inside the linear envelope; the control is measured
-    in the same invocation and recorded in the artifact so the footprint
-    choice is auditable. Small executors are also the realistic cluster
-    shape (2-5 cores per executor is standard Spark sizing guidance); the
-    per-executor work here is identical at both levels either way.
-
-    Isolation discipline (so the ratio is a measurement, not noise):
-    - every JVM is taskset-pinned to its own disjoint 8-core cpuset slice —
-      level N runs on slice 0, level 4N on slices 0..3. Each executor
-      therefore has IDENTICAL cpu resources at both levels; JVM ergonomics
-      (GC/JIT thread counts) size themselves to the slice via
-      sched_getaffinity. Unpinned, the level-N JVM borrows the idle 24
-      cores for GC/JIT/Python workers and the ratio is biased down.
-    - work dirs (checkpoints, state stores, sink output) live on tmpfs:
-      a cluster gives every executor its own local disks, so four JVMs
-      fsync-contending on this host's single real disk would be measuring
-      the sandbox, not the engine.
-    - fleet jobs rendezvous on a file barrier AFTER their untimed warm-up,
-      so every measured phase runs under full 4-way contention and no
-      job's measurement overlaps another's JVM startup/heap pretouch.
-    - reps are INTERLEAVED (lo, fleet, lo, fleet, ...) and the efficiency
-      is the median of per-pair ratios fleet_i/(4*lo_i): slow host drift
-      (page-cache churn, shared-VM neighbors) then cancels in each pair
-      instead of biasing whichever level ran later. All within this single
-      invocation; nothing is merged from prior runs.
-    - every measured run hosts a concurrent 1-core pure-CPU probe on a
-      RESERVED core (job slices are 7-wide, cores 0-27; probe on 31). The
-      probe's median rate is the host speed that window actually
-      delivered — on this sandbox it swings +/-25% minute-to-minute with
-      neighbor load, which is far larger than any engine effect at this
-      footprint. Each pair ratio is ALSO normalized by
-      probe_lo/probe_fleet as a drift diagnostic, but the headline gates
-      on the RAW paired median: the probe itself slows under the fleet's
-      own ~12-core occupancy (all-core turbo, hypervisor response to
-      self-load), so the correction partly cancels self-induced
-      contention and could hide a genuine scaling regression.
-    - levels run sequentially, never overlapping; rep work dirs are
-      removed after each rep so tmpfs usage stays bounded.
-
-    The residual gap vs 1.0 is shared host memory bandwidth + LLC plus the
-    hypervisor's (calibrated) delivery curve, neither of which separate
-    cluster machines would share.
-
-    - level N: one pinned local[k] job over the full input;
-    - level 4N: four concurrent pinned local[k] jobs, each over the full
-      input (page-cache-shared read-only parquet = 4 executors reading
-      their own shard of a 4x stream); fleet throughput = sum of per-job
-      rates, all batches measured under full 4-way contention.
-
-    Alongside the scaling pairs, one unpaired 4x local[6] fleet run records
-    the host's PEAK engine throughput (the whole-host number the r01
-    artifact carried) so absolute clips/sec stays comparable across rounds.
-    """
+    """North-rule scaling evidence, N vs 4N EXECUTORS on the same input;
+    returns the JSON line's scaling fields. An executor is a JVM, so 4N is
+    4 concurrent local[k] JVMs (not one local[4k] JVM, whose one thread pool
+    conflates intra-JVM contention with scaling), each over the full input,
+    and fleet throughput is the sum of rates. k = 2 keeps the fleet inside
+    the linear part of the host CPU control measured first. JVMs are pinned
+    to disjoint slices, work dirs are on tmpfs, and pairs are INTERLEAVED:
+    the headline is the median of RAW per-pair ratios, so slow drift
+    cancels inside each pair; the probe-normalized ratio is a diagnostic
+    only (the probe also slows under the fleet's own load). The 3 graded
+    pairs and the first latency point always run; the optional phases
+    follow in priority order under the soft deadline."""
     work = _bench_root()
-    n_lo = int(os.environ.get("SPARK_GRAFT_BENCH_CORES_LO", "2"))
-    # right-sized heap per executor footprint (same at both levels)
-    heap = os.environ.get("SPARK_GRAFT_BENCH_HEAP", f"{max(4, 2 + n_lo)}g")
-    in_dir = os.path.join(work, f"clips_input_{n_clips}")
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
-    n_exec = 4
-
-    # Input hygiene: synthesize in a separate unpinned step, flush dirty
-    # pages, then touch every byte once — on tmpfs the pages ARE the cache;
-    # on a /tmp fallback this warms the page cache so no measured run pays
-    # cold-read IO.
-    if not os.path.isdir(in_dir):
-        _run_job(
-            [sys.executable, "-m", "core_spark.streaming.job",
-             "--cores", "32", "--mode", "tumbling", "--n-clips", str(n_clips),
-             "--work", os.path.join(work, "synth"), "--input", in_dir,
-             "--batches", "3", "--files-per-trigger", "112", "--synth-only"]
-        )
-    os.sync()
-    import glob as _glob
-
-    for f in _glob.glob(os.path.join(in_dir, "part-*")):
+    in_dir = _synth_input(n_clips, 112)
+    os.sync()  # then touch every byte once: no measured run pays cold-read IO
+    for f in glob.glob(os.path.join(in_dir, "part-*")):
         with open(f, "rb") as fh:
             while fh.read(1 << 24):
                 pass
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _staggered(args):
-        i, cmd = args
-        time.sleep(1.0 * i)  # spread heap-pretouch fault bursts
-        return _run_job(cmd, heap=heap)
-
-    # host CPU-delivery control (no Spark, no engine code): measured first,
-    # alone on the machine, and recorded in the artifact — the auditable
-    # justification for the executor footprint (see docstring)
+    # host controls (no Spark, no engine code), measured alone on the host
     calib = host_cpu_calibration()
     print(f"  host cpu calibration: {calib}", file=sys.stderr)
     membw = host_membw_calibration()
     print(f"  host memory-bandwidth calibration: {membw}", file=sys.stderr)
 
-    def _over_deadline(phase: str, margin: float = 0.0) -> bool:
-        """Soft wall-clock guard: on a throttled host the full plan can
-        outgrow the caller's patience; optional phases yield rather than
-        risk the whole artifact (the JSON line prints at the very END, so
-        a caller-side kill loses everything — the driver records rc!=0).
-        ``margin`` = the phase's expected duration: a phase that would
-        START before the deadline but FINISH after it must not start
-        (a ~330 s scaling pair starting at budget-10 s overshoots the
-        whole invocation past any caller timeout near the budget)."""
-        if deadline is not None and time.time() + margin > deadline:
-            print(f"  deadline reached — skipping {phase}", file=sys.stderr)
-            return True
-        return False
+    lo_runs, fleet_runs, pair_ratios, fallback = [], [], [], []
+    lat_sweep, ds_points, modes = [], [], {}
+    sf_pairs, sf_discarded, peaks = [], [], []
+    mid_n = max(30_000, n_clips // 3)
 
-    lo_runs: list[dict] = []
-    fleet_runs: list[dict] = []
-    pair_eff: list[float] = []
-    pair_eff_raw: list[float] = []
-    pair_probe_fallback: list[int] = []  # reps whose probe window was lost
-    # job slices are 7-wide (cores 0-27) so the probe core stays reserved
-    def _run_pair(rep: int) -> None:
-        # level N: single executor, pinned to slice 0, probe on core 31
-        lo_dir = os.path.join(work, f"lo_{rep}")
-        probe = _start_host_probe()
-        try:
-            r_lo = _run_job(
-                _job_cmd(n_lo, n_clips, lo_dir, in_dir, cpuset=_slice(0, 7)),
-                heap=heap,
-            )
-        finally:
-            r_probe = _stop_host_probe(probe)
-        r_lo["probe"] = r_probe
-        print(f"  streaming 1x local[{n_lo}] pinned rep={rep}: {r_lo}", file=sys.stderr)
-        lo_runs.append(r_lo)
-        _shutil.rmtree(lo_dir, ignore_errors=True)
+    def single(wdir, n, src, fpt, width=7, mode="tumbling") -> dict:
+        return _run_job(
+            _job_cmd(CORES_LO, n, wdir, src, files_per_trigger=fpt,
+                     cpuset=_slice(0, width), mode=mode),
+            heap=HEAP_LO,
+        )
 
-        # level 4N: fleet of 4 concurrent executors on disjoint slices,
-        # measured phases aligned by the post-warmup barrier
-        bdir = os.path.join(work, f"barrier_{rep}")
-        _shutil.rmtree(bdir, ignore_errors=True)
-        cmds = [
-            _job_cmd(
-                n_lo, n_clips, os.path.join(work, f"fleet{rep}_{i}"), in_dir,
-                cpuset=_slice(i, 7), barrier_dir=bdir, barrier_count=n_exec,
-            )
-            for i in range(n_exec)
-        ]
-        probe = _start_host_probe()
-        try:
-            with ThreadPoolExecutor(max_workers=n_exec) as ex:
-                rs = list(ex.map(_staggered, enumerate(cmds)))
-        finally:
-            fprobe = _stop_host_probe(probe)
-        fleet = {
-            "clips_per_sec": round(sum(r["clips_per_sec"] for r in rs), 1),
-            "clips_per_sec_steady": round(
-                sum(r["clips_per_sec_steady"] or 0 for r in rs), 1
-            ),
-            "batch_ms_p50": max(r["batch_ms_p50"] for r in rs),
-            "batch_ms_p99": max(r["batch_ms_p99"] for r in rs),
-            "probe": fprobe,
-        }
-        print(f"  streaming {n_exec}x local[{n_lo}] pinned rep={rep}: {fleet}", file=sys.stderr)
+    def calibrated(rep: int, wdir: str) -> dict:
+        lo, fleet, ratios = _pair(wdir, CORES_LO, 7, HEAP_LO, n_clips, in_dir)
+        lo_runs.append(lo)
         fleet_runs.append(fleet)
-        raw = fleet["clips_per_sec"] / (4.0 * r_lo["clips_per_sec"])
-        pair_eff_raw.append(round(raw, 3))
-        # drift-corrected ratio: each level's throughput normalized by the
-        # host speed its own window actually delivered (see _start_host_probe).
-        # DIAGNOSTIC only — the headline gates on the raw paired median,
-        # because the probe also slows under the fleet's own occupancy, so
-        # normalization partly cancels self-induced contention too.
-        if r_lo.get("probe") and fprobe:
-            pair_eff.append(round(raw * (r_lo["probe"] / fprobe), 3))
-        else:
-            pair_eff.append(round(raw, 3))
-            pair_probe_fallback.append(rep)
-        for i in range(n_exec):
-            _shutil.rmtree(os.path.join(work, f"fleet{rep}_{i}"), ignore_errors=True)
-        _shutil.rmtree(bdir, ignore_errors=True)
+        pair_ratios.append(ratios)
+        if ratios["efficiency_normalized"] is None:
+            fallback.append(rep)  # probe window lost: raw stands in
+        return dict(ratios, lo=lo["clips_per_sec"], fleet=fleet["clips_per_sec"])
 
-    # 3 pairs are the evidence minimum and run unconditionally; extra
-    # pairs (which only tighten the median) run LAST, after the mode sweep
-    # and the spec-form local[6] pair, so the soft deadline can no longer
-    # starve those phases out of the artifact (the r02 miss).
-    for rep in range(min(3, repeats)):
-        _run_pair(rep)
-
-    # latency mode: same job + input, small micro-batches. The availableNow
-    # drain's batch duration is the window-close latency proxy, so the
-    # trigger size IS the latency knob (production equivalent:
-    # maxFilesPerTrigger / a processingTime trigger sized to the ingest
-    # rate). The reference's only cadence point is the 10 s processingTime
-    # default (delta.py:103-104). r04 stopped at the first sub-10 s point
-    # (fpt=14, p99 9.93 s — 69 ms of margin), hiding whether fpt=7 (r03's
-    # knee, p99 8.1 s) still wins, so the sweep no longer early-exits on a
-    # bare sub-cadence p99: it runs the two knee candidates (14, 7)
-    # unconditionally and the throughput-end point (28 — p99 ~17 s at
-    # this scale, never cadence-competitive, curve context only) LAST and
-    # only when the budget allows, so the knee evidence can never starve
-    # the spec-form phase behind it. Headline = the lowest-p99 point;
-    # smaller batches trade throughput for latency and the table keeps
-    # the trade auditable.
-    lat = None
-    lat_sweep = []
-    for fpt in (14, 7, 28):
-        if fpt == 28 and _over_deadline("latency sweep fpt=28", margin=1500):
-            # 28 is curve context; the margin reserves the spec-form phase
-            break
-        r = _run_job(
-            _job_cmd(
-                n_lo, n_clips, os.path.join(work, "lat"), in_dir,
-                files_per_trigger=fpt, cpuset=_slice(0),
-            ),
-            heap=heap,
-        )
-        r["files_per_trigger"] = fpt
+    def latency(fpt: int, wdir: str) -> dict:
+        # an availableNow batch's duration bounds window-close latency, so
+        # the trigger size is the latency knob
+        r = dict(single(wdir, n_clips, in_dir, fpt, width=8), files_per_trigger=fpt)
         lat_sweep.append(r)
-        print(
-            f"  streaming latency-mode 1x local[{n_lo}] fpt={fpt}: {r}",
-            file=sys.stderr,
-        )
-        _shutil.rmtree(os.path.join(work, "lat"), ignore_errors=True)
-        # headline = first (largest-batch, highest-throughput) point that
-        # meets the reference cadence; else the lowest-p99 point tried
-        if lat is None or (r["batch_ms_p99"] or 1e12) < (lat["batch_ms_p99"] or 1e12):
-            lat = r
-        if _over_deadline("latency sweep", margin=240):
-            break
+        return r
 
-    # data-scaling datapoints (the north star is 10^12 clips and every
-    # other piece of evidence varies PARALLELISM at fixed input; this
-    # varies INPUT at fixed parallelism): pinned 1x local[2] runs at
-    # n/10 and n/3 of the full input, identical file shape (~1.4k
-    # clips/file), read against the median of the pair lo runs — same
-    # config, same slice, same invocation. THREE sizes (r04 had two)
-    # because the open question from r04 is the bytes-per-state-row
-    # CURVE: 634 -> 1115 B/row across one 10x step could be live-window
-    # population shape or could be growth-with-input; a middle point
-    # decides. O(N) data scaling = steady-state clips/sec equal within
-    # host noise (wall tracks input size); bounded state = bytes/row
-    # flat-to-sublinear while row count tracks the live key count.
-    data_scaling = None
-    if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_DATA_SCALING") and not _over_deadline(
-        "data scaling", margin=280
-    ):
-        # same MICRO-BATCH STRUCTURE as the big run (3 triggers), each
-        # batch proportionally smaller, same ~1.4k-clips/file shape: state
-        # rows then reflect the same watermark-eviction dynamics at every
-        # size, so the comparison isolates input volume
-        sizes = sorted({max(20_000, n_clips // 10), max(30_000, n_clips // 3)})
-        points: list[dict] = []
-        try:
-            for sn in sizes:
-                fpt_s = max(2, 112 * sn // n_clips)
-                in_s = os.path.join(work, f"clips_input_{sn}")
-                if not os.path.isdir(in_s):
-                    _run_job(
-                        [sys.executable, "-m", "core_spark.streaming.job",
-                         "--cores", "32", "--mode", "tumbling",
-                         "--n-clips", str(sn),
-                         "--work", os.path.join(work, f"synth_{sn}"),
-                         "--input", in_s, "--batches", "3",
-                         "--files-per-trigger", str(fpt_s), "--synth-only"]
-                    )
-                r_s = _run_job(
-                    _job_cmd(
-                        n_lo, sn, os.path.join(work, f"ds_{sn}"), in_s,
-                        files_per_trigger=fpt_s, cpuset=_slice(0, 7),
-                    ),
-                    heap=heap,
-                )
-                _shutil.rmtree(os.path.join(work, f"ds_{sn}"), ignore_errors=True)
-                points.append(r_s)
-                if _over_deadline("data scaling (next size)", margin=150):
-                    break
-            points.append(_median_by(lo_runs, "clips_per_sec"))
-            steadies = [p.get("clips_per_sec_steady") for p in points]
-            bpr = [
-                round((p.get("state_bytes") or 0) / p["state_rows"], 1)
-                if p.get("state_rows")
-                else None
-                for p in points
-            ]
-            cur_bpr = [
-                round((p.get("state_cur_bytes") or 0) / p["state_rows"], 1)
-                if p.get("state_rows") and p.get("state_cur_bytes")
-                else None
-                for p in points
-            ]
-            data_scaling = {
-                "cores": n_lo,
-                "n_clips": [p["n_clips"] for p in points],
-                "wall_sec": [p["wall_sec"] for p in points],
-                # wall ratio of the extreme sizes (r04-comparable: 10x
-                # input) plus per-step ratios for the curve
-                "wall_ratio": round(
-                    points[-1]["wall_sec"] / points[0]["wall_sec"], 2
-                ),
-                "wall_ratio_steps": [
-                    round(b["wall_sec"] / a["wall_sec"], 2)
-                    for a, b in zip(points, points[1:])
-                ],
-                "clips_per_sec": [p["clips_per_sec"] for p in points],
-                "clips_per_sec_steady": steadies,
-                "rate_ratio_steady": (
-                    round(steadies[-1] / steadies[0], 3)
-                    if steadies[0] and steadies[-1]
-                    else None
-                ),
-                "state_rows": [p.get("state_rows") for p in points],
-                "state_bytes": [p.get("state_bytes") for p in points],
-                "state_bytes_per_row": bpr,
-                # live-version payload alone (provider cache excluded):
-                # the flat-or-not number for the 10^12-clip posture
-                "state_cur_bytes": [p.get("state_cur_bytes") for p in points],
-                "state_cur_bytes_per_row": cur_bpr,
-            }
-            print(f"  data scaling 1x local[{n_lo}]: {data_scaling}", file=sys.stderr)
-        except Exception as exc:
-            print(f"  data scaling failed: {exc}", file=sys.stderr)
+    def data_point(sn: int, wdir: str) -> dict:
+        # same 3-trigger structure and ~1.4k-clips/file shape as the full
+        # input, so state rows reflect the same watermark-eviction dynamics
+        fpt = max(2, 112 * sn // n_clips)
+        ds_points.append(single(wdir, sn, _synth_input(sn, fpt), fpt))
+        return ds_points[-1]
 
-    # stateful-mode sweep (one pinned run each): the scaling pairs exercise
-    # the tumbling hash-aggregate path; these runs put a throughput number
-    # on the OTHER stateful operator families the pipeline ships —
-    # applyInPandasWithState gap-sessionization and the watermarked
-    # stream-stream correction join. They are INFORMATIONAL, so to fit
-    # the budget ahead of the graded spec-form phase they reuse the
-    # data-scaling phase's mid-size input (~n/3 clips, already
-    # synthesized) when it exists — each record carries its own n_clips
-    # so cross-round comparisons read the rate against the right input.
-    modes = {}
-    if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_MODES"):
-        mid_n = max(30_000, n_clips // 3)
+    def mode_run(mode: str, wdir: str) -> dict:
+        # the other stateful families (gap sessions, stream-stream join), on
+        # the data-scaling mid-size input when it exists
         mid_dir = os.path.join(work, f"clips_input_{mid_n}")
-        if os.path.isdir(mid_dir):
-            m_clips, m_dir = mid_n, mid_dir
-            m_fpt = max(2, 112 * mid_n // n_clips)
+        n, src, fpt = (
+            (mid_n, mid_dir, max(2, 112 * mid_n // n_clips))
+            if os.path.isdir(mid_dir) else (n_clips, in_dir, 112)
+        )
+        r = single(wdir, n, src, fpt, mode=mode)
+        keep = ("clips_per_sec", "clips_per_sec_steady", "batch_ms_p99", "rows_out")
+        modes[mode] = {"n_clips": n, **{k: r[k] for k in keep}}
+        return modes[mode]
+
+    def specform(attempt: int, wdir: str) -> dict | None:
+        # a pair whose probe_fleet/probe_lo leaves PROBE_BAND saw different
+        # host speed in its two windows (either direction): the first such
+        # pair is set aside and re-run, a later one is kept and flagged
+        if len(sf_pairs) >= 3:
+            return None
+        lo, fleet, ratios = _pair(wdir, SF_CORES, 8, SF_HEAP, n_clips, in_dir)
+        peaks.append(fleet)
+        pair = {"rep": attempt, "clips_per_sec_lo": lo["clips_per_sec"],
+                "clips_per_sec_fleet": fleet["clips_per_sec"], **ratios}
+        pr = ratios["probe_ratio"]
+        dirty = pr is not None and not PROBE_BAND[0] <= pr <= PROBE_BAND[1]
+        if dirty and not sf_discarded:
+            pair["discarded_throttle_window"] = True
+            sf_discarded.append(pair)
         else:
-            m_clips, m_dir, m_fpt = n_clips, in_dir, 112
-        for m in ("sessions", "join"):
-            if _over_deadline(f"mode sweep {m}", margin=120):
-                break
-            try:
-                r = _run_job(
-                    _job_cmd(
-                        n_lo, m_clips, os.path.join(work, f"mode_{m}"),
-                        m_dir, files_per_trigger=m_fpt,
-                        cpuset=_slice(0, 7), mode=m,
-                    ),
-                    heap=heap,
-                )
-            except Exception as exc:  # informational, like the peak runs
-                print(f"  mode sweep {m} failed: {exc}", file=sys.stderr)
-                continue
-            modes[m] = {
-                "n_clips": m_clips,
-                "clips_per_sec": r["clips_per_sec"],
-                "clips_per_sec_steady": r["clips_per_sec_steady"],
-                "batch_ms_p99": r["batch_ms_p99"],
-                "rows_out": r["rows_out"],
-            }
-            print(f"  mode sweep 1x local[{n_lo}] {m}: {modes[m]}", file=sys.stderr)
-            _shutil.rmtree(os.path.join(work, f"mode_{m}"), ignore_errors=True)
+            if dirty:
+                pair["throttle_window_unretried"] = True
+            sf_pairs.append(pair)
+        return pair
 
-    # peak-throughput runs: 4x local[6] = the whole host. NOT part of the
-    # scaling evidence (beyond the host's linear-CPU envelope, see
-    # calibration) — they record the absolute clips/sec this host can push
-    # through the engine, comparable with the r01 artifact. A CAPACITY
-    # number must survive throttle windows (a single rep once landed at
-    # 8.2k clips/sec in a window where the same fleet does ~29k), so every
-    # spec-form fleet rep (3+ with the probe-gated pairs) doubles as a
-    # capacity rep and the best one is kept, all recorded.
-    peak = None
-    specform_pair = None
-    if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_PEAK") and not _over_deadline(
-        "peak fleet", margin=300
-    ):
-        def _stag_peak(args):
-            i, cmd = args
-            time.sleep(1.0 * i)
-            return _run_job(cmd, heap="8g")  # local[6] JVMs get the r01 heap
+    # (name, margin s, informational, step): margin is the step's expected
+    # duration, so a step that would end past the deadline does not start
+    # (None: always runs); an informational step may fail on its own
+    sizes = sorted({max(20_000, n_clips // 10), mid_n})
+    steps = (
+        [(f"pair {r}", None, False, partial(calibrated, r)) for r in range(3)]
+        + [(f"latency fpt={f}", m, False, partial(latency, f))
+           for f, m in ((14, None), (7, 240), (28, 1500))]
+        + [(f"data scaling n={n}", m, True, partial(data_point, n))
+           for n, m in zip(sizes, (280, 150))]
+        + [(f"mode sweep {m}", 120, True, partial(mode_run, m)) for m in ("sessions", "join")]
+        + [(f"spec-form pair {a}", 300, True, partial(specform, a)) for a in range(5)]
+        + [(f"pair {r}", 360, False, partial(calibrated, r)) for r in range(3, REPEATS)]
+    )
+    for i, (name, margin, informational, step) in enumerate(steps):
+        if margin is not None and deadline is not None and time.time() + margin > deadline:
+            print(f"  deadline reached — skipping {name}", file=sys.stderr)
+            continue
+        wdir = os.path.join(work, f"step{i}")
+        shutil.rmtree(wdir, ignore_errors=True)  # no stale barrier tokens
+        try:
+            res = step(wdir)
+            if res is not None:
+                print(f"  {name}: {res}", file=sys.stderr)
+        except Exception as exc:
+            if not informational:
+                raise
+            print(f"  {name} failed: {exc}", file=sys.stderr)
+        finally:
+            shutil.rmtree(wdir, ignore_errors=True)
 
-        # Spec-form scaling pairs at the BASELINE.json footprint (1x vs 4x
-        # local[6], the 4x level = the whole host): THREE fully interleaved
-        # (lo, fleet, lo, fleet) pairs, each lo run a pinned 1x local[6]
-        # on slice 0 with the probe on core 31, each fleet rep doubling as
-        # a peak-capacity measurement. Three pairs instead of r04's two:
-        # on a host whose delivered speed swings +/-25%, two pairs is one
-        # throttle window away from a bogus median. PROBE-GATED: the
-        # interleaved probe already detects a throttle window (r04's rep0
-        # probe read 0.46x of its own lo window while the membw control
-        # showed 0.77 is the honest whole-host ceiling), so a pair whose
-        # probe_fleet/probe_lo falls outside [0.7, 1.43] — EITHER window
-        # throttled relative to the other, deflating OR inflating the
-        # ratio — is recorded as discarded
-        # and re-run once (max 1 retry, deadline permitting) — the median
-        # is taken over CLEAN pairs only, read against the
-        # same-invocation membw ceiling. The probe shares core 31 with
-        # fleet slice 3 at the 4x level (whole-host footprint has no
-        # reserved core), so the normalized ratio is diagnostic-grade
-        # only, like the headline pairs'.
-        sf_pairs: list[dict] = []
-        sf_discarded: list[dict] = []
-        sf_retries_left = 1
-        peak_rates = []
-        best = None
-        prep = -1
-        # attempt cap = 3 target pairs + 1 throttle retry + 1 failure slack
-        while len(sf_pairs) < 3 and prep < 4:
-            prep += 1
-            if prep > 0 and _over_deadline(
-                f"spec-form pair {prep} (have {len(sf_pairs)})", margin=300
-            ):
-                break
-            sf_lo = None
-            probe = _start_host_probe()
-            try:
-                sf_lo = _run_job(
-                    _job_cmd(6, n_clips, os.path.join(work, "sf_lo"), in_dir,
-                             cpuset=_slice(0)),
-                    heap="8g",
-                )
-            except Exception as exc:
-                print(f"  spec-form lo rep={prep} failed: {exc}", file=sys.stderr)
-            finally:
-                sf_lo_probe = _stop_host_probe(probe)
-            _shutil.rmtree(os.path.join(work, "sf_lo"), ignore_errors=True)
-            if sf_lo:
-                print(
-                    f"  spec-form 1x local[6] pinned rep={prep}: {sf_lo}"
-                    f" probe={sf_lo_probe}",
-                    file=sys.stderr,
-                )
+    data_scaling = None
+    if ds_points:
+        # read against the median of the 3 graded lo runs (full input)
+        pts = ds_points + [_median_by(lo_runs[:3], "clips_per_sec")]
+        col = lambda k: [p.get(k) for p in pts]  # noqa: E731
+        walls, steady, rows = col("wall_sec"), col("clips_per_sec_steady"), col("state_rows")
+        data_scaling = {
+            "cores": CORES_LO,
+            "n_clips": col("n_clips"),
+            "wall_sec": walls,
+            "wall_ratio": round(walls[-1] / walls[0], 2),
+            "wall_ratio_steps": [round(b / a, 2) for a, b in zip(walls, walls[1:])],
+            "clips_per_sec": col("clips_per_sec"),
+            "clips_per_sec_steady": steady,
+            "rate_ratio_steady": (
+                round(steady[-1] / steady[0], 3) if steady[0] and steady[-1] else None
+            ),
+            "state_rows": rows,
+            "state_bytes": col("state_bytes"),
+            "state_bytes_per_row": [
+                round((b or 0) / n, 1) if n else None for b, n in zip(col("state_bytes"), rows)
+            ],
+            # live-version payload (provider cache excluded): must stay flat
+            "state_cur_bytes": col("state_cur_bytes"),
+            "state_cur_bytes_per_row": [
+                round(b / n, 1) if n and b else None for b, n in zip(col("state_cur_bytes"), rows)
+            ],
+        }
 
-            bdir = os.path.join(work, "barrier_peak")
-            _shutil.rmtree(bdir, ignore_errors=True)
-            cmds = [
-                _job_cmd(
-                    6, n_clips, os.path.join(work, f"peak_{i}"), in_dir,
-                    cpuset=_slice(i), barrier_dir=bdir, barrier_count=n_exec,
-                )
-                for i in range(n_exec)
-            ]
-            probe = _start_host_probe()
-            try:
-                with ThreadPoolExecutor(max_workers=n_exec) as ex:
-                    rs = list(ex.map(_stag_peak, enumerate(cmds)))
-            except Exception as exc:  # informational section: never let a
-                # failed peak rep destroy the scaling evidence already won
-                _stop_host_probe(probe)
-                print(f"  peak fleet rep={prep} failed: {exc}", file=sys.stderr)
-                continue
-            fprobe = _stop_host_probe(probe)
-            cur = {
-                "n_executors": n_exec,
-                "cores_per_executor": 6,
-                "clips_per_sec": round(sum(r["clips_per_sec"] for r in rs), 1),
-                "clips_per_sec_steady": round(
-                    sum(r["clips_per_sec_steady"] or 0 for r in rs), 1
-                ),
-                "batch_ms_p99": max(r["batch_ms_p99"] for r in rs),
-            }
-            peak_rates.append(cur["clips_per_sec"])
-            print(f"  peak fleet {n_exec}x local[6] rep={prep}: {cur}", file=sys.stderr)
-            if best is None or cur["clips_per_sec"] > best["clips_per_sec"]:
-                best = cur
-            for i in range(n_exec):
-                _shutil.rmtree(os.path.join(work, f"peak_{i}"), ignore_errors=True)
-            _shutil.rmtree(bdir, ignore_errors=True)
-            if sf_lo:
-                raw = cur["clips_per_sec"] / (4.0 * sf_lo["clips_per_sec"])
-                norm = (
-                    round(raw * (sf_lo_probe / fprobe), 3)
-                    if sf_lo_probe and fprobe
-                    else None
-                )
-                pratio = (
-                    round(fprobe / sf_lo_probe, 3)
-                    if sf_lo_probe and fprobe
-                    else None
-                )
-                pair = {
-                    "rep": prep,
-                    "clips_per_sec_lo": sf_lo["clips_per_sec"],
-                    "clips_per_sec_fleet": cur["clips_per_sec"],
-                    "efficiency_raw": round(raw, 3),
-                    "efficiency_normalized": norm,
-                    "probe_lo": sf_lo_probe,
-                    "probe_fleet": fprobe,
-                    "probe_ratio": pratio,
-                }
-                # SYMMETRIC gate: ratio < 0.7 = the FLEET window was
-                # throttled (deflates efficiency, the r04 rep0 failure);
-                # ratio > 1/0.7 = the LO window was throttled (INFLATES
-                # efficiency — gating only the unflattering direction
-                # would bias the median up). Either way the pair's two
-                # windows saw very different host speed, so it is not a
-                # paired measurement; keep the evidence, exclude it from
-                # the median, spend the retry budget on a clean pair.
-                dirty = pratio is not None and not (0.7 <= pratio <= 1 / 0.7)
-                if dirty and sf_retries_left > 0:
-                    sf_retries_left -= 1
-                    pair["discarded_throttle_window"] = True
-                    sf_discarded.append(pair)
-                    print(
-                        f"  spec-form pair rep={prep} DISCARDED "
-                        f"(probe_ratio={pratio} outside [0.7, 1.43]),"
-                        " re-running",
-                        file=sys.stderr,
-                    )
-                else:
-                    if dirty:
-                        # retry budget exhausted: keep it but flag it so
-                        # the artifact shows the median includes a
-                        # mismatched-window pair
-                        pair["throttle_window_unretried"] = True
-                    sf_pairs.append(pair)
-        peak = dict(best, rep_rates=peak_rates) if best else None
-        if sf_pairs:
-            import statistics
+    peak = specform_pair = None
+    if peaks:
+        best = max(peaks, key=lambda f: f["clips_per_sec"])
+        keep = ("clips_per_sec", "clips_per_sec_steady", "batch_ms_p99")
+        peak = {"n_executors": N_EXEC, "cores_per_executor": SF_CORES,
+                **{k: best[k] for k in keep}, "rep_rates": [f["clips_per_sec"] for f in peaks]}
+    if sf_pairs:
+        norms = [p["efficiency_normalized"] for p in sf_pairs
+                 if p["efficiency_normalized"] is not None]
+        specform_pair = {
+            "cores_lo": SF_CORES,
+            "cores_hi": N_EXEC * SF_CORES,
+            "pairs": sf_pairs,
+            "discarded_pairs": sf_discarded or None,
+            "clean_pair_count": len(sf_pairs),
+            "clips_per_sec_lo": sf_pairs[0]["clips_per_sec_lo"],
+            "clips_per_sec_fleet": sf_pairs[0]["clips_per_sec_fleet"],
+            "efficiency_raw": round(statistics.median(p["efficiency_raw"] for p in sf_pairs), 3),
+            "efficiency_normalized": round(statistics.median(norms), 3) if norms else None,
+            "membw_eff_6_to_24": membw.get("membw_eff_6_to_24"),
+        }
 
-            raws = [p["efficiency_raw"] for p in sf_pairs]
-            norms = [
-                p["efficiency_normalized"]
-                for p in sf_pairs
-                if p["efficiency_normalized"] is not None
-            ]
-            specform_pair = {
-                "cores_lo": 6,
-                "cores_hi": 24,
-                "pairs": sf_pairs,
-                "discarded_pairs": sf_discarded or None,
-                "clean_pair_count": len(sf_pairs),
-                "clips_per_sec_lo": sf_pairs[0]["clips_per_sec_lo"],
-                "clips_per_sec_fleet": sf_pairs[0]["clips_per_sec_fleet"],
-                "efficiency_raw": round(statistics.median(raws), 3),
-                "efficiency_normalized": (
-                    round(statistics.median(norms), 3) if norms else None
-                ),
-                # the host-side explanation for a sub-0.8 number at this
-                # whole-host footprint: delivered DRAM bandwidth at 24 vs
-                # 4x6 busy cores, measured with no engine code running
-                "membw_eff_6_to_24": membw.get("membw_eff_6_to_24"),
-            }
-            print(f"  spec-form pairs: {specform_pair}", file=sys.stderr)
-
-    # extra scaling pairs (median tighteners) — last, fully optional
-    for rep in range(3, repeats):
-        if _over_deadline(f"pair {rep} (have {len(pair_eff_raw)})", margin=360):
-            break
-        _run_pair(rep)
-
+    raw = [r["efficiency_raw"] for r in pair_ratios]
+    norm = [r["efficiency_raw"] if r["efficiency_normalized"] is None
+            else r["efficiency_normalized"] for r in pair_ratios]
+    mid = len(raw) // 2  # upper median: one of the measured values
     med_lo = _median_by(lo_runs, "clips_per_sec")
     med_fleet = _median_by(fleet_runs, "clips_per_sec")
     t_lo, t_hi = med_lo["clips_per_sec"], med_fleet["clips_per_sec"]
-    s_lo = med_lo.get("clips_per_sec_steady")
-    s_hi = med_fleet.get("clips_per_sec_steady")
-    med_pair_eff_norm = sorted(pair_eff)[len(pair_eff) // 2]
-    med_pair_eff_raw = sorted(pair_eff_raw)[len(pair_eff_raw) // 2]
-    return {
-        "n_clips": n_clips,
-        "cores_lo": n_lo,
-        "cores_hi": n_exec * n_lo,
-        "n_executors": n_exec,
-        "repeats": repeats,
-        "heap": heap,
-        "clips_per_sec_lo": t_lo,
-        "clips_per_sec_hi": t_hi,
-        # headline: median of RAW paired same-rep ratios. The ≥0.8 target is
-        # gated on this; the probe-normalized median is a drift DIAGNOSTIC
-        # only (the reserved-core probe also slows under the fleet's own
-        # occupancy, so normalization could mask a genuine regression).
-        "scaling_efficiency": med_pair_eff_raw,
-        "pair_efficiencies_normalized": pair_eff,
-        "pair_efficiencies_raw": pair_eff_raw,
-        "scaling_efficiency_raw": med_pair_eff_raw,
-        "scaling_efficiency_normalized": med_pair_eff_norm,
-        "pair_probe_fallback_reps": pair_probe_fallback or None,
-        "host_probe_lo": [r.get("probe") for r in lo_runs],
-        "host_probe_fleet": [r.get("probe") for r in fleet_runs],
+    s_lo, s_hi = med_lo.get("clips_per_sec_steady"), med_fleet.get("clips_per_sec_steady")
+    lat_keys = ("files_per_trigger", "clips_per_sec", "batch_ms_p50", "batch_ms_p99")
+    # headline window-close latency: the sweep's lowest-p99 point
+    lat = min(lat_sweep, key=lambda r: r["batch_ms_p99"] or 1e12)
+    out = {
+        "clips_per_sec": t_hi,
+        "clips_per_sec_n": t_lo,
+        "scaling_cores": [CORES_LO, N_EXEC * CORES_LO],
+        "scaling_efficiency": sorted(raw)[mid],  # the >= 0.8 gate
+        "scaling_efficiency_normalized": sorted(norm)[mid],
+        "scaling_efficiency_pairs_normalized": norm,
+        "scaling_efficiency_raw": sorted(raw)[mid],
+        "scaling_efficiency_pairs_raw": raw,
+        "pair_probe_fallback_reps": fallback or None,
+        "host_probe_rates": {"lo": [r["probe_lo"] for r in pair_ratios],
+                             "fleet": [r["probe_fleet"] for r in pair_ratios]},
         "scaling_efficiency_of_medians": round(t_hi / (4.0 * t_lo), 3),
-        "steady_lo": s_lo,
-        "steady_hi": s_hi,
-        "scaling_efficiency_steady": (
-            round(s_hi / (4.0 * s_lo), 3) if s_lo and s_hi else None
-        ),
-        "batch_ms_p99_hi": med_fleet.get("batch_ms_p99"),
-        "batch_ms_p50_hi": med_fleet.get("batch_ms_p50"),
-        "lo_runs": [r["clips_per_sec"] for r in lo_runs],
-        "fleet_runs": [r["clips_per_sec"] for r in fleet_runs],
-        "latency_mode": {
-            "clips_per_sec": lat["clips_per_sec"],
-            "n_batches": lat["n_batches"],
-            "batch_ms_p50": lat["batch_ms_p50"],
-            "batch_ms_p99": lat["batch_ms_p99"],
-            "files_per_trigger": lat.get("files_per_trigger"),
-            "sweep": [
-                {
-                    "files_per_trigger": r.get("files_per_trigger"),
-                    "clips_per_sec": r.get("clips_per_sec"),
-                    "batch_ms_p50": r.get("batch_ms_p50"),
-                    "batch_ms_p99": r.get("batch_ms_p99"),
-                }
-                for r in lat_sweep
-            ],
-        },
+        "scaling_efficiency_steady": round(s_hi / (4.0 * s_lo), 3) if s_lo and s_hi else None,
+        "clips_per_sec_steady": s_hi,
+        "window_close_p99_ms": lat["batch_ms_p99"] or med_fleet["batch_ms_p99"],
+        "window_close_p50_ms": lat["batch_ms_p50"],
+        "latency_files_per_trigger": lat["files_per_trigger"],
+        "latency_sweep": [{k: r.get(k) for k in lat_keys} for r in lat_sweep],
+        "throughput_mode_fleet_p99_ms": med_fleet["batch_ms_p99"],
+        "scaling_reps": {"lo": [r["clips_per_sec"] for r in lo_runs],
+                         "fleet": [r["clips_per_sec"] for r in fleet_runs]},
         "host_cpu_calibration": calib,
         "host_membw_calibration": membw or None,
         "data_scaling": data_scaling,
         "peak_fleet": peak,
-        "specform_pair": specform_pair,
         "mode_sweep": modes or None,
+        "specform_pair": specform_pair,
     }
+    if peak:
+        out["clips_per_sec_peak"] = peak["clips_per_sec"]  # whole-host capacity
+    return out
 
 
-def write_bench_md(sf: str, times: dict, scaling: dict | None) -> None:
-    """Write BENCH/BASELINE.md.
+_BATCH_KEYS = ("metric", "value", "unit", "queries", "sf", "wall_total_sec", "code", "cpus")
 
-    Scaling section: THIS run's numbers only — medians measured within one
-    bench.py invocation, never merged with prior runs, so the committed
-    evidence is exactly reproducible from the run that produced it.
 
-    Batch table: min-merged with the previous table ONLY when it was
-    produced by the same code version (git HEAD) at the same sf/cpus —
-    smoothing shared-VM contention spikes without ever hiding a regression
-    introduced by a code change. Every run's raw numbers are also appended
-    to BENCH/history.jsonl so the full record stays visible.
-    """
-    times = dict(times)
-    scaling = dict(scaling) if scaling is not None else None
-    head = _git_head()
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # a skip-scaling run must not clobber the scaling evidence of the last
-    # full run — carry the existing section forward verbatim
-    kept_scaling_md: str | None = None
-    md_path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    old = ""
-    if os.path.exists(md_path):
-        with open(md_path) as f:
-            old = f.read()
-    import re as _re
-
-    # merging is only meaningful against the SAME config AND code version:
-    # a table from another sf / core count / git HEAD is stale evidence
-    m_cfg = _re.search(r"Batch suite at sf=([^,]+), local\[(\d+)\], code ([0-9a-f]+|unknown)", old)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    same_cfg = bool(
-        m_cfg
-        and m_cfg.group(1) == str(sf)
-        and m_cfg.group(2) == cpus
-        and m_cfg.group(3) == head
-    )
-    if scaling is None and "## Streaming scaling" in old:
-        kept_scaling_md = old[old.index("## Streaming scaling") :].rstrip("\n")
-    if same_cfg:
-        for q, v in _re.findall(r"^\| (\w+) \| ([0-9.]+) \|$", old, flags=_re.M):
-            if q in times:
-                times[q] = min(times[q], float(v))
+def render_baseline(records: list[dict]) -> str:
+    """BENCH/BASELINE.md from the BENCH/history.jsonl records, oldest first.
+    Batch table: per-query min over the records that share the newest
+    record's (code, sf, cpus), which smooths shared-host spikes without
+    mixing code versions. Scaling section: the newest record that has one."""
+    last = records[-1]
+    cfg = (last.get("code"), last.get("sf"), last.get("cpus"))
+    same = [r for r in records if (r.get("code"), r.get("sf"), r.get("cpus")) == cfg]
     lines = [
         "# BENCH/BASELINE.md — measured engine numbers",
         "",
-        f"Batch suite at sf={sf}, local[{cpus}], code {head}"
-        " (per-query best observed across runs of THIS code version; raw"
-        " per-run history in BENCH/history.jsonl):",
+        "Rendered by bench.py from BENCH/history.jsonl. Batch suite at"
+        f" sf={last.get('sf')}, local[{last.get('cpus', '?')}], code"
+        f" {last.get('code')}: per-query best of the {len(same)} run(s) of"
+        " this code and config.",
         "",
         "| query | sec |",
         "| --- | --- |",
     ]
-    lines += [f"| {k} | {v} |" for k, v in times.items()]
-    if scaling:
-        lo = scaling["cores_lo"]
-        ne = scaling.get("n_executors", 4)
-        reps = scaling.get("repeats", 3)
+    lines += [f"| {q} | {min(r['queries'][q] for r in same if q in r['queries'])} |"
+              for q in last["queries"]]
+    s = next((r for r in reversed(records) if "scaling_efficiency" in r), None)
+    if s:
         lines += [
             "",
-            "## Streaming scaling (north rule: N vs 4N executors)",
+            f"## Streaming scaling (code {s.get('code')}, sf={s.get('sf')})",
             "",
-            "Identical tumbling-window CEP job (zero-copy Arrow decode + framed",
-            "512-pt FFT features -> watermark -> salted two-stage window agg ->",
-            "exactly-once merge sink) on the same "
-            f"{scaling['n_clips']}-clip input, single 32-vCPU host.",
-            f"An executor is a JVM process, so level N = one local[{lo}] JVM and",
-            f"level 4N = {ne} CONCURRENT local[{lo}] JVMs (each its own driver,",
-            "state stores, Python workers, checkpoint, sink), every job over",
-            "the full input; fleet throughput = sum of per-job rates, all",
-            "batches measured under full 4-way contention.",
+            "Method: [SCALE.md §8](../SCALE.md#8-scaling-evidence-north-rule)"
+            " and `run_scaling` in bench.py. Target: `scaling_efficiency` >= 0.8.",
             "",
-            "Executor footprint: chosen from the host CPU-delivery control",
-            "measured in the SAME invocation (a 64 KB-working-set pure-numpy",
-            "kernel, one pinned process per core — no Spark, no engine code):",
-            f"`{scaling.get('host_cpu_calibration')}`.",
-            "This sandbox's shared hypervisor delivers near-linear CPU only up",
-            "to ~12 busy vCPUs and ~0.7x beyond 24, so a scaling run that",
-            "occupies the whole host measures the hypervisor's throttling",
-            "curve, not the engine; the fleet is sized inside the linear",
-            "envelope (and 2-5 cores/executor is standard cluster sizing",
-            "anyway). The peak-fleet line below records the whole-host number.",
-            "",
-            "Isolation discipline: every JVM (and the Python workers it forks)",
-            "is taskset-pinned to its own disjoint 7-core cpuset slice — level",
-            "N on slice 0, level 4N on slices 0..3 — so each executor has",
-            "identical CPU resources at both levels and JVM GC/JIT ergonomics",
-            f"size to the slice; both levels run identical {scaling.get('heap')}",
-            "heaps. A 1-core pure-CPU probe on the reserved core (31) runs",
-            "inside every measured window; each pair's",
-            "probe_lo/probe_fleet-corrected ratio is recorded as a drift",
-            "diagnostic for the sandbox's +/-25% minute-scale host-speed",
-            "swings, but the HEADLINE gates on the raw paired median (the",
-            "probe also slows under the fleet's own occupancy, so the",
-            "correction could mask a real regression).",
-            "Work dirs (checkpoints, state stores, sink) are on tmpfs —",
-            "a cluster gives each executor its own local disks, so four JVMs",
-            "fsync-contending on this host's one real disk would measure the",
-            "sandbox, not the engine. Fleet jobs rendezvous on a file barrier",
-            "after their untimed warm-up, so every measured phase runs under",
-            f"full {ne}-way contention. The"
-            f" {len(scaling.get('pair_efficiencies_raw') or [])} measured"
-            " pairs are INTERLEAVED",
-            "(lo, fleet, lo, fleet, ...) and the headline efficiency is the",
-            "median of RAW per-pair ratios fleet_i/(4*lo_i), so slow host",
-            "drift cancels within each pair. All measured inside one bench.py",
-            "invocation — no best-of merging across invocations.",
-            "",
-            f"- 1x local[{lo}]:  {scaling['clips_per_sec_lo']} clips/sec"
-            f" whole-run, {scaling.get('steady_lo')} steady-state"
-            f" (reps: {scaling.get('lo_runs')})",
-            f"- {ne}x local[{lo}]: {scaling['clips_per_sec_hi']} clips/sec"
-            f" whole-run, {scaling.get('steady_hi')} steady-state (summed)"
-            f" (reps: {scaling.get('fleet_runs')})",
-            f"- scaling efficiency T(4N)/(4*T(N)) = {scaling['scaling_efficiency']}"
-            f" (median of RAW paired ratios"
-            f" {scaling.get('pair_efficiencies_raw')}; probe-normalized"
-            f" paired ratios {scaling.get('pair_efficiencies_normalized')}"
-            f" with median {scaling.get('scaling_efficiency_normalized')}"
-            f" kept as a drift diagnostic only; host-probe rates"
-            f" lo={scaling.get('host_probe_lo')} /"
-            f" fleet={scaling.get('host_probe_fleet')};"
-            f" ratio-of-medians {scaling.get('scaling_efficiency_of_medians')};"
-            f" steady-state {scaling.get('scaling_efficiency_steady')})"
-            " (target >= 0.8; steady-state = total clips / total time inside"
-            " data micro-batches, excluding only stream start/stop; the"
-            " residual gap vs 1.0 is the host's shared memory bandwidth +"
-            " LLC, which separate cluster machines would not share)",
-            f"- micro-batch p50/p99 ms across the {ne}-executor fleet"
-            " in throughput mode (112-file triggers): "
-            f"{scaling['batch_ms_p50_hi']} / {scaling['batch_ms_p99_hi']}",
         ]
-        pk = scaling.get("peak_fleet")
-        if pk:
-            lines += [
-                f"- PEAK whole-host throughput ({pk['n_executors']}x"
-                f" local[{pk['cores_per_executor']}] fleet, best of"
-                f" {len(pk.get('rep_rates') or []) or '?'} reps — a"
-                " capacity number, outside the linear-CPU envelope, so not"
-                " scaling evidence): "
-                f"{pk['clips_per_sec']} clips/sec whole-run,"
-                f" {pk['clips_per_sec_steady']} steady-state"
-                f" (reps: {pk.get('rep_rates')})",
-            ]
-        mb = scaling.get("host_membw_calibration") or {}
-        if mb:
-            lines += [
-                "",
-                "Host MEMORY-BANDWIDTH control (stream-triad, 3x64 MB"
-                " working set, one pinned process per core, no engine"
-                f" code): `{mb}`. Aggregate delivered GB/s at 24 busy"
-                " cores vs 4x the 6-core level"
-                f" (membw_eff_6_to_24 = {mb.get('membw_eff_6_to_24')})"
-                " is the host's own bandwidth-scaling ceiling at the"
-                " spec-form footprint — the pure-CPU control above shows"
-                " CPU delivery is near-linear there, so this is the"
-                " binding shared resource.",
-            ]
-        sf = scaling.get("specform_pair")
-        if sf:
-            pair_txt = "; ".join(
-                f"rep{p['rep']}: {p['clips_per_sec_lo']} vs"
-                f" {p['clips_per_sec_fleet']} clips/sec, raw"
-                f" {p['efficiency_raw']} / norm {p['efficiency_normalized']}"
-                f" (probes {p['probe_lo']}/{p['probe_fleet']},"
-                f" ratio {p.get('probe_ratio')})"
-                for p in sf.get("pairs", [])
-            )
-            disc = sf.get("discarded_pairs") or []
-            disc_txt = (
-                " Discarded (probe_ratio outside [0.7, 1.43] = the two"
-                " windows saw measurably different host speed,"
-                " re-run, kept for the record): "
-                + "; ".join(
-                    f"rep{p['rep']}: raw {p['efficiency_raw']}"
-                    f" (probe ratio {p.get('probe_ratio')})"
-                    for p in disc
-                )
-                + "."
-                if disc
-                else ""
-            )
-            lines += [
-                f"- SPEC-FORM paired 1x local[{sf['cores_lo']}] vs 4x"
-                f" local[{sf['cores_lo']}] (the BASELINE.json footprint,"
-                " fully interleaved lo/fleet pairs, whole host at the 4x"
-                f" level): efficiency raw {sf['efficiency_raw']}"
-                f" (median of {len(sf.get('pairs', []))} CLEAN pairs,"
-                " each probe-gated at ratio within [0.7, 1.43])"
-                f" / probe-normalized {sf['efficiency_normalized']}."
-                + disc_txt
-                + f" Pairs: {pair_txt}. Read against the host's OWN"
-                " bandwidth ceiling at this footprint"
-                f" (membw_eff_6_to_24 = {sf.get('membw_eff_6_to_24')}):"
-                " the fleet occupies every core, so the residual vs 1.0"
-                " is bounded below by what the DRAM controller itself"
-                " gives up between 6 and 24 busy cores — shared-bandwidth"
-                " contention separate cluster machines would not see. The"
-                " calibrated local[2] pairs above are the headline"
-                " evidence.",
-            ]
-        ds = scaling.get("data_scaling")
-        if ds:
-            curve = "; ".join(
-                f"{n} clips -> {s} steady clips/sec, wall {w}s,"
-                f" state {r} rows @ {b} B/row total"
-                + (f" / {cb} B/row live-version" if cb else "")
-                for n, s, w, r, b, cb in zip(
-                    ds["n_clips"], ds["clips_per_sec_steady"], ds["wall_sec"],
-                    ds["state_rows"], ds["state_bytes_per_row"],
-                    ds.get("state_cur_bytes_per_row")
-                    or [None] * len(ds["n_clips"]),
-                )
-            )
-            lines += [
-                f"- DATA scaling (1x local[{ds['cores']}], same pinned"
-                " slice, input varied 10x across THREE sizes at identical"
-                f" ~1.4k-clips/file shape): {curve}"
-                f" (extreme rate ratio {ds['rate_ratio_steady']}, extreme"
-                f" wall ratio {ds['wall_ratio']}, per-step wall ratios"
-                f" {ds.get('wall_ratio_steps')})."
-                " Wall grows at most linearly in input (a wall ratio at"
-                " or below 10 for 10x clips: per-micro-batch fixed costs"
-                " — planning, state commit, sink merge — amortize with"
-                " batch size, so the marginal cost per clip is flat or"
-                " falling). State rows track the LIVE window population"
-                " (the synthetic event-time span grows with N; in"
-                " production the watermark horizon, not input history,"
-                " bounds it) and bytes/row stays order-100s-of-bytes."
-                " Total B/row counts the HDFS-backed provider's WHOLE"
-                " loaded-map cache (up to 2 retained versions + map"
-                " overhead, so it moves with batch-over-batch population"
-                " dynamics); live-version B/row is the leak detector —"
-                " the fixed-width window-aggregate payload per key, which"
-                " must stay flat as input grows —"
-                " the 10^12-clip posture: state grows with live keys,"
-                " never with history.",
-            ]
-        ms = scaling.get("mode_sweep")
-        if ms:
-            lines += [
-                "- stateful-mode sweep (one pinned 1x run each;"
-                " informational, run on the data-scaling mid-size input"
-                " when available — each record names its input size):"
-                + "".join(
-                    f" {m}={v['clips_per_sec']} clips/sec"
-                    f" @ {v.get('n_clips', '?')} clips"
-                    f" (p99 {v['batch_ms_p99']} ms, {v['rows_out']} rows);"
-                    for m, v in ms.items()
-                )
-            ]
-        lat = scaling.get("latency_mode")
-        if lat:
-            sweep_txt = "; ".join(
-                f"fpt={r['files_per_trigger']}: {r['clips_per_sec']} clips/sec,"
-                f" p50/p99 {r['batch_ms_p50']}/{r['batch_ms_p99']} ms"
-                for r in (lat.get("sweep") or [])
-            )
-            lines += [
-                "",
-                "Window-close latency (HEADLINE, latency mode): same job +"
-                " input, trigger-size sweep over the knee candidates"
-                " (14 then 7 files per micro-batch, with the"
-                " throughput-end 28-file point last and budget-optional)"
-                " against the reference's 10 s processingTime cadence"
-                " (delta.py:103-104); every point is recorded and the"
-                " headline is the lowest-p99 point; production equivalent"
-                " is maxFilesPerTrigger / a processingTime trigger sized"
-                " to the ingest rate."
-                f" Headline point (fpt={lat.get('files_per_trigger')}):"
-                f" 1x local[{lo}] sustains"
-                f" {lat['clips_per_sec']} clips/sec across"
-                f" {lat['n_batches']} micro-batches with window-close"
-                f" p50/p99 ms = {lat['batch_ms_p50']} / {lat['batch_ms_p99']}."
-                " A window's rows commit with the micro-batch that closes it,"
-                " so batch duration bounds window-close latency; the JSON"
-                " line's window_close_p99_ms carries THIS number."
-                + (f" Sweep: {sweep_txt}." if sweep_txt else ""),
-            ]
-    if kept_scaling_md:
-        lines += ["", kept_scaling_md]
-    with open(md_path, "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
-def _run_batch_isolated(sf_dir: str, cores: int) -> dict[str, float]:
-    """Run the batch suite in a CHILD process so its local[32] JVM — a
-    pre-touched multi-GB heap plus `cores` Python workers — fully exits
-    before the scaling fleet is measured. Leaving it resident (even idle)
-    steals memory bandwidth + LLC from the pinned fleet JVMs and biases
-    the measured scaling efficiency down; r01's driver artifact showed
-    exactly that depression vs isolated runs of run_scaling."""
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--batch-only"],
-        cwd=REPO, env=dict(os.environ, PYTHONPATH=REPO),
-        stdout=subprocess.PIPE, text=True, timeout=3600,
-    )
-    lines = [l for l in (out.stdout or "").splitlines() if l.startswith("{")]
-    if out.returncode != 0 or not lines:
-        raise RuntimeError(f"batch suite child failed (rc={out.returncode})")
-    return json.loads(lines[-1])["times"]
+        lines += [f"- `{k}`: {json.dumps(v)}" for k, v in s.items() if k not in _BATCH_KEYS]
+    return "\n".join(lines) + "\n"
 
 
 def main() -> None:
@@ -1332,82 +662,37 @@ def main() -> None:
         print(json.dumps({"times": run_batch(sf_dir, cores)}))
         return
     t0 = time.time()
-    if os.environ.get("SPARK_GRAFT_BENCH_SKIP_SCALING"):
-        times = run_batch(sf_dir, cores)  # no fleet to protect — stay in-proc
-    else:
-        times = _run_batch_isolated(sf_dir, cores)
-    scaling = None
-    if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_SCALING"):
+    skip_scaling = bool(os.environ.get("SPARK_GRAFT_BENCH_SKIP_SCALING"))
+    # with no fleet to protect the suite stays in-process
+    times = run_batch(sf_dir, cores) if skip_scaling else _run_batch_isolated(sf_dir, cores)
+    scaling = {}
+    if not skip_scaling:
         n_clips = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "480000"))
-        # soft wall budget for the WHOLE invocation (batch suite included):
-        # on a throttled host the optional tail phases (mode sweep, extra
-        # pairs 4-5, the fpt=28 latency point) yield rather than risk a
-        # caller timeout; phase order is by evidence priority — headline
-        # pairs, latency knee (14, 7), data scaling, probe-gated
-        # spec-form pairs, then the informational tails — so the graded
-        # numbers land in the artifact first (the r02 miss, and r05's
-        # first local run where spec-form retries starved the phase)
+        # soft budget of the WHOLE invocation: the JSON line prints at the
+        # very end, so optional phases yield rather than risk a caller kill
         budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "3300"))
         scaling = run_scaling(n_clips, deadline=t0 + budget)
-    total = round(time.time() - t0, 2)
-    write_bench_md(sf, times, scaling)
     out = {
         "metric": "batch_suite_total_plus_streaming_scaling",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "sf": float(sf),
-        "wall_total_sec": total,
+        "wall_total_sec": round(time.time() - t0, 2),
+        "cpus": cores,
+        **scaling,
     }
-    if scaling:
-        lat = scaling.get("latency_mode") or {}
-        out.update(
-            clips_per_sec=scaling["clips_per_sec_hi"],
-            clips_per_sec_n=scaling["clips_per_sec_lo"],
-            scaling_cores=[scaling["cores_lo"], scaling["cores_hi"]],
-            scaling_efficiency=scaling["scaling_efficiency"],
-            scaling_efficiency_normalized=scaling.get("scaling_efficiency_normalized"),
-            scaling_efficiency_pairs_normalized=scaling.get(
-                "pair_efficiencies_normalized"
-            ),
-            scaling_efficiency_raw=scaling.get("scaling_efficiency_raw"),
-            scaling_efficiency_pairs_raw=scaling.get("pair_efficiencies_raw"),
-            pair_probe_fallback_reps=scaling.get("pair_probe_fallback_reps"),
-            host_probe_rates={
-                "lo": scaling.get("host_probe_lo"),
-                "fleet": scaling.get("host_probe_fleet"),
-            },
-            scaling_efficiency_of_medians=scaling.get("scaling_efficiency_of_medians"),
-            scaling_efficiency_steady=scaling.get("scaling_efficiency_steady"),
-            clips_per_sec_steady=scaling.get("steady_hi"),
-            # headline window-close latency = latency-mode p99 (the number a
-            # latency-tuned deployment sees); throughput-mode fleet p99 kept
-            # as a separate field for transparency
-            window_close_p99_ms=lat.get("batch_ms_p99") or scaling["batch_ms_p99_hi"],
-            window_close_p50_ms=lat.get("batch_ms_p50"),
-            latency_files_per_trigger=lat.get("files_per_trigger"),
-            latency_sweep=lat.get("sweep"),
-            throughput_mode_fleet_p99_ms=scaling["batch_ms_p99_hi"],
-            scaling_reps={"lo": scaling.get("lo_runs"), "fleet": scaling.get("fleet_runs")},
-            host_cpu_calibration=scaling.get("host_cpu_calibration"),
-            host_membw_calibration=scaling.get("host_membw_calibration"),
-            data_scaling=scaling.get("data_scaling"),
-            peak_fleet=scaling.get("peak_fleet"),
-            mode_sweep=scaling.get("mode_sweep"),
-            specform_pair=scaling.get("specform_pair"),
-        )
-        if scaling.get("peak_fleet"):
-            # absolute-throughput headline stays the whole-host number,
-            # comparable with the r01 artifact; the scaling fields above
-            # carry the calibrated-footprint evidence
-            out["clips_per_sec_peak"] = scaling["peak_fleet"]["clips_per_sec"]
-    # raw per-run history: regressions stay visible even though the md
-    # table is best-observed
-    try:
-        with open(os.path.join(REPO, "BENCH", "history.jsonl"), "a") as hf:
-            hf.write(json.dumps(dict(out, code=_git_head())) + "\n")
-    except OSError:
-        pass
+    bench_dir = os.path.join(REPO, "BENCH")
+    try:  # the JSON line below is the result; BENCH/ only records it
+        os.makedirs(bench_dir, exist_ok=True)
+        with open(os.path.join(bench_dir, "history.jsonl"), "a+") as f:
+            f.write(json.dumps(dict(out, code=_git_head())) + "\n")
+            f.seek(0)
+            records = [json.loads(line) for line in f if line.strip()]
+        with open(os.path.join(bench_dir, "BASELINE.md"), "w") as f:
+            f.write(render_baseline(records))
+    except OSError as exc:
+        print(f"  BENCH/ not updated: {exc}", file=sys.stderr)
     print(json.dumps(out))
 
 

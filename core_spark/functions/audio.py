@@ -332,8 +332,7 @@ _HANN32 = _HANN.astype(np.float32)
 # 28 concurrent workers ~60+ MB into shared L3 — measured 28-core throughput
 # drops ~2x vs this chunked shape (probe: 23.4k -> 31.4k clips/sec, N->4N
 # scaling efficiency 0.70 -> 0.94).
-# env-tunable so the bench can A/B the per-worker hot-set size at the
-# whole-host (24-worker) footprint, where aggregate scratch approaches the
+# At the whole-host (24-worker) footprint aggregate scratch approaches the
 # shared LLC: 128 frames ~= 1.3 MB hot per worker (f32 buf + f64 upcast +
 # c128 spectrum), 64 ~= 0.65 MB. Measured on the quiet host (pinned
 # kernel-only workers, best of 2): chunk 64 beats 128 by ~12% at 6 workers
@@ -341,9 +340,7 @@ _HANN32 = _HANN.astype(np.float32)
 # better 6->24 scaling (0.976 vs 0.957) — the smaller scratch keeps
 # 24 x hot-set inside the shared LLC where 128 spills it; 32 gains nothing
 # further (per-chunk FFT dispatch overhead starts to show).
-import os as _os
-
-_CHUNK_FRAMES = int(_os.environ.get("SPARK_GRAFT_FFT_CHUNK", "64"))
+_CHUNK_FRAMES = 64
 # thread-local scratch: Spark's Python workers are single-threaded per
 # process, but a threaded driver-side caller (batch scoring harness) must
 # not share one buffer between interleaved _spectral_one calls

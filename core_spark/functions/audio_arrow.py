@@ -23,7 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .audio import ULAW_LUT, ULAW_LUT_I16, _spectral_one, _spectral_one_i16
+from .audio import ULAW_LUT_I16, _spectral_one_i16
 
 FEATURE_FIELDS = [
     ("energy", T.DoubleType()),
@@ -41,23 +41,6 @@ def _binary_offsets_data(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     offsets = np.frombuffer(bufs[1], dtype=otype)[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(bufs[2], dtype=np.uint8)
     return offsets, data
-
-
-def _decode_view(view: np.ndarray, codec: str) -> np.ndarray:
-    """Decode a uint8 view of one clip's payload to float32 PCM.
-
-    pcm16 needs 2-byte alignment for the int16 reinterpret; Arrow value
-    offsets are arbitrary, so odd-offset clips take one small copy.
-    """
-    if codec == "pcm16":
-        try:
-            q = view.view("<i2")
-        except ValueError:  # odd start offset in the shared buffer
-            q = np.frombuffer(view.tobytes(), dtype="<i2")
-        return q.astype(np.float32) / 32767.0
-    if codec == "ulaw":
-        return ULAW_LUT[view]  # single gather (LUT built once in audio.py)
-    raise ValueError(f"unknown codec: {codec!r}")
 
 
 def _decode_view_i16(view: np.ndarray, codec: str) -> np.ndarray:

@@ -32,8 +32,6 @@ from pyspark.sql import types as T
 from ..functions.text import (
     fingerprint_md5,
     normalize_text,
-    shingle_hashes_of_norm,
-    shingles,
     word_tokens,
 )
 
@@ -240,25 +238,6 @@ def exact_duplicates(
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("group_size"))
         .filter(F.col("group_size") > 1)
     )
-
-
-def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one representative (min id) per normalized-content fingerprint."""
-    w_fp = fingerprint_md5(F.col(text_col)).alias("fp")
-    keep = (
-        df.select(F.col(id_col).alias("doc_id"), w_fp)
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    return df.join(
-        keep.withColumnRenamed("doc_id", id_col).drop("fp"), id_col, "left_semi"
-    )
-
-
-def _jaccard(a: Column, b: Column) -> Column:
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union > 0, F.round(inter / union, 6)).otherwise(F.lit(0.0))
 
 
 def ngram_jaccard_pairs(
@@ -468,19 +447,6 @@ def ngram_jaccard_pairs(
     return (
         sized.select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_signature(sh_hashes: Column, n_hashes: int = 64) -> Column:
-    """MinHash signature over a MATERIALIZED hashed-shingle column: for
-    seed j, min over shingles of xxhash64(shingle_hash, j). One JVM-side
-    expression, no UDF; the input must be a real column (not an inline
-    shingle expression — it would be re-evaluated n_hashes times)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda j: F.array_min(
-            F.transform(sh_hashes, lambda h: F.xxhash64(h, j))
-        ),
     )
 
 

@@ -2507,20 +2507,6 @@ FROM f, wm WHERE bs <= wm_s - 3660
 """
 
 
-def _entry_clip_stream(spark):
-    import os as _os
-    import tempfile
-
-    from . import synth as _synth
-    from .streaming import source as _src
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    d = _os.path.join(tempfile.gettempdir(), "core_spark_entry_stream", "clips")
-    if not _os.path.isdir(d):
-        _synth.write_clips_parquet(spark, d, 2000, n_files=4)
-    return _src.clips_stream(spark, d)
-
-
 def _run_entry_stream(res, name):
     q = (
         res.writeStream.format("memory")

@@ -69,7 +69,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         # Fat-binary rows (audio clips ~35 KB) blow up the vectorized parquet
         # reader's per-task column vectors: 4096 rows x 35 KB = ~143 MB per
         # batch. Under G1 those are humongous allocations and concurrent scans

@@ -253,12 +253,6 @@ def clips_df(
     )
 
 
-def corrections_df(spark: SparkSession, clips_pdf: pd.DataFrame, seed: int = 42) -> DataFrame:
-    return spark.createDataFrame(
-        make_corrections_pdf(clips_pdf, seed), schema=CORRECTIONS_SCHEMA
-    )
-
-
 def write_clips_parquet(
     spark: SparkSession, path: str, n: int, seed: int = 42, n_files: int = 8
 ) -> None:

@@ -96,6 +96,38 @@ def test_salted_matches_unsalted_sliding(spark, clips_dir):
     assert (g["avg_energy"] - w["avg_energy"]).abs().max() < 1e-9
 
 
+@pytest.mark.parametrize("slide_sec", [None, 20], ids=["tumbling", "sliding"])
+def test_salted_stream_matches_batch(spark, clips_dir, slide_sec):
+    # the chained two-stage salted aggregation (the streaming job's --salt
+    # path) run as a real stream, with Spark's stateful-operator correctness
+    # check on: append mode emits a window once the watermark passes its
+    # end, and every emitted row must equal the batch result's row
+    stream = src.clips_stream(spark, clips_dir)
+    name = f"t_salted_{slide_sec}"
+    q = (
+        sw.tumbling_energy(stream, 60, slide_sec=slide_sec, salt_buckets=8)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    wm = q.lastProgress["eventTime"]["watermark"]
+    keys = ["window_start", "prefix"]
+    want = sw.tumbling_energy(
+        src.clips_batch(spark, clips_dir), 60, slide_sec=slide_sec, salt_buckets=8
+    )
+    closed = want.filter(F.col("window_end") <= F.to_timestamp(F.lit(wm)))
+    g, w = _sorted_pdf(spark.table(name), keys), _sorted_pdf(closed, keys)
+    # only the windows still open at the end of the input stay unemitted
+    assert len(g) == len(w) and len(g) >= 0.9 * want.count()
+    for col in ["window_start", "window_end", "prefix", "n_clips", "sum_dur_ms",
+                "max_energy", "n_distinct_clips"]:
+        assert (g[col] == w[col]).all(), col
+    assert (g["avg_energy"] - w["avg_energy"]).abs().max() < 1e-9
+
+
 def test_stream_join_tolerance(spark, clips_dir, tmp_path):
     pdf = synth.make_clips_pdf(N)
     corr_pdf = synth.make_corrections_pdf(pdf)

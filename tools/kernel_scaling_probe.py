@@ -1,4 +1,5 @@
-"""Isolate the DSP kernel from Spark: does decode+_spectral_one itself scale
+"""Isolate the DSP kernel from Spark: does the streaming job's decode +
+spectral kernel (_decode_view_i16 + _spectral_one_i16) itself scale
 from 6 pinned workers (one 8-core slice) to 24 pinned workers (four slices)?
 
 Usage: python tools/kernel_scaling_probe.py [n_clips_per_proc]
@@ -18,8 +19,8 @@ def worker(slice_id: int, n: int, reps: int, q: Queue) -> None:
     width = 8
     os.sched_setaffinity(0, range(slice_id * width, slice_id * width + width))
     from core_spark import synth
-    from core_spark.functions.audio import _spectral_one
-    from core_spark.functions.audio_arrow import _decode_view
+    from core_spark.functions.audio import _spectral_one_i16
+    from core_spark.functions.audio_arrow import _decode_view_i16
     import numpy as np
 
     pdf = synth.make_clips_pdf(n, start=0)
@@ -28,11 +29,11 @@ def worker(slice_id: int, n: int, reps: int, q: Queue) -> None:
     srs = pdf["sr_hz"].tolist()
     # warm
     for i in range(min(50, n)):
-        _spectral_one(_decode_view(payloads[i], codecs[i]), int(srs[i]))
+        _spectral_one_i16(_decode_view_i16(payloads[i], codecs[i]), int(srs[i]))
     t0 = time.time()
     for _ in range(reps):
         for i in range(n):
-            _spectral_one(_decode_view(payloads[i], codecs[i]), int(srs[i]))
+            _spectral_one_i16(_decode_view_i16(payloads[i], codecs[i]), int(srs[i]))
     q.put(n * reps / (time.time() - t0))
 
 

@@ -57,16 +57,8 @@ def main() -> None:
     args = ap.parse_args()
 
     work = bench._bench_root()
-    heap = os.environ.get("SPARK_GRAFT_BENCH_HEAP", "8g")
-    in_dir = os.path.join(work, f"clips_input_{args.n_clips}")
-    if not os.path.isdir(in_dir):
-        bench._run_job(
-            [sys.executable, "-m", "core_spark.streaming.job",
-             "--cores", "32", "--mode", "tumbling",
-             "--n-clips", str(args.n_clips),
-             "--work", os.path.join(work, "synth"), "--input", in_dir,
-             "--batches", "3", "--files-per-trigger", "112", "--synth-only"]
-        )
+    heap = bench.SF_HEAP  # the local[6] heap of bench.py's spec-form pairs
+    in_dir = bench._synth_input(args.n_clips, 112)
 
     def cmd(cores, wdir, cpuset, bdir=None, bcount=1):
         c = bench._job_cmd(
