@@ -176,7 +176,7 @@ def _job_cmd(
 def _run_job(cmd: list[str], heap: str | None = None) -> dict:
     env = dict(os.environ, PYTHONPATH=REPO)
     if heap:
-        # a local[k] slice job on the default 20 GB AlwaysPreTouch heap wastes
+        # a local[k] slice job on the default (up to 20 GB) AlwaysPreTouch heap wastes
         # startup on page-zeroing (4 concurrent = a fleet-wide fault storm)
         # and measures ~15% slower from GC locality
         env["SPARK_GRAFT_DRIVER_MEM"] = heap

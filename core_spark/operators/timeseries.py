@@ -194,29 +194,37 @@ def resample(
     )
 
 
-def _grid(
-    df_tags: DataFrame,
-    start: str,
-    end: str,
+def _densify(
+    out: DataFrame,
+    df: DataFrame,
+    spec: TSSpec,
+    start: str | None,
+    end: str | None,
     every_seconds: int,
+    tags: Sequence[str] | None,
     offset_seconds: int = 0,
 ) -> DataFrame:
-    """tags x timestamps grid via sequence+explode (TSQB:213,262,783).
+    """Left-join ``out`` onto the tags x buckets grid (TSQB ``date_array``).
 
-    ``df_tags`` is the (tiny) distinct-tag frame; the exploded grid is
-    broadcast-joined downstream. End-exclusive to match bucket semantics.
+    The grid is ``sequence``+``explode`` per distinct tag (TSQB:213,262,783),
+    end-exclusive to match bucket semantics. No grid without both bounds.
     """
+    if start is None or end is None:
+        return out
+    tag_src = df.select(F.col(spec.tag_col).alias(TAG))
+    if tags is not None:
+        tag_src = tag_src.filter(F.col(TAG).isin(list(tags)))
     seq = F.sequence(
         F.to_timestamp(F.lit(start)) + F.expr(f"INTERVAL {offset_seconds} SECOND"),
         F.to_timestamp(F.lit(end)),
         F.expr(f"INTERVAL {every_seconds} SECOND"),
     )
-    return (
-        df_tags.select(TAG)
-        .distinct()
+    grid = (
+        tag_src.distinct()
         .select(F.col(TAG), F.explode(seq).alias(TS))
         .filter(F.col(TS) < F.to_timestamp(F.lit(end)))
     )
+    return grid.join(out, [TAG, TS], "left_outer").select(TAG, TS, VAL)
 
 
 def resample_filled(
@@ -244,11 +252,44 @@ def resample_filled(
         df, spec, every_seconds, agg_method, start, end, tags, include_bad,
         offset_seconds, round_digits, exact_decimals,
     )
-    tag_src = df.select(F.col(spec.tag_col).alias(TAG))
-    if tags is not None:
-        tag_src = tag_src.filter(F.col(TAG).isin(list(tags)))
-    grid = _grid(tag_src, start, end, every_seconds, offset_seconds)
-    return grid.join(agg, [TAG, TS], "left_outer").select(TAG, TS, VAL)
+    return _densify(agg, df, spec, start, end, every_seconds, tags, offset_seconds)
+
+
+def _neighbours(
+    obs: Column, order: Sequence[str], inclusive: bool = True
+) -> tuple[Column, Column]:
+    """Nearest non-null ``obs`` before and after each row of a tag.
+
+    Both sides are running frames — ``last(obs) IGNORE NULLS`` from the
+    partition start to the current row (``inclusive``) or the row before it
+    — so each is one linear pass over a tag's rows. "After" runs over the
+    exact mirror of ``order``: every key reversed, Spark's default null
+    placement kept (ASC NULLS FIRST mirrors DESC NULLS LAST), so rows tied on
+    a leading key resolve the same way in both directions. (The
+    ``first(obs) OVER (ROWS CURRENT ROW AND UNBOUNDED FOLLOWING)`` spelling
+    re-aggregates the rest of the partition for every row: quadratic.)
+    """
+    frame = (Window.unboundedPreceding, 0 if inclusive else -1)
+    asc = Window.partitionBy(TAG).orderBy(*[F.col(c).asc() for c in order])
+    desc = Window.partitionBy(TAG).orderBy(*[F.col(c).desc() for c in order])
+    return (
+        F.last(obs, ignorenulls=True).over(asc.rowsBetween(*frame)),
+        F.last(obs, ignorenulls=True).over(desc.rowsBetween(*frame)),
+    )
+
+
+def _lerp(before: Column, after: Column) -> Column:
+    """Linear fill at the row's timestamp between two ``(t, v)`` neighbours
+    (TSQB:282); only-before (or both at one instant) => forward fill;
+    nothing before => NULL."""
+    t = F.unix_timestamp(TS).cast("double")
+    pt = F.unix_timestamp(before["t"]).cast("double")
+    nt = F.unix_timestamp(after["t"]).cast("double")
+    return (
+        F.when(before.isNotNull() & after.isNotNull() & (nt != pt),
+               before["v"] + (after["v"] - before["v"]) * (t - pt) / (nt - pt))
+        .when(before.isNotNull(), before["v"])
+    )
 
 
 def interpolate(
@@ -269,8 +310,8 @@ def interpolate(
 
     method: 'linear' — prev + (next-prev)*(t-prev_t)/(next_t-prev_t)
     (TSQB:282); exact bucket value wins; only-prev => forward fill; no
-    prev => NULL. 'ffill' / 'bfill' — directional fills via
-    last/first IGNORE NULLS (TSQB:1453-1454 pattern).
+    prev => NULL. 'ffill' / 'bfill' — the nearest observed bucket before /
+    after (TSQB:1453-1454 pattern; both running frames, see ``_neighbours``).
 
     Window functions are partitioned per tag; state per partition is the
     bucket series (bounded by the query range), not raw events.
@@ -279,29 +320,16 @@ def interpolate(
         df, spec, every_seconds, start, end, "avg", tags, include_bad,
         offset_seconds, agg_round_digits, exact_decimals,
     )
-    w = Window.partitionBy(TAG).orderBy(TS)
-    w_prev = w.rowsBetween(Window.unboundedPreceding, 0)
-    w_next = w.rowsBetween(0, Window.unboundedFollowing)
     v = F.col(VAL)
+    before, after = _neighbours(
+        F.when(v.isNotNull(), F.struct(F.col(TS).alias("t"), v.alias("v"))), (TS,)
+    )
     if method == "ffill":
-        out = filled.withColumn(VAL, F.last(v, ignorenulls=True).over(w_prev))
+        out = filled.withColumn(VAL, before["v"])
     elif method == "bfill":
-        out = filled.withColumn(VAL, F.first(v, ignorenulls=True).over(w_next))
+        out = filled.withColumn(VAL, after["v"])
     elif method == "linear":
-        obs = F.when(v.isNotNull(), F.struct(F.col(TS).alias("t"), v.alias("v")))
-        prev = F.last(obs, ignorenulls=True).over(w_prev)
-        nxt = F.first(obs, ignorenulls=True).over(w_next)
-        t = F.unix_timestamp(TS).cast("double")
-        pt = F.unix_timestamp(prev["t"]).cast("double")
-        nt = F.unix_timestamp(nxt["t"]).cast("double")
-        interp = prev["v"] + (nxt["v"] - prev["v"]) * (t - pt) / (nt - pt)
-        out = filled.withColumn(
-            VAL,
-            F.when(v.isNotNull(), v)
-            .when(prev.isNotNull() & nxt.isNotNull() & (nt != pt), interp)
-            .when(prev.isNotNull(), prev["v"])  # only-prev => ffill
-            .otherwise(F.lit(None).cast("double")),
-        )
+        out = filled.withColumn(VAL, F.coalesce(v, _lerp(before, after)))
     else:
         raise ValueError("method must be linear|ffill|bfill")
     if round_digits is not None:
@@ -339,34 +367,18 @@ def interpolate_at_time(
     both = events.select(TAG, TS, VAL).withColumn("__req", F.lit(False)).unionByName(
         req.withColumn(VAL, F.lit(None).cast("double"))
     )
-    w = Window.partitionBy(TAG).orderBy(TS, "__req")
-    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    w_next = w.rowsBetween(1, Window.unboundedFollowing)
     obs = F.when(~F.col("__req"), F.struct(F.col(TS).alias("t"), F.col(VAL).alias("v")))
     # exact-time observation: a real event at exactly the requested ts
     exact = F.max(F.when(~F.col("__req"), F.col(VAL))).over(
         Window.partitionBy(TAG, TS)
     )
-    prev = F.last(obs, ignorenulls=True).over(w_prev)
-    nxt = F.first(obs, ignorenulls=True).over(w_next)
-    t = F.unix_timestamp(TS).cast("double")
-    pt = F.unix_timestamp(prev["t"]).cast("double")
-    nt = F.unix_timestamp(nxt["t"]).cast("double")
-    interp = prev["v"] + (nxt["v"] - prev["v"]) * (t - pt) / (nt - pt)
+    # events sort before a request at the same ts (__req ASC), VAL breaks
+    # event ties, so both neighbour scans see one total order
+    fill = _lerp(*_neighbours(obs, (TS, "__req", VAL), inclusive=False))
     # NB: the value must be materialized BEFORE filtering to requested rows —
     # the window functions need the event rows in their frames.
     return (
-        both.withColumn("__exact", exact)
-        .withColumn(
-            "__out",
-            F.round(
-                F.when(F.col("__exact").isNotNull(), F.col("__exact"))
-                .when(prev.isNotNull() & nxt.isNotNull() & (nt != pt), interp)
-                .when(prev.isNotNull(), prev["v"])
-                .otherwise(F.lit(None).cast("double")),
-                round_digits,
-            ),
-        )
+        both.withColumn("__out", F.round(F.coalesce(exact, fill), round_digits))
         .filter(F.col("__req"))
         .select(TAG, TS, F.col("__out").alias(VAL))
     )
@@ -622,25 +634,14 @@ def time_weighted_average(
     )
     w = Window.partitionBy(TAG).orderBy(TS)
     w_prev = w.rowsBetween(Window.unboundedPreceding, 0)
-    w_next = w.rowsBetween(0, Window.unboundedFollowing)
     obs = F.when(~F.col("__edge"), F.struct(F.col(TS).alias("t"), F.col(VAL).alias("v")))
-    prev = F.last(obs, ignorenulls=True).over(w_prev)
-    nxt = F.first(obs, ignorenulls=True).over(w_next)
-    t = F.unix_timestamp(TS).cast("double")
-    if step:
-        fill_v = prev["v"]
-    else:
-        pt = F.unix_timestamp(prev["t"]).cast("double")
-        nt = F.unix_timestamp(nxt["t"]).cast("double")
-        fill_v = (
-            F.when(prev.isNotNull() & nxt.isNotNull() & (nt != pt),
-                   prev["v"] + (nxt["v"] - prev["v"]) * (t - pt) / (nt - pt))
-            .when(prev.isNotNull(), prev["v"])
-        )
+    before, after = _neighbours(obs, (TS,))
+    fill_v = before["v"] if step else _lerp(before, after)
     filled = (
         both.withColumn("__v", F.when(~F.col("__edge"), F.col(VAL)).otherwise(fill_v))
         .withColumn("__st", F.last(F.col(ST), ignorenulls=True).over(w_prev))
     )
+    t = F.unix_timestamp(TS).cast("double")
     nxt_t = F.lead(TS).over(w)
     nxt_v = F.lead("__v").over(w)
     seg_dt = (F.unix_timestamp(nxt_t).cast("double") - t)
@@ -682,6 +683,29 @@ def time_weighted_average(
     )
 
 
+def _circular_means(
+    df: DataFrame,
+    spec: TSSpec,
+    every_seconds: int,
+    lower: float,
+    upper: float,
+    start: str | None,
+    end: str | None,
+    tags: Sequence[str] | None,
+    include_bad: bool,
+) -> DataFrame:
+    """Mean cos (``__c``) and sin (``__s``) per (tag, bucket) of the values
+    scaled from [lower, upper) to radians (TSQB:1590)."""
+    span = upper - lower
+    rad = (F.col(VAL) - F.lit(lower)) / F.lit(span) * 2.0 * F.lit(3.141592653589793)
+    return (
+        scan(df, spec, start, end, tags, include_bad)
+        .withColumn("__b", _bucket(every_seconds, 0))
+        .groupBy(TAG, F.col("__b").alias(TS))
+        .agg(F.avg(F.cos(rad)).alias("__c"), F.avg(F.sin(rad)).alias("__s"))
+    )
+
+
 def circular_average(
     df: DataFrame,
     spec: TSSpec,
@@ -703,14 +727,8 @@ def circular_average(
     left join (the reference's ``date_array`` CTE, TSQB:1581-1588), empty
     buckets carrying NULL values.
     """
-    base = scan(df, spec, start, end, tags, include_bad)
+    agg = _circular_means(df, spec, every_seconds, lower, upper, start, end, tags, include_bad)
     span = upper - lower
-    rad = (F.col(VAL) - F.lit(lower)) / F.lit(span) * 2.0 * F.lit(3.141592653589793)
-    agg = (
-        base.withColumn("__b", _bucket(every_seconds, 0))
-        .groupBy(TAG, F.col("__b").alias(TS))
-        .agg(F.avg(F.cos(rad)).alias("__c"), F.avg(F.sin(rad)).alias("__s"))
-    )
     ang = F.atan2(F.col("__s"), F.col("__c"))  # (-pi, pi]
     pi2 = 2.0 * 3.141592653589793
     ang_pos = (ang + F.lit(pi2)) % F.lit(pi2)
@@ -741,14 +759,8 @@ def circular_stddev(
 
     ``fill=True`` densifies onto the full grid as in :func:`circular_average`.
     """
-    base = scan(df, spec, start, end, tags, include_bad)
+    agg = _circular_means(df, spec, every_seconds, lower, upper, start, end, tags, include_bad)
     span = upper - lower
-    rad = (F.col(VAL) - F.lit(lower)) / F.lit(span) * 2.0 * F.lit(3.141592653589793)
-    agg = (
-        base.withColumn("__b", _bucket(every_seconds, 0))
-        .groupBy(TAG, F.col("__b").alias(TS))
-        .agg(F.avg(F.cos(rad)).alias("__c"), F.avg(F.sin(rad)).alias("__s"))
-    )
     # clamp: fp noise can push single-sample buckets to r slightly > 1,
     # which would make sqrt(-2 ln r) NaN
     r = F.least(
@@ -765,25 +777,6 @@ def circular_stddev(
     if fill:
         out = _densify(out, df, spec, start, end, every_seconds, tags)
     return out
-
-
-def _densify(
-    out: DataFrame,
-    df: DataFrame,
-    spec: TSSpec,
-    start: str | None,
-    end: str | None,
-    every_seconds: int,
-    tags: Sequence[str] | None,
-) -> DataFrame:
-    """Left-join ``out`` onto the tags x buckets grid (TSQB ``date_array``)."""
-    if start is None or end is None:
-        return out
-    tag_src = df.select(F.col(spec.tag_col).alias(TAG))
-    if tags is not None:
-        tag_src = tag_src.filter(F.col(TAG).isin(list(tags)))
-    grid = _grid(tag_src, start, end, every_seconds)
-    return grid.join(out, [TAG, TS], "left_outer").select(TAG, TS, VAL)
 
 
 def pivot_wide(

@@ -15,6 +15,7 @@ a parquet/delta path (TSQB:82-125 rebindable source columns map to TSSpec).
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -140,16 +141,24 @@ class TimeSeriesQueryBuilder:
         )
         return out.join(F.broadcast(dim), TAG, "left_outer")
 
-    @staticmethod
     def _finish(
+        self,
         out: DataFrame,
         sort: bool = True,
         limit: int | None = None,
         offset: int | None = None,
         order_cols: Sequence[str] = (TAG, TS),
+        pivot: Sequence[str] | None = None,
+        display_uom: bool = False,
     ) -> DataFrame:
-        """ORDER BY + LIMIT/OFFSET tail shared by every verb (TSQB:484-488).
-        offset forces the sort (offset without a total order is undefined)."""
+        """Tail shared by every verb: ``pivot`` (the tag list) turns tags into
+        columns and wins over ``display_uom``; then ORDER BY + LIMIT/OFFSET
+        (TSQB:484-488). offset forces the sort (offset without a total order
+        is undefined)."""
+        if pivot is not None:
+            out, order_cols = self._pivot(out, pivot), (TS,)
+        elif display_uom:
+            out = self._decorate_uom(out)
         if sort or offset is not None:
             out = out.orderBy(*[c for c in order_cols if c in out.columns])
         if offset is not None:
@@ -187,9 +196,7 @@ class TimeSeriesQueryBuilder:
             self._events(), self.spec, start_date, end_date, tagname_filter,
             include_bad=include_bad_data,
         )
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, sort, limit, offset)
+        return self._finish(out, sort, limit, offset, display_uom=display_uom)
 
     def resample(
         self,
@@ -220,11 +227,10 @@ class TimeSeriesQueryBuilder:
                 self._events(), self.spec, every, agg_method, start_date,
                 end_date, tagname_filter, include_bad_data,
             )
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), sort, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, sort, limit, offset)
+        return self._finish(
+            out, sort, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def plot(
         self,
@@ -247,11 +253,10 @@ class TimeSeriesQueryBuilder:
             self._events(), self.spec, every, start_date, end_date, tagname_filter
         )
         out = tsq.plot_unpivot(ohlc)
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), sort, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, sort, limit, offset)
+        return self._finish(
+            out, sort, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def interpolate(
         self,
@@ -274,11 +279,10 @@ class TimeSeriesQueryBuilder:
             self._events(), self.spec, every, start_date, end_date,
             method="linear", tags=tagname_filter, include_bad=include_bad_data,
         )
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), sort, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, sort, limit, offset)
+        return self._finish(
+            out, sort, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def interpolation_at_time(
         self,
@@ -298,11 +302,10 @@ class TimeSeriesQueryBuilder:
             window_length_seconds=window_length * 86400,
             tags=tagname_filter, include_bad=include_bad_data,
         )
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), True, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, True, limit, offset)
+        return self._finish(
+            out, True, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def time_weighted_average(
         self,
@@ -351,22 +354,15 @@ class TimeSeriesQueryBuilder:
             }
             step_tags = [t for t in tagname_filter if flags.get(t, False)]
             lin_tags = [t for t in tagname_filter if not flags.get(t, False)]
-            parts = []
-            if step_tags:
-                parts.append(run(step_tags, True))
-            if lin_tags:
-                parts.append(run(lin_tags, False))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
+            parts = [run(tags, stp) for tags, stp in ((step_tags, True), (lin_tags, False)) if tags]
+            out = reduce(DataFrame.unionByName, parts)
         else:
             stp = step if isinstance(step, bool) else str(step).lower() == "true"
             out = run(tagname_filter, stp)
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), True, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, True, limit, offset)
+        return self._finish(
+            out, True, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def metadata(
         self,
@@ -391,9 +387,7 @@ class TimeSeriesQueryBuilder:
     ) -> DataFrame:
         """Newest event per tag (TSQB:780-845) — single-pass max_by."""
         out = tsq.latest(self._events(), self.spec, tags=tagname_filter)
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, True, limit, offset, (TAG,))
+        return self._finish(out, True, limit, offset, (TAG,), display_uom=display_uom)
 
     def circular_average(
         self,
@@ -417,11 +411,10 @@ class TimeSeriesQueryBuilder:
             start_date, end_date, tagname_filter, include_bad_data,
             fill=True,
         )
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), True, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, True, limit, offset)
+        return self._finish(
+            out, True, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def circular_standard_deviation(
         self,
@@ -445,11 +438,10 @@ class TimeSeriesQueryBuilder:
             start_date, end_date, tagname_filter, include_bad_data,
             fill=True,
         )
-        if pivot:
-            return self._finish(self._pivot(out, tagname_filter), True, limit, offset, (TS,))
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, True, limit, offset)
+        return self._finish(
+            out, True, limit, offset,
+            pivot=tagname_filter if pivot else None, display_uom=display_uom,
+        )
 
     def summary(
         self,
@@ -466,9 +458,7 @@ class TimeSeriesQueryBuilder:
             self._events(), self.spec, start_date, end_date, tagname_filter,
             include_bad_data,
         )
-        if display_uom:
-            out = self._decorate_uom(out)
-        return self._finish(out, True, limit, offset, (TAG,))
+        return self._finish(out, True, limit, offset, (TAG,), display_uom=display_uom)
 
     def percentiles(
         self,

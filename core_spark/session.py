@@ -57,6 +57,10 @@ def get_spark(
 
     ensure_protobuf()
 
+    # the heap is pre-touched (below), so the default must fit the host:
+    # 20g, or a quarter of physical memory where that is smaller
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(20 * 1024, phys_mb // 4)}m")
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -67,7 +71,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # Fat-binary rows (audio clips ~35 KB) blow up the vectorized parquet
         # reader's per-task column vectors: 4096 rows x 35 KB = ~143 MB per
@@ -80,12 +84,7 @@ def get_spark(
         # concurrent minor-fault handling, so lazy heap growth under 32
         # allocating task threads shows up as multi-second stalls mid-query.
         # Xms=Xmx + AlwaysPreTouch moves that cost to startup, once.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:+UseParallelGC -Xms"
-            + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g")
-            + " -XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.extraJavaOptions", f"-XX:+UseParallelGC -Xms{heap} -XX:+AlwaysPreTouch")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC -XX:+AlwaysPreTouch")
     )
     for k, v in (extra_conf or {}).items():

@@ -211,20 +211,6 @@ def main(argv=None) -> dict:
     q.awaitTermination()
     wall = time.time() - t0
 
-    for p in q.recentProgress or []:
-        print(
-            f"  batch {p.get('batchId')}: rows={p.get('numInputRows')} "
-            f"durationMs={p.get('durationMs')}",
-            file=sys.stderr,
-        )
-    # one pass over the progress log feeds both percentile and steady-state
-    # derivations (keeping the two filters in one place)
-    progress = [
-        (p["durationMs"].get("triggerExecution", 0), p.get("numInputRows", 0))
-        for p in (q.recentProgress or [])
-    ]
-    batch_ms = sorted(d for d, rows in progress if rows > 0 or d > 0)
-
     def pct(v, q_):
         return v[min(len(v) - 1, int(q_ * len(v)))] if v else None
 
@@ -244,9 +230,21 @@ def main(argv=None) -> dict:
     # the largest live row count. Taking independent maxes (the old form)
     # could pair batch A's rows with batch B's bytes and report a
     # bytes/row no batch ever had.
+    # one pass over the progress log also yields the stderr lines and the
+    # batch durations
+    batch_ms, data_ms, state_series = [], [], []
     state_rows = state_bytes = state_cur_bytes = 0
-    state_series = []
     for p in q.recentProgress or []:
+        print(
+            f"  batch {p.get('batchId')}: rows={p.get('numInputRows')} "
+            f"durationMs={p.get('durationMs')}",
+            file=sys.stderr,
+        )
+        d, n_in = p["durationMs"].get("triggerExecution", 0), p.get("numInputRows", 0)
+        if n_in > 0 or d > 0:
+            batch_ms.append(d)
+        if n_in > 0:
+            data_ms.append(d)
         ops = p.get("stateOperators") or []
         rows = sum(op.get("numRowsTotal") or 0 for op in ops)
         byts = sum(op.get("memoryUsedBytes") or 0 for op in ops)
@@ -261,15 +259,15 @@ def main(argv=None) -> dict:
             state_series.append([rows, byts, cur])
         if rows > state_rows:
             state_rows, state_bytes, state_cur_bytes = rows, byts, cur
+    batch_ms.sort()
     # steady-state throughput: total clips / total time spent INSIDE data
     # micro-batches. This excludes only stream start/stop and inter-batch
     # driver gaps (costs a long-running production stream amortizes to zero)
     # while still counting every processing second — no fastest-batch
     # cherry-picking.
-    full_batches = sorted(d for d, rows in progress if rows > 0)
     steady = (
-        round(n_clips / (sum(full_batches) / 1000.0), 1)
-        if full_batches
+        round(n_clips / (sum(data_ms) / 1000.0), 1)
+        if data_ms
         else None
     )
     metrics = {

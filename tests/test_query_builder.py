@@ -148,6 +148,49 @@ def test_uom_pivot_limit_offset_metadata(qb, events, meta):
     assert md.count() == 1 and md.first()["UoM"] == "mm"
 
 
+# positional arguments that make each display_uom verb run on the sf0.001 events
+_VERB_ARGS = {
+    "raw": (TAGS, START, END),
+    "resample": (TAGS, START, END, "1", "day", "avg"),
+    "plot": (TAGS, START, END, "1", "day"),
+    "interpolate": (TAGS, START, END, "12", "hour"),
+    "interpolation_at_time": (TAGS, ["2024-01-10 12:34:56"]),
+    "time_weighted_average": (TAGS, START, END, "1", "day", "false"),
+    "latest": (TAGS,),
+    "circular_average": (TAGS, START, END, "1", "day", 0, 360),
+    "circular_standard_deviation": (TAGS, START, END, "1", "day", 0, 360),
+    "summary": (TAGS, START, END),
+}
+_PIVOT_VERBS = sorted(set(_VERB_ARGS) - {"raw", "latest", "summary"})
+
+
+@pytest.fixture(scope="module")
+def qb_meta(spark, events, meta):
+    return (
+        TimeSeriesQueryBuilder()
+        .connect(spark)
+        .source(events, "event_type", "ts", None, "value")
+        .m_source(meta)
+    )
+
+
+@pytest.mark.parametrize("verb", _PIVOT_VERBS)
+def test_pivot_returns_tag_columns(qb_meta, verb):
+    run = getattr(qb_meta, verb)
+    assert run(*_VERB_ARGS[verb], pivot=True).columns == ["event_time", *TAGS]
+    # pivot wins over the UoM decoration
+    assert run(*_VERB_ARGS[verb], pivot=True, display_uom=True).columns == ["event_time", *TAGS]
+
+
+@pytest.mark.parametrize("verb", sorted(_VERB_ARGS))
+def test_display_uom_adds_uom_column(qb_meta, verb):
+    run = getattr(qb_meta, verb)
+    plain, dec = run(*_VERB_ARGS[verb]), run(*_VERB_ARGS[verb], display_uom=True)
+    assert "UoM" not in plain.columns
+    assert sorted(dec.columns) == sorted([*plain.columns, "UoM"])
+    assert dec.filter(F.col("UoM").isNotNull()).count() == plain.count() > 0
+
+
 def test_sql_builder(spark, events):
     events.createOrReplaceTempView("qb_events")
     out = SQLQueryBuilder().connect(spark).get(

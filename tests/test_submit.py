@@ -39,6 +39,16 @@ def test_spark_submit_pyfiles_runs_job(tmp_path):
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     assert lines, f"no metrics line\nstdout:{out.stdout[-1500:]}\nstderr:{out.stderr[-1500:]}"
     m = json.loads(lines[-1])
+    assert set(m) == {
+        "mode", "cores", "n_clips", "rows_out", "wall_sec", "clips_per_sec",
+        "clips_per_sec_steady", "n_batches", "batch_ms_p50", "batch_ms_p99",
+        "lineage_commits", "state_rows", "state_bytes", "state_cur_bytes",
+        "state_series",
+    }
     assert m["n_clips"] == 4000
     assert m["rows_out"] > 0
     assert m["lineage_commits"] >= 1
+    # the fields derived from the query's progress log
+    assert m["batch_ms_p50"] <= m["batch_ms_p99"]
+    assert len(m["state_series"]) >= 1
+    assert m["clips_per_sec_steady"] >= m["clips_per_sec"]

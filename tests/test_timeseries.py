@@ -7,6 +7,7 @@ cadence with deleted points, duplicates, and Bad-status sprinkles.
 
 from __future__ import annotations
 
+import re
 from datetime import datetime
 
 import pytest
@@ -123,6 +124,31 @@ def test_interpolate_at_time(spark):
     got = {r["event_time"]: r["value"] for r in out}
     assert got[t(2, 30)] == pytest.approx(25.0)
     assert got[t(10)] == 100.0  # exact-time event wins
+
+
+_BOUND = r"unboundedpreceding\$\(\)|unboundedfollowing\$\(\)|currentrow\$\(\)|-?\d+"
+_FRAME = re.compile(rf"specifiedwindowframe\(\w+, ({_BOUND}), ({_BOUND})\)")
+_T0, _T1 = "2024-01-01 00:00:00", "2024-01-01 00:30:00"
+_GAP_FILLS = {
+    "interpolate_linear": lambda df: tsq.interpolate(df, SPEC, 600, _T0, _T1, "linear"),
+    "interpolate_bfill": lambda df: tsq.interpolate(df, SPEC, 600, _T0, _T1, "bfill"),
+    "interpolate_at_time": lambda df: tsq.interpolate_at_time(df, SPEC, ["2024-01-01 00:20:00"]),
+    "twa_linear": lambda df: tsq.time_weighted_average(df, SPEC, 600, _T0, _T1, step=False),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_GAP_FILLS))
+def test_gap_fills_use_running_frames(events, verb):
+    """A frame that ends at UNBOUNDED FOLLOWING but starts later than
+    UNBOUNDED PRECEDING is re-aggregated for every row — quadratic in a
+    tag's rows. Every gap fill must look ahead with a running frame over the
+    mirrored order instead; whole-partition frames are linear and allowed."""
+    df = _GAP_FILLS[verb](events)
+    df.collect()
+    frames = _FRAME.findall(df._jdf.queryExecution().executedPlan().toString())
+    assert frames, "no window frame found in the executed plan"
+    ahead = [f for f in frames if f[1] == "unboundedfollowing$()" and f[0] != "unboundedpreceding$()"]
+    assert not ahead, ahead
 
 
 def test_summary(events):

@@ -7,7 +7,8 @@ that matter at 100 TB —
 - the scan reads only needed columns (ReadSchema pruning);
 - small dimension joins broadcast (BroadcastHashJoin, no SortMergeJoin for
   the UoM-style decoration);
-- no CartesianProduct / BroadcastNestedLoopJoin anywhere.
+- no CartesianProduct / BroadcastNestedLoopJoin anywhere;
+- time-series gap fills use no look-ahead window frame.
 
 Run: PYTHONPATH=. python tools/explain_audit.py [sf_dir]
 Exit code 1 if any assertion fails (usable as a CI gate).
@@ -33,6 +34,8 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+_LOOKAHEAD_FRAMES = ["currentrow$(), unboundedfollowing$()", "RowFrame, 1, unboundedfollowing$()"]
+
 CHECKS = {
     # query -> (must_contain, must_not_contain)
     "ts_raw": (["GreaterThanOrEqual(ts", "ReadSchema"], ["CartesianProduct"]),
@@ -43,7 +46,14 @@ CHECKS = {
     "sim_topk_cosine": ([], ["CartesianProduct"]),
     "text_doc_stats": (["ReadSchema"], ["Exchange"]),
     "ts_ohlc": (["HashAggregate"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
-    "ts_interpolate_linear": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # gap fills look ahead with a running frame over the mirrored order: a
+    # frame from the current (or next) row to UNBOUNDED FOLLOWING is
+    # re-aggregated per row, quadratic in a tag's rows
+    "ts_interpolate_linear": (
+        [], ["CartesianProduct", "BroadcastNestedLoopJoin", *_LOOKAHEAD_FRAMES],
+    ),
+    "ts_interpolate_at_time": (["Window"], ["CartesianProduct", *_LOOKAHEAD_FRAMES]),
+    "ts_twa_linear": (["Window"], ["CartesianProduct", *_LOOKAHEAD_FRAMES]),
     "dq_missing_pattern": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     "transform_pcdm_split": (["ReadSchema"], ["CartesianProduct"]),
     "ts_raw_limit": (["GreaterThanOrEqual(ts"], ["CartesianProduct"]),
