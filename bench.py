@@ -100,24 +100,26 @@ def run_batch(sf_dir: str, cores: int) -> dict[str, float]:
         _warm(F.col("id").cast("double"))
     ).count()
     # min of 3 runs per query: the first run of each plan shape pays one-time
-    # JIT/codegen compilation, and the third narrows shared-host drift
+    # JIT/codegen compilation, and the third narrows shared-host drift.
+    # A noop write computes every output column; .count() would let Catalyst
+    # prune the value columns and time a cheaper plan than callers run.
     times: dict[str, float] = {}
     for name in BATCH_QUERIES:
         fn = registry.QUERIES[name]
-        best, rows = None, 0
+        best = None
         for _ in range(3):
             t0 = time.time()
-            rows = fn(spark, sf_dir).count()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.time() - t0, 3)
             best = dt if best is None or dt < best else best
         times[name] = best
-        print(f"  {name}: {times[name]}s ({rows} rows)", file=sys.stderr)
+        print(f"  {name}: {times[name]}s", file=sys.stderr)
     return times
 
 
 def _run_batch_isolated(sf_dir: str, cores: int) -> dict[str, float]:
     """Run the batch suite in a CHILD process so its local[32] JVM (a
-    pre-touched multi-GB heap plus `cores` Python workers) has exited before
+    multi-GB heap plus `cores` Python workers) has exited before
     the scaling fleet is measured; left resident, even idle, it steals
     memory bandwidth and LLC from the pinned fleet JVMs."""
     out = subprocess.run(
@@ -176,9 +178,8 @@ def _job_cmd(
 def _run_job(cmd: list[str], heap: str | None = None) -> dict:
     env = dict(os.environ, PYTHONPATH=REPO)
     if heap:
-        # a local[k] slice job on the default (up to 20 GB) AlwaysPreTouch heap wastes
-        # startup on page-zeroing (4 concurrent = a fleet-wide fault storm)
-        # and measures ~15% slower from GC locality
+        # a local[k] slice job on the default (up to 20 GB) heap measured
+        # ~15% slower from GC locality
         env["SPARK_GRAFT_DRIVER_MEM"] = heap
     out = subprocess.run(
         cmd, cwd=REPO, env=env, capture_output=True, text=True, timeout=3600
@@ -349,7 +350,7 @@ def host_membw_calibration() -> dict:
 
 
 def _staggered(cmds: list[list[str]], heap: str) -> list[dict]:
-    # concurrent, started 1 s apart to spread heap-pretouch fault bursts
+    # concurrent, started 1 s apart to spread their JVM startups
     def one(i: int) -> dict:
         time.sleep(1.0 * i)
         return _run_job(cmds[i], heap=heap)

@@ -21,6 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Largest vocabulary one_hot_encode infers on the driver: the probe collects
+# at most this many values plus one, however many the column holds.
+MAX_INFERRED_VALUES = 1024
+
 
 def one_hot_encode(
     df: DataFrame, column: str, values: list | None = None
@@ -31,18 +35,27 @@ def one_hot_encode(
     each call adds a nested Project node, and its `pre_transform_validation`
     runs TWO extra Spark jobs (`df.count()`, `distinct().collect()`) before
     any work. Here: at most one job (the distinct probe, only when `values`
-    is not supplied — pass the vocabulary explicitly at scale, exactly like
-    the bounded-vocab probes in operators/dedup.py), then ONE select with
-    all indicator columns, which Catalyst keeps as a single projection.
+    is not supplied, bounded by `MAX_INFERRED_VALUES` exactly like the
+    bounded-vocab probes in operators/dedup.py — a larger vocabulary raises
+    and must be passed as `values`), then ONE select with all indicator
+    columns, which Catalyst keeps as a single projection.
 
     Column naming matches the reference: `{column}_{value}`, None -> "None".
     """
     if column not in df.columns:
         raise ValueError(f"Column '{column}' does not exist in the DataFrame.")
     if values is None:
-        values = [r[0] for r in df.select(column).distinct().collect()]
+        values = [
+            r[0]
+            for r in df.select(column).distinct().limit(MAX_INFERRED_VALUES + 1).collect()
+        ]
         if not values:
             raise ValueError(f"No distinct values found in column '{column}'.")
+        if len(values) > MAX_INFERRED_VALUES:
+            raise ValueError(
+                f"Column '{column}' has more than {MAX_INFERRED_VALUES} distinct "
+                "values; pass the vocabulary explicitly as values=."
+            )
     indicators = [
         F.when(F.col(column) == F.lit(v), 1)
         .otherwise(0)

@@ -179,11 +179,15 @@ def sequence_pack(
         raise ValueError("context_len must be positive")
     from pyspark.sql import Window
 
+    # localCheckpoint pins d once: the base-offset collect and the output
+    # plan would otherwise each run it, and AQE may coalesce the range
+    # shuffle differently per run, so __pid (and every offset) could shift
     d = (
         df.select(F.col(id_col), F.col(tokens_col))
         .repartitionByRange(F.col(id_col))
         .sortWithinPartitions(id_col)
         .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     part = (
         d.groupBy("__pid")
@@ -221,7 +225,7 @@ def sequence_pack(
             F.when(
                 F.col(tokens_col) > 0,
                 F.expr(
-                    f"(token_offset + {tokens_col} - 1)"
+                    f"(token_offset + `{tokens_col.replace('`', '``')}` - 1)"
                     f" div {int(context_len)}"
                 ),
             ).otherwise(F.col("pack_first")),

@@ -50,11 +50,11 @@ def build_args(argv=None):
                         "bin-packing targets defaultParallelism and the task "
                         "count (and tail shape) differs between local[7] and "
                         "local[28], skewing the N-vs-4N comparison")
-    p.add_argument("--shuffle-partitions", type=int, default=16,
-                   help="stateful-operator partition count; agg state is tiny "
-                        "(~10-100k keys) so fewer, fuller state stores beat "
-                        "per-core stores — decode parallelism comes from input "
-                        "file splits, not from this")
+    p.add_argument("--shuffle-partitions", type=int, default=None,
+                   help="stateful-operator partition count (default: --cores); "
+                        "agg state is tiny (~10-100k keys), so more state "
+                        "stores than cores only add commit work — decode "
+                        "parallelism comes from input file splits, not from this")
     p.add_argument("--keep-work", action="store_true")
     p.add_argument("--synth-only", action="store_true",
                    help="synthesize the input table and exit (bench uses this "
@@ -65,7 +65,7 @@ def build_args(argv=None):
                         "--barrier-count tokens exist, so every job in a "
                         "concurrent fleet starts its MEASURED phase at the "
                         "same instant — no job's measurement overlaps another "
-                        "job's JVM startup / heap pretouch")
+                        "job's JVM startup")
     p.add_argument("--barrier-count", type=int, default=1)
     return p.parse_args(argv)
 
@@ -97,7 +97,7 @@ def main(argv=None) -> dict:
     spark = get_spark(
         f"cep-{a.mode}",
         cores=a.cores,
-        shuffle_partitions=a.shuffle_partitions,
+        shuffle_partitions=a.shuffle_partitions or a.cores,
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(a.max_partition_mb * 1024 * 1024),
             # fat binary rows: the session default of 10k records/Arrow batch

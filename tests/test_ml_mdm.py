@@ -37,6 +37,17 @@ def test_one_hot_inferred_values_and_missing_column(spark):
         ml.one_hot_encode(df, "nope")
 
 
+def test_one_hot_inferred_vocabulary_is_bounded(spark, monkeypatch):
+    monkeypatch.setattr(ml, "MAX_INFERRED_VALUES", 3)
+    at_bound = spark.createDataFrame([("x",), ("y",), ("z",), ("x",)], "c string")
+    assert sorted(ml.one_hot_encode(at_bound, "c").columns) == ["c", "c_x", "c_y", "c_z"]
+    over = at_bound.union(spark.createDataFrame([("w",)], "c string"))
+    with pytest.raises(ValueError, match="'c' has more than 3 distinct values; pass .*values="):
+        ml.one_hot_encode(over, "c")
+    # an explicit vocabulary skips the probe, so the bound does not apply
+    assert len(ml.one_hot_encode(over, "c", ["w", "x", "y", "z"]).columns) == 5
+
+
 def test_columns_to_vector_and_override(spark):
     df = spark.createDataFrame([(1.0, 2, "z")], "a double, b int, vec string")
     out = ml.columns_to_vector(df, ["a", "b"], "v")

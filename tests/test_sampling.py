@@ -204,6 +204,39 @@ def test_sequence_pack_prefix_sums(spark):
                 assert r["pack_last"] == r["pack_first"]
 
 
+def test_sequence_pack_offsets_under_aqe_coalescing(spark):
+    import pandas as pd
+
+    from core_spark.operators import sampling as sp
+
+    # AQE coalescing on with a tiny advisory size: the range shuffle keeps
+    # many partitions, and the offsets must still equal one running sum.
+    # The hyphenated token column also exercises the quoted SQL expression.
+    keys = (
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    pdf = pd.DataFrame(
+        {"doc_id": range(400), "n-tokens": [(i * 53) % 700 for i in range(400)]}
+    )
+    exp_off = pdf["n-tokens"].cumsum().shift(1, fill_value=0).tolist()
+    exp_last = [
+        (o + n - 1) // 256 if n > 0 else o // 256
+        for o, n in zip(exp_off, pdf["n-tokens"])
+    ]
+    try:
+        spark.conf.set(keys[0], "true")
+        spark.conf.set(keys[1], "64b")
+        df = spark.createDataFrame(pdf.sample(frac=1, random_state=3)).repartition(9)
+        out = sp.sequence_pack(df, "doc_id", "n-tokens", 256).orderBy("doc_id").collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert [r["token_offset"] for r in out] == exp_off
+    assert [r["pack_last"] for r in out] == exp_last
+
+
 def test_sequence_pack_no_global_window(spark):
     import pandas as pd
 

@@ -602,3 +602,26 @@ def test_topk_windows_stream_matches_batch_ranking(spark, tmp_path):
     ).sort_values(["tagname", "bucket", "rank"]).reset_index(drop=True)
     g2 = got.sort_values(["tagname", "bucket", "rank"]).reset_index(drop=True)[exp.columns]
     pd.testing.assert_frame_equal(g2, exp, check_dtype=False)
+
+
+def test_job_shuffle_partitions_default_to_cores(monkeypatch):
+    # the job's state-store count follows --cores unless given: capture the
+    # session request and stop there, so the shared session is left alone
+    import core_spark.session as session
+    from core_spark.streaming import job
+
+    calls = []
+
+    class _Stop(Exception):
+        pass
+
+    def fake_get_spark(*args, **kwargs):
+        calls.append(kwargs)
+        raise _Stop
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    for argv, want in ((["--cores", "3"], 3), (["--cores", "3", "--shuffle-partitions", "5"], 5)):
+        with pytest.raises(_Stop):
+            job.main(argv)
+        assert calls[-1]["cores"] == 3
+        assert calls[-1]["shuffle_partitions"] == want

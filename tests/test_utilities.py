@@ -21,6 +21,18 @@ def test_set_spark_configuration(spark):
     spark.conf.set("spark.sql.cbo.enabled", "false")
 
 
+def test_driver_jvm_faults_heap_in_on_demand(spark):
+    # the engine's driver JVM keeps a fixed-size throughput-GC heap but
+    # does not pre-fault it: resident memory follows the pages it touches
+    args = list(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean().getInputArguments()
+    )
+    assert "-XX:+AlwaysPreTouch" not in args, args
+    assert "-XX:+UseParallelGC" in args, args
+    assert any(a.startswith("-Xms") for a in args), args
+
+
 def test_adls_gen2_spn_connect_sets_oauth_chain(spark):
     assert adls_gen2_spn_connect(spark, "acct", "tid", "cid", "secret")
     base = "fs.azure.account"
