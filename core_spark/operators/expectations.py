@@ -269,10 +269,11 @@ _STRFTIME_MAP = {
 }
 
 
-def _strftime_to_spark(fmt: str) -> str:
+def _strftime_to_spark(fmt: str, offset: str = "xx") -> str:
     """Translate a C-strftime format to the java.time pattern Spark's
-    to_timestamp/try_to_timestamp understand. Literal runs are quoted so
-    letters in them are never misread as pattern characters."""
+    to_timestamp/try_to_timestamp understand, with ``%z`` as ``offset``.
+    Literal runs are quoted so letters in them are never misread as
+    pattern characters."""
     out: list[str] = []
     lit: list[str] = []
 
@@ -292,7 +293,7 @@ def _strftime_to_spark(fmt: str) -> str:
                 lit.append("%")
             else:
                 flush()
-                out.append(_STRFTIME_MAP[d])
+                out.append(offset if d == "%z" else _STRFTIME_MAP[d])
             i += 2
         else:
             lit.append(ch)
@@ -397,8 +398,11 @@ def _row_ok(cfg: ExpectationConfiguration) -> Column:
     if t == "expect_column_value_lengths_to_equal":
         return c.isNull() | (F.length(c) == F.lit(int(k["value"])))
     if t == "expect_column_values_to_match_strftime_format":
-        pat = _strftime_to_spark(k["strftime_format"])
-        return c.isNull() | F.try_to_timestamp(c, F.lit(pat)).isNotNull()
+        # %z reads ±HHMM (xx) and also ±HH:MM or Z (XXX), as strptime does
+        fmt = k["strftime_format"]
+        pats = dict.fromkeys(_strftime_to_spark(fmt, z) for z in ("xx", "XXX"))
+        probes = [F.try_to_timestamp(c, F.lit(p)) for p in pats]
+        return c.isNull() | F.coalesce(*probes).isNotNull()
     if t == "expect_column_values_to_be_dateutil_parseable":
         probes = [
             F.try_to_timestamp(c)

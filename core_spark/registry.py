@@ -2614,12 +2614,12 @@ FROM v, wm WHERE bs <= wm_s - 3660
 
 def q_stream_percentiles(spark, sf_dir):
     """Streaming EXACT windowed percentiles (streaming/windows
-    .percentile_windows): open buckets buffer values in group state and
-    emit type-7 quantiles when the watermark closes the bucket — the
-    streaming recast of operators/timeseries.percentiles with the same
-    IEEE arithmetic, so closed buckets match the DuckDB oracle
-    bit-for-bit. Exact quantiles are not algebraic; this is the bounded-
-    state buffered path (the sketch path is percentile_approx)."""
+    .percentile_windows): a native windowed aggregate keeps each open
+    bucket's sorted values and emits type-7 quantiles when the watermark
+    closes the bucket — the streaming recast of
+    operators/timeseries.percentiles with the same IEEE arithmetic, so
+    closed buckets match the DuckDB oracle bit-for-bit. Exact quantiles
+    are not algebraic (the sketch path is percentile_approx)."""
     from .streaming import windows as _sw
 
     res = _sw.percentile_windows(
@@ -3805,7 +3805,10 @@ def q_text_repetition(spark, sf_dir):
     duplicate-2gram fractions as pure JVM array expressions — per-row
     arithmetic, zero shuffle, zero UDFs. The oracle rebuilds the token
     and consecutive-2gram streams with unnest + generate_subscripts and a
-    pos+1 self-join; fractions rounded to 6 places on both sides."""
+    pos+1 self-join, dropping the empty tokens a split of leading/trailing
+    or blank whitespace leaves (so a blank doc reads 0 words and NULL
+    fractions on both sides); fractions rounded to 6 places on both
+    sides."""
     docs = _load(spark, sf_dir, "documents")
     m = tx.repetition_metrics(F.col("text"))
     return docs.select(
@@ -3823,11 +3826,13 @@ WITH w AS (
          generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
   FROM documents),
 aw AS (
-  SELECT doc_id, count(*) AS n, count(DISTINCT tok) AS d
+  SELECT doc_id, count(*) FILTER (WHERE tok <> '') AS n,
+         count(DISTINCT tok) FILTER (WHERE tok <> '') AS d
   FROM w GROUP BY doc_id),
 g AS (
   SELECT a.doc_id, a.tok || ' ' || b.tok AS gram
-  FROM w a JOIN w b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
+  FROM w a JOIN w b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+  WHERE a.tok <> '' AND b.tok <> ''),
 ag AS (
   SELECT doc_id, count(*) AS n, count(DISTINCT gram) AS d
   FROM g GROUP BY doc_id)

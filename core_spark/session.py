@@ -49,14 +49,6 @@ def get_spark(
     for var in ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_"):
         os.environ.setdefault(var, "1073741824")
 
-    # transformWithStateInPandas needs google.protobuf in the worker env;
-    # when absent, an on-disk runtime is shimmed onto PYTHONPATH — which
-    # must happen BEFORE the JVM starts so forked workers inherit it
-    # (no-op on images with protobuf installed; see streaming/pbcompat.py)
-    from .streaming.pbcompat import ensure_protobuf
-
-    ensure_protobuf()
-
     # the heap can fill to this size, so the default must fit the host:
     # 20g, or a quarter of physical memory where that is smaller
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20

@@ -9,7 +9,7 @@ The north-star recast of the reference's time-series pipeline core
 - ``join``      — watermarked stream-stream join with late-correction drops
 - ``sessions``  — applyInPandasWithState gap/session detection + fills
 - ``cep``       — A-followed-by-B pattern state machine with absence alerts
-                  (+ RocksDB state-store confs, transformWithStateInPandas path)
+                  (+ RocksDB state-store confs)
 - ``twa``       — incremental time-weighted average (bucket state + carried
                   last observation; bit-compatible with the batch TWA verb)
 - ``interp``    — incremental resample+interpolate (pending gap buckets

@@ -42,14 +42,10 @@ Scale notes (10^12-clip posture):
 - Timeout scan is O(pending of that key); the timer wakes a key only when
   its earliest horizon can actually close.
 
-Spark 4's ``transformWithStateInPandas`` is the preferred production API
-for this operator (per-variable RocksDB column families, native timers,
-TTL): ``tws_funnel`` below implements it. The Python side of that API
-needs ``google.protobuf`` — absent from site-packages here, but
-``pbcompat.ensure_protobuf`` shims an on-disk runtime onto the worker
-path, so the path runs live in this container and
-``test_tws_funnel_parity_with_apply_in_pandas`` proves it emits rows
-identical to the primary ``applyInPandasWithState`` path.
+Every funnel runs on one substrate, ``applyInPandasWithState``:
+``funnel_stream`` is ``funnel_stream_keyed`` over the clip + correction
+union, and the default and ``strict_order`` state machines below are the
+only two matchers.
 """
 
 from __future__ import annotations
@@ -103,8 +99,9 @@ def scoped_rocksdb_state(spark, changelog: bool = True):
     Stateful queries read the provider conf at query START, so the scope
     must cover both plan construction and ``writeStream...start()``;
     already-started queries keep their provider when the scope exits.
-    This is the supported way to run ``tws_funnel`` without leaking the
-    provider switch into later unrelated streaming queries on the session.
+    This is the supported way to run a stateful query on RocksDB without
+    leaking the provider switch into later unrelated streaming queries on
+    the session.
     """
     old = {k: spark.conf.get(k, None) for k in rocksdb_state_conf()}
     for k, v in rocksdb_state_conf(changelog).items():
@@ -367,24 +364,9 @@ def funnel_stream(
     default mode's divergence and the strict mode's exactness on the same
     adversarial split).
     """
-    events = clip_correction_events(clips, corrections)
-    if not clips.isStreaming:
-        from ..operators import cep as _cep
-
-        return _cep.followed_by(
-            events,
-            _cep.CepSpec(key_col="clip_id", ts_col="ts"),
-            "is_a",
-            "NOT is_a",
-            within_sec,
-        )
-    events = events.withWatermark("ts", f"{watermark_sec} seconds")
-    return events.groupBy("clip_id").applyInPandasWithState(
-        _make_strict_funnel_fn(within_sec) if strict_order else _make_funnel_fn(within_sec),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STRICT_STATE_SCHEMA if strict_order else STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return funnel_stream_keyed(
+        clip_correction_events(clips, corrections), "clip_id", "ts", "is_a",
+        "NOT is_a", within_sec, watermark_sec, strict_order,
     )
 
 
@@ -398,14 +380,13 @@ def funnel_stream_keyed(
     watermark_sec: int = 30,
     strict_order: bool = False,
 ) -> DataFrame:
-    """A-followed-by-B funnel over ANY single keyed event stream — the same
-    stateful matcher as ``funnel_stream`` (identical state schema, horizon
-    arithmetic, inline close, same ``strict_order`` watermark-finalized
-    mode) with the A/B split expressed as predicates instead of two
-    physical streams (batch twin: ``operators/cep.followed_by``, reference
-    pattern per SURVEY §2.12). Predicates are coalesced JVM-side so NULL
-    inputs read as false, matching the batch oracle. Output keeps the
-    funnel's schema with ``clip_id`` carrying the stringified key."""
+    """A-followed-by-B funnel over ANY single keyed event stream, with the
+    A/B split expressed as predicates (batch twin:
+    ``operators/cep.followed_by``, reference pattern per SURVEY §2.12).
+    ``funnel_stream`` is this function over the clip + correction union.
+    Predicates are coalesced JVM-side so NULL inputs read as false,
+    matching the batch oracle. Output keeps the funnel's schema with
+    ``clip_id`` carrying the stringified key."""
     ev = df.where(f"({a_pred}) OR ({b_pred})").select(
         F.col(key_col).cast("string").alias("clip_id"),
         F.col(ts_col).alias("ts"),
@@ -425,184 +406,6 @@ def funnel_stream_keyed(
         stateStructType=STRICT_STATE_SCHEMA if strict_order else STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def tws_available() -> bool:
-    """True when Spark 4's transformWithStateInPandas Python API can run
-    (its wire protocol needs google.protobuf in the worker env — shimmed
-    from an on-disk runtime when no installed one exists, pbcompat.py)."""
-    from .pbcompat import ensure_protobuf
-
-    return ensure_protobuf()
-
-
-def _make_funnel_processor(within_sec: int):
-    """Build the transformWithStateInPandas FunnelProcessor class for a
-    given horizon. Module-level factory so the arbitrary-batching property
-    harness (tests/test_property.py) can drive the processor directly with
-    mock handle/ListState/timer objects — the same generator that covers
-    _make_funnel_fn then covers the Spark-4 substrate's logic too.
-    Returns (FunnelProcessor, out_schema)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-
-    out_schema = StructType(
-        [
-            StructField("clip_id", StringType()),
-            StructField("a_ts", TimestampType()),
-            StructField("b_ts", TimestampType()),
-            StructField("lag_sec", LongType()),
-            StructField("matched", BooleanType()),
-        ]
-    )
-
-    cols = ["clip_id", "a_ts", "b_ts", "lag_sec", "matched"]
-
-    class FunnelProcessor(StatefulProcessor):
-        """Mirrors _make_funnel_fn exactly: a second ``done`` ListState
-        dedups redeliveries of already-emitted A's (matched OR absence) until
-        the watermark passes them, expired horizons close INLINE in
-        handleInputRows (a key with continuous traffic never fires its
-        timer), and over-cap A's emit a matched=NULL flagged row."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.pending = handle.getListState("pending_a", "a_ms long")
-            self.done = handle.getListState("done_a", "a_ms long")
-            self.handle = handle
-
-        def _horizon(self, a_ms):
-            # same floored-seconds horizon as the applyInPandasWithState path
-            return (a_ms // 1000 + within_sec + 1) * 1000
-
-        def _save(self, pend, done, wm):
-            self.pending.clear()
-            self.done.clear()
-            if pend:
-                self.pending.appendList([(a,) for a in pend])
-                self.handle.registerTimer(max(self._horizon(min(pend)), wm + 1))
-            elif done:
-                # GC wakeup once the watermark passes the last done entry
-                self.handle.registerTimer(max(max(done) + 1, wm + 1))
-            if done:
-                self.done.appendList([(a,) for a in done])
-
-        def _close_expired(self, k, pend, done, wm, out):
-            closed = [a for a in pend if self._horizon(a) <= wm]
-            if closed:
-                out.extend(
-                    (k, pd.Timestamp(a, unit="ms"), None, None, False)
-                    for a in closed
-                )
-                done.extend(closed)
-                pend = [a for a in pend if self._horizon(a) > wm]
-            done = [a for a in done if a >= wm]
-            return pend, done
-
-        def handleInputRows(self, key, rows, timerValues):
-            k = key[0]
-            wm = timerValues.getCurrentWatermarkInMs()
-            pend = [r[0] for r in self.pending.get()]
-            done = [r[0] for r in self.done.get()]
-            out = []
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "is_a"], kind="stable")
-                for t, a_flag in zip(
-                    (pdf["ts"].astype("int64") // 1_000_000).tolist(),
-                    pdf["is_a"].tolist(),
-                ):
-                    if a_flag:
-                        if t not in pend and t not in done:
-                            if len(pend) < _MAX_PENDING:
-                                pend.append(t)
-                            else:
-                                out.append((k, pd.Timestamp(t, unit="ms"),
-                                            None, None, None))
-                                done.append(t)
-                    else:
-                        ok = lambda a: t > a and t // 1000 - a // 1000 <= within_sec
-                        hit = [a for a in pend if ok(a)]
-                        out.extend(
-                            (k, pd.Timestamp(a, unit="ms"), pd.Timestamp(t, unit="ms"),
-                             t // 1000 - a // 1000, True)
-                            for a in hit
-                        )
-                        done.extend(hit)
-                        pend = [a for a in pend if not ok(a)]
-            pend, done = self._close_expired(k, pend, done, wm, out)
-            self._save(pend, done, wm)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            k = key[0]
-            wm = timerValues.getCurrentWatermarkInMs()
-            pend = [r[0] for r in self.pending.get()]
-            done = [r[0] for r in self.done.get()]
-            out = []
-            pend, done = self._close_expired(k, pend, done, wm, out)
-            self._save(pend, done, wm)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return FunnelProcessor, out_schema
-
-
-def tws_funnel(
-    clips: DataFrame,
-    corrections: DataFrame,
-    within_sec: int = 60,
-    watermark_sec: int = 30,
-) -> DataFrame:
-    """Same funnel on Spark 4's transformWithStateInPandas. Preferred at
-    scale: pending timestamps live in a ListState column family (no
-    whole-value rewrite per update) and timers are first-class. Requires
-    google.protobuf in the Python env (auto-shimmed from an on-disk runtime
-    where possible, pbcompat.py; raises when genuinely absent) and the
-    RocksDB state store (TWS state is multi-column-family, which
-    HDFSBackedStateStoreProvider cannot hold).
-
-    SIDE EFFECT: if the session's provider is not already RocksDB, this
-    sets the provider confs SESSION-WIDE (stateful queries read them at
-    query start, which happens in the caller after this returns — so they
-    cannot be restored here). Later unrelated streaming queries on the
-    same session would inherit RocksDB. Callers who need the prior
-    provider afterwards should wrap construction + query start in
-    ``scoped_rocksdb_state(spark)``, which restores the confs on exit."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf in the Python "
-            "environment; use funnel_stream (applyInPandasWithState) instead"
-        )
-    spark = clips.sparkSession
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    if "RocksDB" not in (spark.conf.get(prov, "") or ""):
-        for k, v in rocksdb_state_conf().items():
-            spark.conf.set(k, v)
-    FunnelProcessor, out_schema = _make_funnel_processor(within_sec)
-
-    events = clip_correction_events(clips, corrections).withWatermark(
-        "ts", f"{watermark_sec} seconds"
-    )
-    return events.groupBy("clip_id").transformWithStateInPandas(
-        FunnelProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="eventTime",
     )
 
 

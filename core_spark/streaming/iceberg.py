@@ -4,8 +4,7 @@ pcdm_to_delta.py:193-253 recast to Iceberg SQL).
 
 This module is capability-gated: it needs an `iceberg-spark-runtime` jar on
 the session classpath plus a configured catalog (the sandbox ships neither,
-so tests/test_iceberg_sink.py skips cleanly — same gating convention as the
-transformWithStateInPandas path in streaming/cep.py). Vendoring the jar
+so tests/test_iceberg_sink.py skips cleanly). Vendoring the jar
 into repo-local `jars/` was attempted in round 4 and is environment-blocked:
 the sandbox has no network route (DNS resolution for repo1.maven.org fails)
 and no copy of the jar anywhere on the image (`find / -name

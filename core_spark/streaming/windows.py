@@ -477,87 +477,42 @@ def percentile_windows(
 ) -> DataFrame:
     """EXACT per-(key, tumbling-bucket) percentiles on a stream.
 
-    Exact quantiles are not an algebraic aggregate — a plain windowed agg
-    can only give sketches (percentile_approx). This operator buffers each
-    open bucket's values in group state (``applyInPandasWithState``) and
-    emits once the event-time timeout fires, i.e. when the watermark passes
-    the bucket end — the streaming recast of the batch ``percentiles`` verb
-    (operators/timeseries.percentiles) with identical type-7 arithmetic
-    (``pos=(n-1)p; v[k] + (v[k+1]-v[k])*(pos-k)``), evaluated in the same
-    IEEE order, so closed buckets match the batch/SQL result bit-for-bit.
+    Exact quantiles are not an algebraic aggregate, so each open bucket
+    keeps its values: Spark's own windowed aggregation holds
+    ``array_sort(collect_list(v))`` per ``(key, window(ts, every))`` in the
+    JVM state store and emits the bucket in append mode once the watermark
+    reaches its end. The projection applies the type-7 rule of the batch
+    ``percentiles`` verb (operators/timeseries.percentiles) as
+    array-index arithmetic — ``pos=(n-1)p; lo + (hi-lo)*(pos-floor(pos))``
+    in the same IEEE order — so closed buckets match the batch/SQL result
+    bit-for-bit. Batch frames get every bucket.
 
-    State bound: one float64 per buffered row, held only for open buckets —
-    watermark delay + bucket width caps the live span per key; a closed
-    bucket's state is freed on emission. Late rows beyond the watermark are
-    dropped by the engine (never double-emitted: the timeout fires only
-    once the watermark passed the bucket, so a later row for it is by
-    definition late). For sketch-sized state at extreme rates, the
-    algebraic path is ``summary_windows``/``percentile_approx``.
+    A bucket emits when the watermark EQUALS its end (a row that would
+    still fall in it is already late there, so none is lost); late rows
+    are dropped by the engine. NULL values are skipped as by any SQL
+    aggregate: ``cnt`` counts the non-NULL values and only they are
+    ranked, so an all-NULL bucket emits ``cnt`` 0 and NULL percentiles
+    (``get`` is ``element_at``'s 0-based form that reads NULL out of
+    bounds). For sketch-sized state at extreme rates, the algebraic path
+    is ``summary_windows``/``percentile_approx``.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    labels = [str(int(round(p * 100))) for p in ps]
-    out_schema = (
-        "tagname string, event_time timestamp, cnt long, "
-        + ", ".join(f"p{lab} double" for lab in labels)
-    )
-
     src = df.select(
-        F.col(key_col).cast("string").alias("k"),
+        F.col(key_col).cast("string").alias("tagname"),
         F.col(ts_col).alias("ts"),
         F.col(value_col).cast("double").alias("v"),
     )
     if src.isStreaming:
         src = src.withWatermark("ts", f"{watermark_sec} seconds")
-    # keep the watermarked ts column in the projection: event-time timeout
-    # requires the watermark column to survive into the stateful operator
-    keyed = src.select(
-        "k",
-        ((F.unix_timestamp("ts") / every_sec).cast("long") * every_sec).alias("bs"),
-        "v",
-        "ts",
+    agg = src.groupBy("tagname", F.window("ts", f"{every_sec} seconds")).agg(
+        F.array_sort(F.collect_list("v")).alias("vs"), F.count("v").alias("cnt")
     )
-
-    def fn(key, pdfs, state: GroupState):
-        k, bs = key[0], int(key[1])
-        end_ms = (bs + every_sec) * 1000
-        if state.hasTimedOut:
-            (vals,) = tuple(state.get)
-            v = np.sort(np.asarray(vals, dtype=np.float64))
-            n = len(v)
-            row = {
-                "tagname": k,
-                "event_time": pd.Timestamp(bs, unit="s"),
-                "cnt": n,
-            }
-            for p, lab in zip(ps, labels):
-                pos = (n - 1) * float(p)
-                kk = int(pos)
-                frac = pos - kk
-                lo, hi = v[kk], v[min(kk + 1, n - 1)]
-                row[f"p{lab}"] = lo + (hi - lo) * frac
-            state.remove()
-            yield pd.DataFrame([row])
-            return
-        vals = list(tuple(state.get)[0]) if state.exists else []
-        for pdf in pdfs:
-            vals.extend(pdf["v"].to_numpy(dtype=np.float64).tolist())
-        if vals:
-            state.update((vals,))
-            state.setTimeoutTimestamp(
-                max(end_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        yield from ()
-
-    return keyed.groupBy("k", "bs").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="vals array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    out = [F.col("tagname"), F.col("window.start").alias("event_time"), F.col("cnt")]
+    for p in ps:
+        pos = (F.col("cnt") - 1).cast("double") * float(p)
+        k = F.floor(pos).cast("int")
+        lo, hi = F.get("vs", k), F.get("vs", F.least(k + 1, F.col("cnt").cast("int") - 1))
+        out.append((lo + (hi - lo) * (pos - F.floor(pos))).alias(f"p{int(round(p * 100))}"))
+    return agg.select(*out)
 
 
 def topk_windows(
@@ -579,7 +534,9 @@ def topk_windows(
     best (value DESC, ts ASC tiebreak) candidates, folded per micro-batch;
     the ranked rows emit when the event-time timeout fires (watermark past
     bucket end). State per open bucket = k (value, ts) pairs — constant,
-    regardless of input rate.
+    regardless of input rate. It stays on Python state because Spark has no
+    k-argument ``max_by``: the native form would ``collect_list`` the whole
+    bucket, O(rows per bucket) state instead of O(k).
     """
     import numpy as np
     import pandas as pd

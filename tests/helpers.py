@@ -34,45 +34,3 @@ class MockGroupState:
     def setTimeoutTimestamp(self, ms):
         self.timeout = ms
 
-
-class MockListState:
-    """Stand-in for the transformWithStateInPandas ListState variable."""
-
-    def __init__(self):
-        self.rows = []
-
-    def get(self):
-        return iter([tuple(r) for r in self.rows])
-
-    def clear(self):
-        self.rows = []
-
-    def appendList(self, vals):
-        self.rows.extend(tuple(v) for v in vals)
-
-
-class MockTwsHandle:
-    """Stand-in for StatefulProcessorHandle: named ListState variables plus
-    a timer log (the processors only registerTimer; expiry is driven by the
-    test calling handleExpiredTimer directly)."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, MockListState())
-
-    def registerTimer(self, ts_ms):
-        self.timers.append(ts_ms)
-
-    def deleteTimer(self, ts_ms):
-        pass
-
-
-class MockTimerValues:
-    def __init__(self, wm_ms):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm

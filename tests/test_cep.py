@@ -1,6 +1,5 @@
 """CEP pattern-operator tests: batch semantics, batch/stream parity,
-absence (timeout) rows across micro-batches, RocksDB state store run,
-and the transformWithStateInPandas capability gate.
+absence (timeout) rows across micro-batches and a RocksDB state store run.
 """
 
 from __future__ import annotations
@@ -228,54 +227,6 @@ def test_funnel_stream_under_rocksdb(spark, cep_dirs):
     ref_m = ref[ref["matched"]].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got_m[key + ["lag_sec"]], ref_m[key + ["lag_sec"]])
     assert len(got_m) > 0
-
-
-def test_tws_gate(spark, cep_dirs):
-    clips_dir, corr_dir = cep_dirs
-    clips = src.clips_stream(spark, clips_dir)
-    corr = src.corrections_stream(spark, corr_dir)
-    if not scep.tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            scep.tws_funnel(clips, corr)
-        return
-    # environment has protobuf: the TWS plan must at least construct
-    with scep.scoped_rocksdb_state(spark):
-        res = scep.tws_funnel(clips, corr)
-        assert res.isStreaming
-
-
-def test_tws_funnel_parity_with_apply_in_pandas(spark, cep_dirs):
-    """Full-run parity: the transformWithStateInPandas funnel must emit
-    EXACTLY the rows the applyInPandasWithState funnel emits on the same
-    stream — matches, absence alerts, lags, everything (the 'identical
-    semantics' claim, held end-to-end instead of by docstring)."""
-    if not scep.tws_available():
-        pytest.skip("google.protobuf unavailable and no on-disk shim")
-    clips_dir, corr_dir = cep_dirs
-    with scep.scoped_rocksdb_state(spark):
-        res = scep.tws_funnel(
-            src.clips_stream(spark, clips_dir),
-            src.corrections_stream(spark, corr_dir),
-            within_sec=60,
-            watermark_sec=5,
-        )
-        q = (
-            res.writeStream.format("memory")
-            .queryName("t_tws_parity")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.table("t_tws_parity").toPandas()
-    ref = _run_funnel(spark, clips_dir, corr_dir, "t_tws_parity_ref")
-    key = ["clip_id", "a_ts"]
-    cols = key + ["b_ts", "lag_sec", "matched"]
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(key).reset_index(drop=True),
-        ref[cols].sort_values(key).reset_index(drop=True),
-    )
-    assert len(got) > 0 and got["matched"].any()
 
 
 def test_funnel_state_survives_checkpoint_restart(spark, tmp_path):
@@ -652,65 +603,3 @@ def test_funnel_strict_checkpoint_restart(spark, tmp_path):
     second = start()
     u1 = second[second["clip_id"] == "u1"]
     assert len(u1) == 1 and u1.iloc[0]["lag_sec"] == 10 and bool(u1.iloc[0]["matched"])
-
-
-def test_tws_funnel_parity_on_randomized_stream(spark, tmp_path):
-    """Second live-RocksDB TWS equivalence point, on a seeded RANDOM layout
-    (lags straddling the horizon, duplicate corrections, multi-correction
-    clips) rather than the synth fixture's regular cadence — the live twin
-    of the mock-driven property test in tests/test_property.py."""
-    if not scep.tws_available():
-        pytest.skip("google.protobuf unavailable and no on-disk shim")
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    n = 300
-    clips_dir, corr_dir = str(tmp_path / "clips"), str(tmp_path / "corr")
-    pdf = synth.make_clips_pdf(n)
-    pdf["ingest_ts"] = [t(int(s)) for s in rng.integers(0, 600, size=n)]
-    spark.createDataFrame(pdf, schema=synth.CLIPS_SCHEMA).coalesce(2).write.parquet(
-        clips_dir
-    )
-    # ~1.5 corrections per clip on average, lags -30..180 s around A
-    picks = rng.integers(0, n, size=int(n * 1.5))
-    corr = pd.DataFrame(
-        {
-            "clip_id": [pdf["clip_id"].iloc[j] for j in picks],
-            "corrected_transcript": ["fix"] * len(picks),
-            "correction_ts": [
-                pdf["ingest_ts"].iloc[j] + timedelta(seconds=int(lag))
-                for j, lag in zip(picks, rng.integers(-30, 180, size=len(picks)))
-            ],
-        }
-    )
-    spark.createDataFrame(corr, schema=synth.CORRECTIONS_SCHEMA).coalesce(
-        2
-    ).write.parquet(corr_dir)
-
-    def run(factory, name):
-        res = factory(
-            src.clips_stream(spark, clips_dir),
-            src.corrections_stream(spark, corr_dir),
-            within_sec=60,
-            watermark_sec=5,
-        )
-        q = (
-            res.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(name).toPandas()
-
-    with scep.scoped_rocksdb_state(spark):
-        got = run(scep.tws_funnel, "t_tws_rand")
-    ref = run(scep.funnel_stream, "t_apply_rand")
-    key = ["clip_id", "a_ts"]
-    cols = key + ["b_ts", "lag_sec", "matched"]
-    pd.testing.assert_frame_equal(
-        got[cols].sort_values(key).reset_index(drop=True),
-        ref[cols].sort_values(key).reset_index(drop=True),
-    )
-    assert got["matched"].any() and (~got["matched"]).any()

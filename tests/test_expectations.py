@@ -9,6 +9,8 @@ thresholds, strict bounds, and all-occurrences uniqueness counting.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pandas as pd
 import pytest
 
@@ -1209,6 +1211,24 @@ def test_strftime_format_expectation(spark):
             "expect_column_values_to_match_strftime_format",
             {"column": "d", "strftime_format": "%Q"},
         )
+    # %z takes every offset form Python's strptime takes: ±HHMM, ±HH:MM, Z
+    fmt = "%Y-%m-%d %H:%M:%S%z"
+    zs = ["2024-01-02 03:04:05+0530", "2024-01-02 03:04:05-05:30",
+          "2024-01-02 03:04:05Z", "2024-01-02 03:04:05+5", "2024-01-02 03:04:05"]
+    ok = []
+    for z in zs:
+        try:
+            datetime.strptime(z, fmt)
+            ok.append(True)
+        except ValueError:
+            ok.append(False)
+    assert ok == [True, True, True, False, False]
+    r = _one(
+        spark.createDataFrame(pd.DataFrame({"d": zs})),
+        "expect_column_values_to_match_strftime_format",
+        {"column": "d", "strftime_format": fmt},
+    )
+    assert r["result"]["unexpected_count"] == 2
 
 
 def test_dateutil_parseable_expectation(spark):

@@ -3,9 +3,8 @@
 Runs the same kill/resume + replay-idempotency contract the parquet
 MergeSink suite proves (tests/test_sink.py) through a REAL `MERGE INTO`
 against a local hadoop catalog. The sandbox has no iceberg-spark-runtime
-jar, so the whole module skips cleanly there (same convention as the
-transformWithStateInPandas gate in tests/test_cep.py); on any cluster image
-that carries the jar it runs without modification.
+jar, so the whole module skips cleanly there; on any cluster image that
+carries the jar it runs without modification.
 
 Reference parity: delta_merge.py:212-344 (broadcast merge + retry),
 pcdm_to_delta.py:193-253 (CDC verbs, partition-pruned merge condition).

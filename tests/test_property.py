@@ -239,55 +239,6 @@ def test_funnel_fn_matches_brute_force_any_batching(evs, within, n_batches):
     assert not got.duplicated(subset=["a_ts"]).any()
 
 
-# ------------------------------------------------- CEP funnel, TWS substrate
-
-
-@settings(max_examples=60, deadline=None)
-@given(events_strategy, st.sampled_from([1, 5, 60]), st.integers(1, 5))
-def test_tws_processor_matches_brute_force_any_batching(evs, within, n_batches):
-    """The same generator that covers _make_funnel_fn, run through the
-    transformWithStateInPandas FunnelProcessor with mock handle/ListState —
-    the Spark-4 substrate's state machine gets equivalence coverage beyond
-    the single live parity test (tests/test_cep.py)."""
-    import pandas as pd
-
-    from core_spark.streaming.cep import _make_funnel_processor, tws_available
-    from helpers import MockTimerValues, MockTwsHandle
-
-    if not tws_available():
-        pytest.skip("no protobuf runtime; TWS substrate cannot import")
-
-    evs = sorted(evs)
-    cls, _schema = _make_funnel_processor(within)
-    proc = cls()
-    proc.init(MockTwsHandle())
-    outs = []
-    wm = 0
-    size = max(1, len(evs) // n_batches)
-    for i in range(0, len(evs), size):
-        chunk = evs[i : i + size]
-        pdf = pd.DataFrame(
-            {
-                "ts": pd.to_datetime([t * 10**6 for t, _ in chunk]),
-                "is_a": [a for _, a in chunk],
-            }
-        )
-        outs.extend(list(proc.handleInputRows(("k",), iter([pdf]), MockTimerValues(wm))))
-        wm = max(wm, chunk[-1][0])
-    outs.extend(list(proc.handleExpiredTimer(("k",), MockTimerValues(10**12), None)))
-
-    got = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-        columns=["clip_id", "a_ts", "b_ts", "lag_sec", "matched"]
-    )
-    expected = _brute_force_matches(evs, within)
-    got_map = {
-        int(r["a_ts"].value // 10**6): (int(r["b_ts"].value // 10**6) if r["matched"] else None)
-        for _, r in got.iterrows()
-    }
-    assert got_map == expected
-    assert not got.duplicated(subset=["a_ts"]).any()
-
-
 # ---- expectations engine vs a direct pandas reference implementation ----
 
 _opt_floats = st.lists(

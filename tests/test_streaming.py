@@ -557,6 +557,27 @@ def test_percentile_windows_stream_exact(spark, tmp_path):
         assert g["p50"] == e["p50"] and g["p95"] == e["p95"], key
 
 
+def test_percentile_windows_holds_state_in_spark(spark, tmp_path):
+    """Streaming percentiles are one native stateful aggregate: the plan
+    keeps each open bucket in Spark's state store through a hash
+    aggregate, never in a Python grouped-state operator."""
+    import io
+    from contextlib import redirect_stdout
+    from datetime import datetime
+
+    d = str(tmp_path / "pctl_plan")
+    schema = "tag string, ts timestamp, v double"
+    spark.createDataFrame([("a", datetime(2024, 1, 1), 1.0)], schema).write.parquet(d)
+    stream = spark.readStream.schema(schema).parquet(d)
+    res = sw.percentile_windows(stream, "tag", "ts", "v", 60, ps=(0.5, 0.95))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        res.explain()
+    plan = buf.getvalue()
+    assert "StateStoreSave" in plan and "HashAggregate" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+
 def test_topk_windows_stream_matches_batch_ranking(spark, tmp_path):
     """O(k)-state streaming top-k equals the batch row_number ranking on
     watermark-closed buckets, including the value-DESC/ts-ASC tiebreak."""

@@ -58,30 +58,43 @@ def test_quality_threshold_partition_is_total(texts):
 
 
 def test_repetition_metrics(spark):
+    import duckdb
     import pandas as pd
     from pyspark.sql import functions as F
 
     from core_spark.functions import text as tx
+    from core_spark.registry import SQL_TEXT_REPETITION
 
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "t": [
-                    "a b a b a",      # words: 5, distinct 2; 2grams: [a b, b a, a b, b a] -> 4, distinct 2
-                    "x y z",          # no repetition
-                    "solo",           # 1 word, 0 2-grams -> NULL 2gram frac
-                    "   ",            # whitespace-only -> 0 words, NULLs
-                ]
-            }
-        )
+    documents = pd.DataFrame(
+        {
+            "doc_id": range(7),
+            "text": [
+                "a b a b a",      # words: 5, distinct 2; 2grams: [a b, b a, a b, b a] -> 4, distinct 2
+                "x y z",          # no repetition
+                "solo",           # 1 word, 0 2-grams -> NULL 2gram frac
+                "   ",            # whitespace-only -> 0 words, NULLs
+                "",               # empty -> 0 words, NULLs
+                "\tp q p\n",      # non-space whitespace at both ends
+                " \n ",           # whitespace-only, not just spaces
+            ],
+        }
     )
-    m = tx.repetition_metrics(F.col("t"))
-    rows = df.select(
-        m["words"].alias("w"),
-        F.round(m["frac_dup_words"], 6).alias("fw"),
-        F.round(m["frac_dup_2grams"], 6).alias("fg"),
-    ).collect()
-    assert (rows[0]["w"], rows[0]["fw"], rows[0]["fg"]) == (5, 0.6, 0.5)
-    assert (rows[1]["w"], rows[1]["fw"], rows[1]["fg"]) == (3, 0.0, 0.0)
-    assert rows[2]["w"] == 1 and rows[2]["fw"] == 0.0 and rows[2]["fg"] is None
-    assert rows[3]["w"] == 0 and rows[3]["fw"] is None and rows[3]["fg"] is None
+    m = tx.repetition_metrics(F.col("text"))
+    rows = [
+        tuple(r)
+        for r in spark.createDataFrame(documents).orderBy("doc_id").select(
+            "doc_id",
+            m["words"].alias("w"),
+            F.round(m["frac_dup_words"], 6).alias("fw"),
+            F.round(m["frac_dup_2grams"], 6).alias("fg"),
+        ).collect()
+    ]
+    assert rows[0][1:] == (5, 0.6, 0.5)
+    assert rows[1][1:] == (3, 0.0, 0.0)
+    assert rows[2][1:] == (1, 0.0, None)
+    assert rows[3][1:] == rows[4][1:] == rows[6][1:] == (0, None, None)
+    assert rows[5][1:] == (3, round(1 / 3, 6), 0.0)
+    # the text_repetition entry's DuckDB oracle agrees on every document
+    con = duckdb.connect()
+    con.register("documents", documents)
+    assert con.sql(SQL_TEXT_REPETITION + " ORDER BY 1").fetchall() == rows

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import json
+import os
+import sys
 
 import pytest
 
@@ -31,6 +33,14 @@ def test_driver_jvm_faults_heap_in_on_demand(spark):
     assert "-XX:+AlwaysPreTouch" not in args, args
     assert "-XX:+UseParallelGC" in args, args
     assert any(a.startswith("-Xms") for a in args), args
+
+
+def test_get_spark_leaves_environment_alone(spark):
+    # the fixture's get_spark must not switch off protobuf's version check
+    # process-wide nor put a shim directory on the workers' path
+    assert not [k for k in os.environ if k.startswith("TEMPORARILY_DISABLE_PROTOBUF")]
+    paths = sys.path + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    assert not [p for p in paths if "core_spark_pbshim" in p], paths
 
 
 def test_adls_gen2_spn_connect_sets_oauth_chain(spark):
