@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -214,13 +215,6 @@ _DECODERS = {
     "alaw": alaw_decode,
     "adpcm": adpcm_decode,
 }
-#: encoded length -> decoded sample count, keyed like _DECODERS
-_SAMPLE_COUNT = {
-    "pcm16": lambda nbytes: nbytes // 2,
-    "ulaw": lambda nbytes: nbytes,
-    "alaw": lambda nbytes: nbytes,
-    "adpcm": lambda nbytes: max(0, nbytes - 4) * 2,
-}
 _EMPTY_F32 = np.empty(0, dtype=np.float32)
 
 
@@ -294,19 +288,23 @@ def clip_peak(data: pd.Series, codec: pd.Series) -> pd.Series:
     return _reduce_clips(data, codec, lambda p: float(np.max(np.abs(p))) if len(p) else 0.0)
 
 
-@F.pandas_udf(T.IntegerType())
-def decoded_samples(data: pd.Series, codec: pd.Series) -> pd.Series:
+def decoded_samples(data: Column | str, codec: Column | str) -> Column:
     """Sample count of the decoded clip — with sr_hz gives decoded duration;
-    mismatch vs dur_ms flags a corrupt payload. Same error/null surface as
-    the decoders: unknown codec -> ValueError, null bytes -> 0 samples."""
-    out = []
-    for b, c in zip(data.to_numpy(), codec.to_numpy()):
-        try:
-            count = _SAMPLE_COUNT[c]
-        except KeyError:
-            raise ValueError(f"unknown codec: {c!r}") from None
-        out.append(0 if b is None else count(len(b)))
-    return pd.Series(out).astype("int32")
+    mismatch vs dur_ms flags a corrupt payload. A native expression over
+    the encoded length (nothing is decoded, so no Python UDF runs), keyed
+    like ``_DECODERS``; same error/null surface as the decoders: an unknown
+    or NULL codec raises ``unknown codec``, NULL bytes give 0 samples."""
+    n = F.length(data)
+    c = F.col(codec) if isinstance(codec, str) else codec
+    count = (
+        F.when(c == "pcm16", F.floor(n / 2))
+        .when(c.isin("ulaw", "alaw"), n)
+        .when(c == "adpcm", F.greatest(n - 4, F.lit(0)) * 2)
+        .otherwise(
+            F.raise_error(F.concat(F.lit("unknown codec: "), F.coalesce(c, F.lit("NULL"))))
+        )
+    )
+    return F.coalesce(count, F.lit(0)).cast("int")
 
 
 _N_FFT = 512

@@ -61,13 +61,12 @@ def _decode_view_i16(view: np.ndarray, codec: str) -> np.ndarray:
     raise ValueError(f"unknown codec: {codec!r}")
 
 
-def spectral_features_arrow(df: DataFrame, prefix_len: int = 2) -> DataFrame:
+def spectral_features_arrow(df: DataFrame) -> DataFrame:
     """clips frame -> per-clip DSP features, zero-copy from Arrow buffers.
 
     Output drops ``bytes``/``transcript`` (shuffles carry scalars only) and
-    keeps clip_id, ingest_ts, sr_hz, dur_ms plus the feature columns; the
-    shard key ``prefix`` is added JVM-side afterwards so the Python stage
-    stays a pure map.
+    keeps clip_id, ingest_ts, sr_hz, dur_ms plus the feature columns
+    (streaming/windows.clip_features_spectral adds the shard key).
     """
     keep = ["clip_id", "ingest_ts", "sr_hz", "dur_ms"]
     # prune BEFORE the Arrow stage: mapInArrow consumes its whole input row,
@@ -98,7 +97,4 @@ def spectral_features_arrow(df: DataFrame, prefix_len: int = 2) -> DataFrame:
                 cols, names=keep + [n_ for n_, _ in FEATURE_FIELDS]
             )
 
-    from pyspark.sql import functions as F
-
-    out = df.mapInArrow(extract, out_schema)
-    return out.withColumn("prefix", F.substring("clip_id", 1, prefix_len))
+    return df.mapInArrow(extract, out_schema)

@@ -445,6 +445,11 @@ def percentiles(
     (aggregate implementations are free to associate the interpolation
     differently by a ULP).
 
+    NULL values are skipped as by any SQL aggregate (the rule of the
+    streaming ``percentile_windows``): ``cnt`` counts the non-NULL values,
+    NULLs rank last so only the non-NULL ones are picked, and an all-NULL
+    tag gives ``cnt`` 0 and NULL percentiles.
+
     Scale: one shuffle on the tag key + per-tag sort (the same cost as any
     exact quantile); rank/count via a tag-partitioned window, then a
     conditional hash-agg picks the two bracketing rows per p. No global
@@ -452,13 +457,13 @@ def percentiles(
     ``F.percentile_approx`` remains the cheap path.
     """
     base = scan(df, spec, start, end, tags, include_bad)
-    w = Window.partitionBy(TAG).orderBy(VAL)
+    w = Window.partitionBy(TAG).orderBy(F.col(VAL).asc_nulls_last())
     wn = Window.partitionBy(TAG)
     r = base.select(
         TAG,
         F.col(VAL).cast("double").alias("v"),
         (F.row_number().over(w) - F.lit(1)).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
+        F.count(VAL).over(wn).alias("n"),
     )
     labels = [str(int(round(p * 100))) for p in ps]
     aggs = [F.max("n").alias("n")]

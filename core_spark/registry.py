@@ -298,8 +298,8 @@ def _pctl_sql(ps=(0.5, 0.9, 0.95, 0.99)) -> str:
     return f"""
 WITH s AS (SELECT tagname, CAST(value AS DOUBLE) AS v FROM ({_SCAN})),
 r AS (SELECT tagname, v,
-        ROW_NUMBER() OVER (PARTITION BY tagname ORDER BY v) - 1 AS rn,
-        COUNT(*) OVER (PARTITION BY tagname) AS n FROM s),
+        ROW_NUMBER() OVER (PARTITION BY tagname ORDER BY v NULLS LAST) - 1 AS rn,
+        COUNT(v) OVER (PARTITION BY tagname) AS n FROM s),
 g AS (SELECT tagname, MAX(n) AS n,
   {', '.join(pick)}
   FROM r GROUP BY tagname)
@@ -1541,7 +1541,7 @@ def q_stream_tumbling_energy(spark, sf_dir):
         synth.write_clips_parquet(spark, _os.path.join(d, "clips"), 2000, n_files=4)
     stream = _src.clips_stream(spark, _os.path.join(d, "clips"))
     q = (
-        _sw.tumbling_energy(stream, 60)
+        _sw.tumbling_energy(_sw.clip_features(stream), 60)
         .writeStream.format("memory")
         .queryName("entry_stream_tumbling")
         .outputMode("complete")
@@ -1558,10 +1558,11 @@ def q_stream_sessionize(spark, sf_dir):
     Rows-only: np.interp session interpolation is not SQL-expressible."""
     from . import synth
     from .streaming import sessions as _ss
+    from .streaming import windows as _sw
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     clips = synth.clips_df(spark, 2000)
-    return _ss.sessionize(clips, gap_sec=300)
+    return _ss.sessionize(_sw.clip_features(clips), gap_sec=300)
 
 
 def q_audio_vad_stats(spark, sf_dir):
@@ -1848,7 +1849,7 @@ def q_stream_sliding_energy(spark, sf_dir):
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     clips = synth.clips_df(spark, 2000)
-    out = _sw.tumbling_energy(clips, window_sec=120, slide_sec=60)
+    out = _sw.tumbling_energy(_sw.clip_features(clips), window_sec=120, slide_sec=60)
     return out.withColumn("avg_energy", F.round("avg_energy", 6))
 
 
@@ -1859,7 +1860,7 @@ def q_stream_session_native(spark, sf_dir):
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     clips = synth.clips_df(spark, 2000)
-    out = _sw.session_windows_native(clips, gap_sec=300)
+    out = _sw.session_windows_native(_sw.clip_features(clips), gap_sec=300)
     return out.withColumn("avg_energy", F.round("avg_energy", 6))
 
 
@@ -2414,7 +2415,6 @@ def q_stream_twa(spark, sf_dir):
         _EV_EVERY,
         watermark_sec=_EV_WM,
         grace_sec=60,
-        featured=True,
     )
     out = _run_entry_stream(res, "ev_stream_twa")
     wm = _events_wm_s(spark, sf_dir)
@@ -2472,7 +2472,6 @@ def q_stream_interpolate(spark, sf_dir):
         _EV_EVERY,
         watermark_sec=_EV_WM,
         method="ffill",
-        featured=True,
     )
     out = _run_entry_stream(res, "ev_stream_interp")
     wm = _events_wm_s(spark, sf_dir)
@@ -2532,7 +2531,6 @@ def q_stream_ohlc(spark, sf_dir):
         _events_feature_stream(spark, sf_dir),
         _EV_EVERY,
         watermark_sec=_EV_WM,
-        featured=True,
     )
     out = _run_entry_stream(res, "ev_stream_ohlc")
     wm = _events_wm_s(spark, sf_dir)
@@ -2574,7 +2572,6 @@ def q_stream_summary(spark, sf_dir):
         _events_feature_stream(spark, sf_dir, scale100=True),
         _EV_EVERY,
         watermark_sec=_EV_WM,
-        featured=True,
     )
     out = _run_entry_stream(res, "ev_stream_summary")
     wm = _events_wm_s(spark, sf_dir)
@@ -2682,8 +2679,8 @@ WITH e AS ({_EV_SCAN}),
 wm AS (SELECT {_EV_WM_SQL} AS wm_s FROM e),
 b AS (SELECT tagname, {_EV_BS} AS bs, v FROM e),
 r AS (SELECT tagname, bs, v,
-        ROW_NUMBER() OVER (PARTITION BY tagname, bs ORDER BY v) - 1 AS rn,
-        COUNT(*) OVER (PARTITION BY tagname, bs) AS n FROM b),
+        ROW_NUMBER() OVER (PARTITION BY tagname, bs ORDER BY v NULLS LAST) - 1 AS rn,
+        COUNT(v) OVER (PARTITION BY tagname, bs) AS n FROM b),
 g AS (SELECT tagname, bs, MAX(n) AS n,
   {', '.join(pick)}
   FROM r GROUP BY tagname, bs)
@@ -2707,7 +2704,6 @@ def q_stream_circular_avg(spark, sf_dir):
         lo=0.0,
         hi=20.0,
         watermark_sec=_EV_WM,
-        featured=True,
     )
     out = _run_entry_stream(res, "ev_stream_circ")
     wm = _events_wm_s(spark, sf_dir)

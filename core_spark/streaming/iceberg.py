@@ -27,8 +27,8 @@ line's build. On a cluster:
 Exactly-once: foreachBatch is at-least-once, but (a) the MERGE keys are
 deterministic, so a replayed micro-batch MERGEs identical rows into an
 identical state (idempotent), and (b) Iceberg's snapshot isolation gives the
-read-modify-write atomicity the parquet stand-in had to fake with
-localCheckpoint barriers. A committed-batch property on the snapshot
+read-modify-write atomicity that the parquet stand-in gets from dynamic
+partition overwrite's commit-time swap of staged partitions. A committed-batch property on the snapshot
 (`batch-id`) additionally lets replays short-circuit without a write, the
 Delta `txnAppId/txnVersion` convention.
 """

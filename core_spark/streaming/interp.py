@@ -53,7 +53,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .twa import _round6
-from .windows import clip_features
 
 OUTPUT_SCHEMA = "prefix string, event_time timestamp, value double, filled boolean"
 STATE_SCHEMA = (
@@ -193,22 +192,17 @@ def interp_stream(
     every_seconds: int = 60,
     watermark_sec: int = 30,
     method: str = "linear",
-    prefix_len: int = 2,
-    featured: bool = False,
 ) -> DataFrame:
-    """Streaming resample-and-fill over the clip stream (value = clip
-    energy): non-empty buckets emit their average, gap buckets emit the
-    batch verb's fill once decidable. Batch frames run the plain batch
-    verb shape via groupBy+window functions in operators/timeseries —
-    that is the parity oracle (tests/test_streaming_interp.py).
-
-    ``featured=True``: df already carries (prefix, ingest_ts, energy) — any
-    keyed tag/ts/value stream rides the same stateful operator without the
-    clip decode stage. Feeding integer-valued energies (e.g. a fixed-point
-    2-decimal scale) makes the bucket sums exact in any accumulation order,
-    which is what the registry's DuckDB-oracled stream_interpolate does."""
-    src = df if featured else clip_features(df, prefix_len)
-    feats = src.select("prefix", "ingest_ts", "energy")
+    """Streaming resample-and-fill over a keyed value stream (prefix,
+    ingest_ts, energy), e.g. the clip feature frame (windows.clip_features,
+    value = clip energy): non-empty buckets emit their average, gap buckets
+    emit the batch verb's fill once decidable. Batch frames should use the
+    plain batch verb in operators/timeseries — that is the parity oracle
+    (tests/test_streaming_interp.py). Feeding integer-valued energies (e.g.
+    a fixed-point 2-decimal scale) makes the bucket sums exact in any
+    accumulation order, which is what the registry's DuckDB-oracled
+    stream_interpolate does."""
+    feats = df.select("prefix", "ingest_ts", "energy")
     if not df.isStreaming:
         raise ValueError(
             "batch frames should use operators/timeseries.interpolate — "

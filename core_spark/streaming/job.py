@@ -40,7 +40,9 @@ def build_args(argv=None):
                         "written as batches*files_per_trigger files so every "
                         "micro-batch has enough splits to keep all cores busy")
     p.add_argument("--spectral", type=int, default=1,
-                   help="1: framed-FFT feature pass (production-shaped heavy path)")
+                   help="1: framed-FFT feature pass for tumbling/sliding "
+                        "(production-shaped heavy path); the other clip modes "
+                        "run the energy pass")
     p.add_argument("--max-partition-mb", type=int, default=20,
                    help="spark.sql.files.maxPartitionBytes in MB. Input files "
                         "are ~19 MB (synth writes n_clips/n_files ~4.3k clips "
@@ -82,6 +84,20 @@ def _barrier(barrier_dir: str, count: int, timeout_sec: float = 600.0) -> None:
             return
         time.sleep(0.1)
     # fail open: a crashed sibling must not hang the whole fleet
+
+
+def feature_pass(mode: str, spectral: int):
+    """The clip decode pass a mode runs, chosen once for the warm-up and
+    the measured run: the framed-FFT pass for tumbling/sliding with
+    ``--spectral 1``, the energy pass for every other clip mode, and None
+    for join, whose plan decodes nothing."""
+    from core_spark.streaming import windows as sw
+
+    if mode == "join":
+        return None
+    if spectral and mode in ("tumbling", "sliding"):
+        return sw.clip_features_spectral
+    return sw.clip_features
 
 
 def main(argv=None) -> dict:
@@ -135,6 +151,7 @@ def main(argv=None) -> dict:
 
     files_per_trigger = a.files_per_trigger if a.batches > 1 else None
     stream = src.clips_stream(spark, in_dir, max_files_per_trigger=files_per_trigger)
+    features = feature_pass(a.mode, a.spectral)
 
     # Warm-up (untimed): run one micro-batch-sized slice of the same dataflow
     # in batch mode so Python workers spawn, heaps reach steady state, and
@@ -149,39 +166,33 @@ def main(argv=None) -> dict:
     warm_files = warm_files[: max(a.files_per_trigger, 8)]
     if warm_files:
         wdf = spark.read.schema(synth.CLIPS_SCHEMA).parquet(*warm_files)
-        if a.mode in ("tumbling", "sliding"):
+        if features is None:
+            # join decodes nothing: warm the scan of every column its plan
+            # reads (all but bytes) with no Python worker
+            wdf.drop("bytes").write.format("noop").mode("overwrite").save()
+        elif a.mode in ("tumbling", "sliding"):
             sw.tumbling_energy(
-                wdf, a.window_sec, None, 30, a.salt or None, spectral=bool(a.spectral)
+                features(wdf), a.window_sec, None, 30, a.salt or None
             ).agg(F.sum("n_clips")).collect()
         else:
-            # sessions/join modes: the decode feature pass is the dominant
-            # cold cost (worker spawn + codegen); warm exactly that path
-            feats = (
-                sw.clip_features_spectral(wdf)
-                if a.spectral
-                else sw.clip_features(wdf)
-            )
-            feats.agg(F.sum("energy")).collect()
+            # sessions modes: the decode feature pass is the dominant cold
+            # cost (worker spawn + codegen); warm exactly that path
+            features(wdf).agg(F.sum("energy")).collect()
 
     if a.barrier_dir:
         _barrier(a.barrier_dir, a.barrier_count)
 
-    if a.mode == "tumbling":
+    if a.mode in ("tumbling", "sliding"):
+        slide = a.window_sec // 3 if a.mode == "sliding" else None
         result = sw.tumbling_energy(
-            stream, a.window_sec, None, 30, a.salt or None, spectral=bool(a.spectral)
-        )
-        keys = ["window_start", "prefix"]
-    elif a.mode == "sliding":
-        result = sw.tumbling_energy(
-            stream, a.window_sec, a.window_sec // 3, 30, a.salt or None,
-            spectral=bool(a.spectral),
+            features(stream), a.window_sec, slide, 30, a.salt or None
         )
         keys = ["window_start", "prefix"]
     elif a.mode == "native_sessions":
-        result = sw.session_windows_native(stream, a.gap_sec, 30)
+        result = sw.session_windows_native(features(stream), a.gap_sec, 30)
         keys = ["session_start", "prefix"]
     elif a.mode == "sessions":
-        result = ss.sessionize(stream, a.gap_sec, 30)
+        result = ss.sessionize(features(stream), a.gap_sec, 30)
         keys = ["session_start", "prefix"]
     else:  # join
         corr_dir = os.path.join(work, "corrections")

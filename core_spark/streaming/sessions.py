@@ -19,12 +19,12 @@ Why applyInPandasWithState and not session_window(): the native operator
 emit gap statistics — per-group sequential logic that a hash aggregate
 cannot express, Arrow-batched per the north rule (never per-row Python).
 
-State keys are prefixes (16 at test scale; at 10^12 clips use a longer
-prefix_len so group count ~ O(10k) and each group's open-session state stays
-small — state carries only the open session's points, closed sessions are
-emitted and dropped). Out-of-order rows within the watermark are folded into
-the open session (gap clamped at 0 for regressing timestamps); availableNow
-replays are exact because each group sees its rows in one batch.
+State keys are prefixes (16 at test scale; at 10^12 clips raise
+windows.PREFIX_LEN so group count ~ O(10k) and each group's open-session
+state stays small — state carries only the open session's points, closed
+sessions are emitted and dropped). Out-of-order rows within the watermark are
+folded into the open session (gap clamped at 0 for regressing timestamps);
+availableNow replays are exact because each group sees its rows in one batch.
 """
 
 from __future__ import annotations
@@ -35,8 +35,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .windows import clip_features
 
 OUTPUT_SCHEMA = (
     "prefix string, session_start timestamp, session_end timestamp, "
@@ -185,19 +183,17 @@ def sessionize(
     df: DataFrame,
     gap_sec: int = 300,
     watermark_sec: int = 30,
-    prefix_len: int = 2,
     grid_ms: int = 1000,
 ) -> DataFrame:
-    """Stateful session detection over the clip stream.
+    """Stateful session detection over a clip feature frame (prefix,
+    ingest_ts, energy, dur_ms; windows.clip_features).
 
     Streaming: applyInPandasWithState with event-time timeouts (emits a
     session when a gap appears or the watermark passes last+gap). Batch:
     same math via applyInPandas; the complete input means every session is
     closed, so all are emitted — this is the oracle for the streaming path.
     """
-    feats = clip_features(df, prefix_len).select(
-        "prefix", "ingest_ts", "energy", "dur_ms"
-    )
+    feats = df.select("prefix", "ingest_ts", "energy", "dur_ms")
     if not df.isStreaming:
         return feats.groupBy("prefix").applyInPandas(
             _batch_session_fn(gap_sec, grid_ms), schema=OUTPUT_SCHEMA

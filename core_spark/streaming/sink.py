@@ -139,7 +139,7 @@ class MergeSink:
         parts = list(per_part)
         if not parts:
             self._mark_committed(batch_id)
-            self._write_lineage(batch_id, {"rows": 0, "partitions": []})
+            self._write_lineage(batch_id, {"rows": 0, "partitions": {}})
             return
         upserts = batch
         if self.op_col is not None:
@@ -168,10 +168,17 @@ class MergeSink:
             keep = existing.join(
                 F.broadcast(batch.select(self.key_cols)), self.key_cols, "left_anti"
             )
-            # materialize BEFORE the overwrite below: the plan reads the very
-            # partition files the write replaces (Iceberg/Delta MERGE get this
-            # isolation from snapshots; parquet needs the explicit barrier)
-            merged = keep.unionByName(upserts).localCheckpoint()
+            # no barrier before the overwrite below, although the plan reads
+            # the very partition files the write replaces: dynamic partition
+            # overwrite stages its output under .spark-staging-* and swaps
+            # the touched partitions in only at job commit, after every task
+            # has read the old files (Iceberg/Delta MERGE get the same
+            # isolation from snapshots). The CDC path still checkpoints: its
+            # empty-partition check below collects ``merged`` AFTER the
+            # write, and would otherwise re-read the rewritten table.
+            merged = keep.unionByName(upserts)
+            if self.op_col is not None:
+                merged = merged.localCheckpoint()
         else:
             merged = upserts
         (

@@ -61,8 +61,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windows import clip_features
-
 OUTPUT_SCHEMA = (
     "prefix string, event_time timestamp, value double, good_sec double, late boolean"
 )
@@ -273,21 +271,16 @@ def twa_stream(
     watermark_sec: int = 30,
     grace_sec: int = 60,
     step: bool = False,
-    prefix_len: int = 2,
-    featured: bool = False,
 ) -> DataFrame:
-    """Streaming TWA over the clip stream, keyed by clip_id prefix, value =
-    decoded clip energy. Batch frames run the identical integration in one
+    """Streaming TWA over a keyed value stream (prefix, ingest_ts, energy):
+    the clip feature frame (windows.clip_features, value = decoded clip
+    energy) or any tag/ts/value stream (registry stream_twa runs it over
+    the events table with a DuckDB oracle replicating the sub-segment
+    integration). Batch frames run the identical integration in one
     applyInPandas pass (every bucket closes) — the oracle the parity tests
     compare against, which itself equals operators/timeseries
-    .time_weighted_average on the same series.
-
-    ``featured=True``: df already carries (prefix, ingest_ts, energy) — any
-    keyed tag/ts/value stream rides the same stateful operator without the
-    clip decode stage (registry stream_twa runs it over the events table
-    with a DuckDB oracle replicating the sub-segment integration)."""
-    src = df if featured else clip_features(df, prefix_len)
-    feats = src.select("prefix", "ingest_ts", "energy")
+    .time_weighted_average on the same series."""
+    feats = df.select("prefix", "ingest_ts", "energy")
     if not df.isStreaming:
         def batch_fn(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("ingest_ts")

@@ -22,17 +22,26 @@ from pyspark.sql import functions as F
 from ..functions import audio as au
 
 _PI = 3.141592653589793
+#: leading clip_id chars that form the shard key ``prefix`` (SURVEY §1.4:
+#: TagName -> clip_id prefix); 2 chars give 16 keys at test scale
+PREFIX_LEN = 2
 
 
-def clip_features(df: DataFrame, prefix_len: int = 2) -> DataFrame:
+def _prefix() -> Column:
+    return F.substring("clip_id", 1, PREFIX_LEN)
+
+
+def clip_features(df: DataFrame) -> DataFrame:
     """Decode-derived per-clip features; identical for batch and stream.
 
-    prefix = leading clip_id chars — the shard key (SURVEY §1.4: TagName ->
-    clip_id prefix). energy/samples are Arrow pandas UDFs (north rule:
-    vectorized only, audio.py).
+    Adds the shard key ``prefix`` and the decoded ``energy`` (an Arrow pandas
+    UDF, north rule: vectorized only, audio.py), ``n_samples`` and
+    ``decoded_ms`` (native expressions). Its output, or
+    ``clip_features_spectral``'s, is the input of every clip window operator
+    below: the caller picks the decode pass once.
     """
     return (
-        df.withColumn("prefix", F.substring("clip_id", 1, prefix_len))
+        df.withColumn("prefix", _prefix())
         .withColumn("energy", au.clip_energy("bytes", "codec"))
         .withColumn("n_samples", au.decoded_samples("bytes", "codec"))
         .withColumn(
@@ -42,20 +51,26 @@ def clip_features(df: DataFrame, prefix_len: int = 2) -> DataFrame:
     )
 
 
-def clip_features_spectral(df: DataFrame, prefix_len: int = 2) -> DataFrame:
+def clip_features_spectral(df: DataFrame) -> DataFrame:
     """Heavy DSP variant of clip_features: one decode pass feeding the framed
-    512-pt FFT feature set. Runs zero-copy over Arrow record batches
-    (functions/audio_arrow.py) — per-clip work is real vectorized compute
-    with a flat working set, so throughput scales with cores instead of
-    being allocation- or scheduling-overhead-bound."""
+    512-pt FFT feature set, plus the shard key ``prefix``. Runs zero-copy
+    over Arrow record batches (functions/audio_arrow.py) — per-clip work is
+    real vectorized compute with a flat working set, so throughput scales
+    with cores instead of being allocation- or scheduling-overhead-bound.
+    The prefix is added JVM-side after the Arrow stage, which stays a pure
+    map."""
     from ..functions.audio_arrow import spectral_features_arrow
 
-    return spectral_features_arrow(df, prefix_len)
+    return spectral_features_arrow(df).withColumn("prefix", _prefix())
 
 
 def _finalize(agg: DataFrame) -> DataFrame:
-    extra = [c for c in ("sum_centroid", "sum_zcr") if c in agg.columns]
-    out = agg.select(
+    spec = [
+        (F.col(c) / F.col("n_clips")).alias(out)
+        for c, out in (("sum_centroid", "avg_centroid_hz"), ("sum_zcr", "avg_zcr"))
+        if c in agg.columns
+    ]
+    return agg.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         "prefix",
@@ -64,16 +79,8 @@ def _finalize(agg: DataFrame) -> DataFrame:
         "sum_dur_ms",
         "max_energy",
         "n_distinct_clips",
-        *extra,
+        *spec,
     )
-    if extra:
-        out = out.select(
-            "window_start", "window_end", "prefix", "n_clips", "avg_energy",
-            "sum_dur_ms", "max_energy", "n_distinct_clips",
-            (F.col("sum_centroid") / F.col("n_clips")).alias("avg_centroid_hz"),
-            (F.col("sum_zcr") / F.col("n_clips")).alias("avg_zcr"),
-        )
-    return out
 
 
 def tumbling_energy(
@@ -82,37 +89,31 @@ def tumbling_energy(
     slide_sec: int | None = None,
     watermark_sec: int = 30,
     salt_buckets: int | None = None,
-    prefix_len: int = 2,
-    spectral: bool = False,
 ) -> DataFrame:
-    """Tumbling (or sliding, if slide_sec is set) per-prefix energy windows.
+    """Tumbling (or sliding, if slide_sec is set) per-prefix energy windows
+    over a clip feature frame (``clip_features`` or
+    ``clip_features_spectral``: prefix, ingest_ts, energy, dur_ms, clip_id).
 
     Works on a stream (append mode after watermark close) and, with the same
     code path, on a batch frame (watermark is a no-op in batch) — the parity
     tests exploit exactly that (SURVEY §5 engine test plan).
 
-    ``spectral=True`` switches the per-clip feature pass to the framed-FFT
-    struct (clip_features_spectral) and adds avg_centroid_hz / avg_zcr to the
-    output — the production-shaped heavy path used by the scaling bench.
+    A spectral feature frame (it has ``spectral_centroid_hz``) also yields
+    avg_centroid_hz / avg_zcr — the production-shaped heavy path used by
+    the scaling bench.
     """
     win = f"{window_sec} seconds"
-    feats = (
-        clip_features_spectral(df, prefix_len)
-        if spectral
-        else clip_features(df, prefix_len)
-    )
-    windowed = feats.withWatermark("ingest_ts", f"{watermark_sec} seconds")
+    windowed = df.withWatermark("ingest_ts", f"{watermark_sec} seconds")
     w = (
         F.window("ingest_ts", win, f"{slide_sec} seconds")
         if slide_sec
         else F.window("ingest_ts", win)
     )
-    spec_aggs = (
-        [
-            F.sum("spectral_centroid_hz").alias("sum_centroid"),
-            F.sum("zcr").alias("sum_zcr"),
-        ]
-        if spectral
+    # (column, stage-1 partial, final) for the spectral sums
+    spec = (
+        [("spectral_centroid_hz", "p_sum_centroid", "sum_centroid"),
+         ("zcr", "p_sum_zcr", "sum_zcr")]
+        if "spectral_centroid_hz" in df.columns
         else []
     )
     if not salt_buckets:
@@ -122,35 +123,19 @@ def tumbling_energy(
             F.sum("dur_ms").alias("sum_dur_ms"),
             F.max("energy").alias("max_energy"),
             F.approx_count_distinct("clip_id").alias("n_distinct_clips"),
-            *spec_aggs,
+            *[F.sum(c).alias(out) for c, _, out in spec],
         )
         return _finalize(agg)
     # two-stage salted aggregation: state for one hot prefix is spread over
     # salt_buckets keys in stage 1; stage 2 re-windows on window_time()
     salt = F.pmod(F.xxhash64("clip_id"), F.lit(salt_buckets)).alias("salt")
-    p_spec = (
-        [
-            F.sum("spectral_centroid_hz").alias("p_sum_centroid"),
-            F.sum("zcr").alias("p_sum_zcr"),
-        ]
-        if spectral
-        else []
-    )
     partial = windowed.groupBy(w.alias("window"), "prefix", salt).agg(
         F.count(F.lit(1)).alias("p_n"),
         F.sum("energy").alias("p_sum_energy"),
         F.sum("dur_ms").alias("p_sum_dur"),
         F.max("energy").alias("p_max_energy"),
         F.approx_count_distinct("clip_id").alias("p_distinct"),
-        *p_spec,
-    )
-    f_spec = (
-        [
-            F.sum("p_sum_centroid").alias("sum_centroid"),
-            F.sum("p_sum_zcr").alias("sum_zcr"),
-        ]
-        if spectral
-        else []
+        *[F.sum(c).alias(p) for c, p, _ in spec],
     )
     # Stage 2 must fold partials of the SAME stage-1 window. Re-windowing
     # window_time() at the full window width is only correct for tumbling
@@ -170,7 +155,7 @@ def tumbling_energy(
         F.sum("p_sum_dur").alias("sum_dur_ms"),
         F.max("p_max_energy").alias("max_energy"),
         F.sum("p_distinct").alias("n_distinct_clips"),
-        *f_spec,
+        *[F.sum(p).alias(out) for _, p, out in spec],
     )
     final = final.withColumn(
         "window",
@@ -186,15 +171,13 @@ def session_windows_native(
     df: DataFrame,
     gap_sec: int = 300,
     watermark_sec: int = 30,
-    prefix_len: int = 2,
 ) -> DataFrame:
-    """Per-prefix session windows via the built-in session_window() —
-    session = contiguous clips with inter-arrival gap < gap_sec, the
-    reference's lag-gap rule (identify_missing_data_interval.py:137-141)
-    expressed as a native stateful operator."""
-    feats = clip_features(df, prefix_len).withWatermark(
-        "ingest_ts", f"{watermark_sec} seconds"
-    )
+    """Per-prefix session windows via the built-in session_window() over a
+    clip feature frame (prefix, ingest_ts, energy, dur_ms) — session =
+    contiguous clips with inter-arrival gap < gap_sec, the reference's
+    lag-gap rule (identify_missing_data_interval.py:137-141) expressed as a
+    native stateful operator."""
+    feats = df.withWatermark("ingest_ts", f"{watermark_sec} seconds")
     agg = feats.groupBy(
         F.session_window("ingest_ts", f"{gap_sec} seconds").alias("w"), "prefix"
     ).agg(
@@ -289,14 +272,13 @@ def windowed_transcript_tokens(
     df: DataFrame,
     window_sec: int = 60,
     watermark_sec: int = 30,
-    prefix_len: int = 2,
-) -> Column | DataFrame:
+) -> DataFrame:
     """Per-window transcript token counts — text feature path of the same
     windowing (documents-pipeline ops applied to the stream)."""
     from ..functions.text import token_count
 
     return (
-        df.withColumn("prefix", F.substring("clip_id", 1, prefix_len))
+        df.withColumn("prefix", _prefix())
         .withColumn("n_tokens", token_count(F.col("transcript")))
         .withWatermark("ingest_ts", f"{watermark_sec} seconds")
         .groupBy(F.window("ingest_ts", f"{window_sec} seconds").alias("window"), "prefix")
@@ -317,23 +299,17 @@ def ohlc_windows(
     df: DataFrame,
     window_sec: int = 60,
     watermark_sec: int = 30,
-    prefix_len: int = 2,
-    featured: bool = False,
 ) -> DataFrame:
-    """Per-prefix OHLC downsample of clip energy — the reference's plot
-    verb (TSQB:800-855; batch form operators/timeseries.plot_ohlc) on the
-    stream. The reference's min/max-over-struct window trick becomes the
-    native ``min_by``/``max_by`` aggregates (SURVEY §2.4), so this is a
-    plain stateful hash aggregate: one shuffle, scalar state per window.
-    (clip_id, ingest_ts) tie-breaks keep the picks deterministic.
-
-    ``featured=True``: df already carries (prefix, ingest_ts, energy) —
-    any keyed value stream (e.g. a generic tag/ts/value table) rides the
-    same operator without the clip decode stage; ties then break on
+    """Per-prefix OHLC downsample of a keyed value stream (prefix,
+    ingest_ts, energy) — the reference's plot verb (TSQB:800-855; batch
+    form operators/timeseries.plot_ohlc) on the stream. The reference's
+    min/max-over-struct window trick becomes the native ``min_by``/``max_by``
+    aggregates (SURVEY §2.4), so this is a plain stateful hash aggregate:
+    one shuffle, scalar state per window. (ingest_ts, clip_id) tie-breaks
+    keep the picks deterministic on a clip feature frame; a frame without
+    clip_id (e.g. a generic tag/ts/value table) breaks ties on
     (ingest_ts, energy), the batch plot verb's ordering."""
-    feats = (df if featured else clip_features(df, prefix_len)).withWatermark(
-        "ingest_ts", f"{watermark_sec} seconds"
-    )
+    feats = df.withWatermark("ingest_ts", f"{watermark_sec} seconds")
     tie = "clip_id" if "clip_id" in feats.columns else "energy"
     ordkey = F.struct("ingest_ts", tie)
     agg = feats.groupBy(
@@ -357,21 +333,16 @@ def circular_avg_windows(
     lo: float = 0.0,
     hi: float = 1.0,
     watermark_sec: int = 30,
-    prefix_len: int = 2,
-    featured: bool = False,
 ) -> DataFrame:
-    """Per-prefix circular average of clip energy — the reference's
-    circular_average verb (TSQB:1570-1719) as a native windowed aggregate:
-    scale [lo, hi) to radians, average cos/sin (algebraic partials,
-    map-side combined), atan2 recompose, rescale (TSQB:1591,1597). The
-    wrap-around property — values just below hi and just above lo average
-    to the boundary, not the midpoint — is what a plain avg cannot give.
-    ``featured=True`` skips the clip decode (df already has prefix/
-    ingest_ts/energy)."""
+    """Per-prefix circular average of a keyed value stream (prefix,
+    ingest_ts, energy) — the reference's circular_average verb
+    (TSQB:1570-1719) as a native windowed aggregate: scale [lo, hi) to
+    radians, average cos/sin (algebraic partials, map-side combined), atan2
+    recompose, rescale (TSQB:1591,1597). The wrap-around property — values
+    just below hi and just above lo average to the boundary, not the
+    midpoint — is what a plain avg cannot give."""
     span = hi - lo
-    feats = (df if featured else clip_features(df, prefix_len)).withWatermark(
-        "ingest_ts", f"{watermark_sec} seconds"
-    )
+    feats = df.withWatermark("ingest_ts", f"{watermark_sec} seconds")
     rad = (F.col("energy") - F.lit(lo)) / F.lit(span) * F.lit(2.0) * F.lit(_PI)
     agg = (
         feats.withColumn("__c", F.cos(rad))
@@ -398,17 +369,13 @@ def summary_windows(
     df: DataFrame,
     window_sec: int = 60,
     watermark_sec: int = 30,
-    prefix_len: int = 2,
-    featured: bool = False,
 ) -> DataFrame:
-    """Per-prefix windowed summary of clip energy — the reference's summary
-    verb (TSQB:304-382: count/avg/min/max/stddev/sum/var per tag) on the
-    stream. All algebraic aggregates (stddev/var fold as sum/sum-of-squares
-    partials), so the whole verb is one map-side-combined stateful hash
-    aggregate. ``featured=True`` skips the clip decode."""
-    feats = (df if featured else clip_features(df, prefix_len)).withWatermark(
-        "ingest_ts", f"{watermark_sec} seconds"
-    )
+    """Per-prefix windowed summary of a keyed value stream (prefix,
+    ingest_ts, energy) — the reference's summary verb (TSQB:304-382:
+    count/avg/min/max/stddev/sum/var per tag) on the stream. All algebraic
+    aggregates (stddev/var fold as sum/sum-of-squares partials), so the
+    whole verb is one map-side-combined stateful hash aggregate."""
+    feats = df.withWatermark("ingest_ts", f"{watermark_sec} seconds")
     agg = feats.groupBy(
         F.window("ingest_ts", f"{window_sec} seconds").alias("w"), "prefix"
     ).agg(

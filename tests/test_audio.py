@@ -182,3 +182,28 @@ def test_null_payload_degrades_to_empty_clip(spark):
         assert rows[cid]["p"] == 0.0
         assert rows[cid]["n"] == 0
         assert rows[cid]["m"] == 0
+
+
+def test_decoded_samples_is_a_native_expression(spark):
+    """decoded_samples maps the encoded length to a sample count without a
+    Python UDF; NULL bytes give 0, an unknown or NULL codec raises."""
+    import io
+    from contextlib import redirect_stdout
+
+    import pytest
+
+    df = spark.createDataFrame(
+        [("a", b"\x01\x02\x03", "pcm16"), ("b", None, "adpcm"), ("c", b"\x01", "ulaw")],
+        "clip_id string, bytes binary, codec string",
+    )
+    n = audio.decoded_samples("bytes", "codec")
+    assert dict(df.select("clip_id", n).collect()) == {"a": 1, "b": 0, "c": 1}
+    assert df.select(n).schema[0].dataType.simpleString() == "int"
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.select(n).explain()
+    assert "ArrowEvalPython" not in buf.getvalue(), buf.getvalue()
+    for codec in ("flac", None):
+        bad = spark.createDataFrame([(b"\x00\x00", codec)], "bytes binary, codec string")
+        with pytest.raises(Exception, match="unknown codec"):
+            bad.select(audio.decoded_samples("bytes", "codec")).collect()

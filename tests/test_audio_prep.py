@@ -36,8 +36,10 @@ def test_codec_roundtrip_snr(enc, dec, min_snr):
     assert abs(len(y) - len(x)) <= 1  # adpcm nibble padding
 
 
-def test_codec_registry_and_sample_count():
+def test_codec_registry_and_sample_count(spark):
+    # the native decoded_samples expression counts what each decoder yields
     x = _sine(sec=0.25)
+    rows, want = [], {}
     for codec, enc in [
         ("pcm16", au.pcm16_encode),
         ("ulaw", au.ulaw_encode),
@@ -45,8 +47,11 @@ def test_codec_registry_and_sample_count():
         ("adpcm", au.adpcm_encode),
     ]:
         b = enc(x)
-        dec = au._DECODERS[codec](b)
-        assert au._SAMPLE_COUNT[codec](len(b)) == len(dec)
+        rows.append((codec, bytes(b)))
+        want[codec] = len(au._DECODERS[codec](b))
+    df = spark.createDataFrame(rows, "codec string, bytes binary")
+    got = df.select("codec", au.decoded_samples("bytes", "codec").alias("n"))
+    assert dict(got.collect()) == want
 
 
 def test_alaw_silence_and_fullscale():

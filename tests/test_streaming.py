@@ -47,8 +47,8 @@ def _sorted_pdf(df, keys):
 def test_tumbling_stream_matches_batch(spark, clips_dir):
     stream = src.clips_stream(spark, clips_dir)
     batch = src.clips_batch(spark, clips_dir)
-    got = _run_to_memory(sw.tumbling_energy(stream, 60), "t_tumble")
-    want = sw.tumbling_energy(batch, 60)
+    got = _run_to_memory(sw.tumbling_energy(sw.clip_features(stream), 60), "t_tumble")
+    want = sw.tumbling_energy(sw.clip_features(batch), 60)
     keys = ["window_start", "prefix"]
     g, w = _sorted_pdf(got, keys), _sorted_pdf(want, keys)
     assert len(g) == len(w) and len(g) > 0
@@ -59,13 +59,15 @@ def test_tumbling_stream_matches_batch(spark, clips_dir):
 
 def test_salted_matches_unsalted(spark, clips_dir):
     batch = src.clips_batch(spark, clips_dir)
-    plain = sw.tumbling_energy(batch, 60)
-    salted = sw.tumbling_energy(batch, 60, salt_buckets=8)
+    plain = sw.tumbling_energy(sw.clip_features(batch), 60)
+    salted = sw.tumbling_energy(sw.clip_features(batch), 60, salt_buckets=8)
     keys = ["window_start", "prefix"]
     g, w = _sorted_pdf(salted, keys), _sorted_pdf(plain, keys)
     assert len(g) == len(w)
     assert (g["n_clips"] == w["n_clips"]).all()
     assert (g["avg_energy"] - w["avg_energy"]).abs().max() < 1e-9
+    # the energy pass carries no spectral columns, so neither stage sums them
+    assert not {"avg_centroid_hz", "avg_zcr"} & (set(g.columns) | set(w.columns))
     # approx_count_distinct is summed over salts => only approximately equal
     assert (g["n_distinct_clips"] - w["n_distinct_clips"]).abs().max() <= (
         0.1 * w["n_distinct_clips"].max()
@@ -74,8 +76,8 @@ def test_salted_matches_unsalted(spark, clips_dir):
 
 def test_sliding_windows(spark, clips_dir):
     batch = src.clips_batch(spark, clips_dir)
-    slid = sw.tumbling_energy(batch, 60, slide_sec=20)
-    plain = sw.tumbling_energy(batch, 60)
+    slid = sw.tumbling_energy(sw.clip_features(batch), 60, slide_sec=20)
+    plain = sw.tumbling_energy(sw.clip_features(batch), 60)
     # every event lands in exactly 3 sliding windows
     assert slid.agg(F.sum("n_clips")).first()[0] == 3 * plain.agg(F.sum("n_clips")).first()[0]
 
@@ -85,8 +87,8 @@ def test_salted_matches_unsalted_sliding(spark, clips_dir):
     # window width, which merged the 3 overlapping sliding windows per slide
     # into one row (n_clips ~3x, wrong bounds)
     batch = src.clips_batch(spark, clips_dir)
-    plain = sw.tumbling_energy(batch, 60, slide_sec=20)
-    salted = sw.tumbling_energy(batch, 60, slide_sec=20, salt_buckets=8)
+    plain = sw.tumbling_energy(sw.clip_features(batch), 60, slide_sec=20)
+    salted = sw.tumbling_energy(sw.clip_features(batch), 60, slide_sec=20, salt_buckets=8)
     keys = ["window_start", "prefix"]
     g, w = _sorted_pdf(salted, keys), _sorted_pdf(plain, keys)
     assert len(g) == len(w) and len(g) > 0
@@ -94,6 +96,25 @@ def test_salted_matches_unsalted_sliding(spark, clips_dir):
     assert (g["window_end"] == w["window_end"]).all()
     assert (g["n_clips"] == w["n_clips"]).all()
     assert (g["avg_energy"] - w["avg_energy"]).abs().max() < 1e-9
+    assert not {"avg_centroid_hz", "avg_zcr"} & (set(g.columns) | set(w.columns))
+
+
+@pytest.mark.parametrize("slide_sec", [None, 20], ids=["tumbling", "sliding"])
+def test_salted_matches_unsalted_spectral(spark, clips_dir, slide_sec):
+    # a spectral feature frame adds the centroid/zcr sums to the plain
+    # aggregate and to both salted stages; all three must agree
+    feats = sw.clip_features_spectral(src.clips_batch(spark, clips_dir))
+    plain = sw.tumbling_energy(feats, 60, slide_sec=slide_sec)
+    salted = sw.tumbling_energy(feats, 60, slide_sec=slide_sec, salt_buckets=8)
+    keys = ["window_start", "prefix"]
+    g, w = _sorted_pdf(salted, keys), _sorted_pdf(plain, keys)
+    assert len(g) == len(w) and len(g) > 0
+    assert (g["window_start"] == w["window_start"]).all()
+    assert (g["window_end"] == w["window_end"]).all()
+    assert (g["n_clips"] == w["n_clips"]).all()
+    for col in ["avg_energy", "avg_centroid_hz", "avg_zcr"]:
+        assert w[col].notna().all() and (w[col] > 0).any(), col
+        assert ((g[col] - w[col]).abs() <= 1e-9 * w[col].abs().max()).all(), col
 
 
 @pytest.mark.parametrize("slide_sec", [None, 20], ids=["tumbling", "sliding"])
@@ -105,7 +126,7 @@ def test_salted_stream_matches_batch(spark, clips_dir, slide_sec):
     stream = src.clips_stream(spark, clips_dir)
     name = f"t_salted_{slide_sec}"
     q = (
-        sw.tumbling_energy(stream, 60, slide_sec=slide_sec, salt_buckets=8)
+        sw.tumbling_energy(sw.clip_features(stream), 60, slide_sec=slide_sec, salt_buckets=8)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -116,7 +137,10 @@ def test_salted_stream_matches_batch(spark, clips_dir, slide_sec):
     wm = q.lastProgress["eventTime"]["watermark"]
     keys = ["window_start", "prefix"]
     want = sw.tumbling_energy(
-        src.clips_batch(spark, clips_dir), 60, slide_sec=slide_sec, salt_buckets=8
+        sw.clip_features(src.clips_batch(spark, clips_dir)),
+        60,
+        slide_sec=slide_sec,
+        salt_buckets=8,
     )
     closed = want.filter(F.col("window_end") <= F.to_timestamp(F.lit(wm)))
     g, w = _sorted_pdf(spark.table(name), keys), _sorted_pdf(closed, keys)
@@ -184,7 +208,7 @@ def test_sessionize_gap_detection(spark):
     pdf["ingest_ts"] = [r[1] for r in rows]
     df = spark.createDataFrame(pdf, schema=synth.CLIPS_SCHEMA)
 
-    out = ss.sessionize(df, gap_sec=300, watermark_sec=1).toPandas()
+    out = ss.sessionize(sw.clip_features(df), gap_sec=300, watermark_sec=1).toPandas()
     # batch mode: complete input => both sessions emitted
     out = out.sort_values("session_start").reset_index(drop=True)
     assert len(out) == 2
@@ -207,7 +231,9 @@ def test_sessionize_gap_detection(spark):
     from core_spark.streaming import source as src2
     stream = src2.clips_stream(spark, os.path.join(d, "in"))
     got = _run_to_memory(
-        ss.sessionize(stream, gap_sec=300, watermark_sec=1), "t_sess", mode="append"
+        ss.sessionize(sw.clip_features(stream), gap_sec=300, watermark_sec=1),
+        "t_sess",
+        mode="append",
     ).toPandas()
     assert len(got) == 1
     g = got.iloc[0]
@@ -244,7 +270,9 @@ def test_sessionize_state_spans_micro_batches(spark, tmp_path):
 
     stream = src.clips_stream(spark, in_dir, max_files_per_trigger=1)
     got = _run_to_memory(
-        ss.sessionize(stream, gap_sec=300, watermark_sec=1), "t_sess_span", mode="append"
+        ss.sessionize(sw.clip_features(stream), gap_sec=300, watermark_sec=1),
+        "t_sess_span",
+        mode="append",
     ).toPandas()
     assert len(got) == 1
     g = got.iloc[0]
@@ -256,7 +284,7 @@ def test_sessionize_state_spans_micro_batches(spark, tmp_path):
 
 def test_sessionize_native_agrees(spark, clips_dir):
     batch = src.clips_batch(spark, clips_dir)
-    native = sw.session_windows_native(batch, gap_sec=300).toPandas()
+    native = sw.session_windows_native(sw.clip_features(batch), gap_sec=300).toPandas()
     # session count and clip totals are plausible and cover all clips
     assert native["n_clips"].sum() == N
 
@@ -302,6 +330,31 @@ def test_sink_exactly_once_and_merge(spark, tmp_path):
     assert len(lin) == 3 and lin[1]["skipped_replay"]
 
 
+def test_merge_batch_materializes_once(spark, tmp_path, monkeypatch):
+    # a merge into an existing partition overwrites the files its own plan
+    # reads, with no barrier: dynamic partition overwrite swaps the staged
+    # partition in at job commit. Only the batch itself is checkpointed.
+    d = str(tmp_path / "table")
+    sink = sk.MergeSink(d, key_cols=["k", "p"], partition_expr="p")
+    schema = "k int, p string, v double"
+    sink.write_batch(spark.createDataFrame([], schema), 0)
+    sink.write_batch(spark.createDataFrame([(1, "a", 1.0), (2, "a", 2.0)], schema), 1)
+    cls = type(spark.range(1))
+    orig, calls = cls.localCheckpoint, []
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
+    sink.write_batch(spark.createDataFrame([(2, "a", 20.0), (3, "a", 3.0)], schema), 2)
+    assert len(calls) == 1
+    got = {(r["k"], r["p"]): r["v"] for r in sink.read(spark).collect()}
+    assert got == {(1, "a"): 1.0, (2, "a"): 20.0, (3, "a"): 3.0}
+    lin = sink.lineage()
+    assert lin[0]["partitions"] == {} and lin[2]["partitions"] == {"a": 2}
+
+
 def test_checkpoint_resume_no_dups(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     ck = str(tmp_path / "ck")
@@ -327,7 +380,7 @@ def test_checkpoint_resume_no_dups(spark, tmp_path):
 
     def run():
         stream = src.clips_stream(spark, in_dir, max_files_per_trigger=1)
-        q = sk.run_to_sink(sw.tumbling_energy(stream, 60), sink, ck)
+        q = sk.run_to_sink(sw.tumbling_energy(sw.clip_features(stream), 60), sink, ck)
         q.awaitTermination()
 
     run()
@@ -339,7 +392,7 @@ def test_checkpoint_resume_no_dups(spark, tmp_path):
     assert keys.count() == keys.distinct().count()  # no duplicate windows
     # every emitted window matches the full-input batch recompute exactly
     # (proves aggregation state survived the restart — no partial windows)
-    full = sw.tumbling_energy(src.clips_batch(spark, in_dir), 60)
+    full = sw.tumbling_energy(sw.clip_features(src.clips_batch(spark, in_dir)), 60)
     j = got.alias("g").join(
         full.alias("f"), ["window_start", "prefix"], "inner"
     )
@@ -394,11 +447,11 @@ def test_late_metrics_counts_all_unmatchable(spark):
 def test_ohlc_windows_stream_matches_batch(spark, clips_dir):
     stream = src.clips_stream(spark, clips_dir)
     got = _sorted_pdf(
-        _run_to_memory(sw.ohlc_windows(stream, 60), "t_ohlc_win"),
+        _run_to_memory(sw.ohlc_windows(sw.clip_features(stream), 60), "t_ohlc_win"),
         ["window_start", "prefix"],
     )
     ref = _sorted_pdf(
-        sw.ohlc_windows(src.clips_batch(spark, clips_dir), 60),
+        sw.ohlc_windows(sw.clip_features(src.clips_batch(spark, clips_dir)), 60),
         ["window_start", "prefix"],
     )
     assert got.equals(ref)
@@ -425,7 +478,7 @@ def test_circular_avg_windows_wraps(spark):
         pcm16_encode(np.full(8000, np.sqrt(0.03))),
     ]
     df = spark.createDataFrame(pdf, schema=synth.CLIPS_SCHEMA)
-    got = sw.circular_avg_windows(df, 60).toPandas()
+    got = sw.circular_avg_windows(sw.clip_features(df), 60).toPandas()
     assert len(got) == 1
     v = got.iloc[0]["circ_avg"]
     assert v < 0.01 or v > 0.99  # at the wrap, far from 0.5
@@ -436,11 +489,11 @@ def test_circular_avg_windows_wraps(spark):
 def test_circular_avg_windows_stream_matches_batch(spark, clips_dir):
     stream = src.clips_stream(spark, clips_dir)
     got = _sorted_pdf(
-        _run_to_memory(sw.circular_avg_windows(stream, 60), "t_circ_win"),
+        _run_to_memory(sw.circular_avg_windows(sw.clip_features(stream), 60), "t_circ_win"),
         ["window_start", "prefix"],
     )
     ref = _sorted_pdf(
-        sw.circular_avg_windows(src.clips_batch(spark, clips_dir), 60),
+        sw.circular_avg_windows(sw.clip_features(src.clips_batch(spark, clips_dir)), 60),
         ["window_start", "prefix"],
     )
     assert len(got) == len(ref)
@@ -453,11 +506,11 @@ def test_circular_avg_windows_stream_matches_batch(spark, clips_dir):
 def test_summary_windows_stream_matches_batch(spark, clips_dir):
     stream = src.clips_stream(spark, clips_dir)
     got = _sorted_pdf(
-        _run_to_memory(sw.summary_windows(stream, 60), "t_summary_win"),
+        _run_to_memory(sw.summary_windows(sw.clip_features(stream), 60), "t_summary_win"),
         ["window_start", "prefix"],
     )
     ref = _sorted_pdf(
-        sw.summary_windows(src.clips_batch(spark, clips_dir), 60),
+        sw.summary_windows(sw.clip_features(src.clips_batch(spark, clips_dir)), 60),
         ["window_start", "prefix"],
     )
     import numpy as np
@@ -646,3 +699,18 @@ def test_job_shuffle_partitions_default_to_cores(monkeypatch):
             job.main(argv)
         assert calls[-1]["cores"] == 3
         assert calls[-1]["shuffle_partitions"] == want
+
+
+def test_job_feature_pass_follows_mode():
+    # the job picks its clip decode pass once per mode and warms that same
+    # pass: the FFT pass only for the windowed modes with --spectral 1, the
+    # energy pass for the other clip modes, none for join
+    from core_spark.streaming import job
+
+    for mode in ("tumbling", "sliding"):
+        assert job.feature_pass(mode, 1) is sw.clip_features_spectral
+    for mode in ("tumbling", "sliding", "sessions", "native_sessions"):
+        assert job.feature_pass(mode, 0) is sw.clip_features
+    for mode in ("sessions", "native_sessions"):
+        assert job.feature_pass(mode, 1) is sw.clip_features
+    assert job.feature_pass("join", 0) is None and job.feature_pass("join", 1) is None

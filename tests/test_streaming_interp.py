@@ -18,6 +18,7 @@ from core_spark.operators import timeseries as tso
 from core_spark.operators.timeseries import TSSpec
 from core_spark.streaming import interp as sintp
 from core_spark.streaming import source as src
+from core_spark.streaming.windows import clip_features
 
 BASE = datetime(2024, 3, 1)
 E = int(BASE.timestamp())
@@ -108,7 +109,7 @@ def ordered_clips(spark, tmp_path_factory):
 
 def test_stream_matches_batch_interpolate_verb(spark, ordered_clips):
     res = sintp.interp_stream(
-        src.clips_stream(spark, ordered_clips, max_files_per_trigger=1),
+        clip_features(src.clips_stream(spark, ordered_clips, max_files_per_trigger=1)),
         60, watermark_sec=10, method="linear",
     )
     q = (
@@ -123,9 +124,7 @@ def test_stream_matches_batch_interpolate_verb(spark, ordered_clips):
     assert len(got) > 10
     assert not got.duplicated(subset=["prefix", "event_time"]).any()
 
-    from core_spark.streaming.windows import clip_features
-
-    feats = clip_features(src.clips_batch(spark, ordered_clips), 2).select(
+    feats = clip_features(src.clips_batch(spark, ordered_clips)).select(
         "prefix", "ingest_ts", "energy"
     )
     spec = TSSpec(tag_col="prefix", ts_col="ingest_ts", value_col="energy",

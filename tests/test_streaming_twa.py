@@ -19,6 +19,7 @@ from core_spark.operators import timeseries as tso
 from core_spark.operators.timeseries import TSSpec
 from core_spark.streaming import source as src
 from core_spark.streaming import twa as stwa
+from core_spark.streaming.windows import clip_features
 
 BASE = datetime(2024, 3, 1)
 
@@ -74,9 +75,7 @@ def ordered_clips(spark, tmp_path_factory):
 
 def _twa_verb_reference(spark, clips_dir, every=60, step=False):
     """The batch TWA verb over the same (prefix, ingest_ts, energy) series."""
-    from core_spark.streaming.windows import clip_features
-
-    feats = clip_features(src.clips_batch(spark, clips_dir), 2).select(
+    feats = clip_features(src.clips_batch(spark, clips_dir)).select(
         "prefix", "ingest_ts", "energy"
     )
     spec = TSSpec(tag_col="prefix", ts_col="ingest_ts", value_col="energy",
@@ -89,9 +88,7 @@ def _twa_verb_reference(spark, clips_dir, every=60, step=False):
 
 def _obs_range(spark, clips_dir):
     """Per-prefix (first_obs, last_obs) in epoch seconds."""
-    from core_spark.streaming.windows import clip_features
-
-    feats = clip_features(src.clips_batch(spark, clips_dir), 2)
+    feats = clip_features(src.clips_batch(spark, clips_dir))
     r = (
         feats.groupBy("prefix")
         .agg(
@@ -122,7 +119,7 @@ def _complete_buckets(pdf, rng, every=60):
 def _parity_vs_verb(spark, ordered_clips, step):
     rng = _obs_range(spark, ordered_clips)
     got = _complete_buckets(
-        stwa.twa_stream(src.clips_batch(spark, ordered_clips), 60, step=step)
+        stwa.twa_stream(clip_features(src.clips_batch(spark, ordered_clips)), 60, step=step)
         .select("prefix", "event_time", "value")
         .toPandas(),
         rng,
@@ -149,7 +146,7 @@ def test_batch_path_matches_twa_verb_step(spark, ordered_clips):
 
 def test_stream_closed_buckets_match_batch(spark, ordered_clips):
     res = stwa.twa_stream(
-        src.clips_stream(spark, ordered_clips, max_files_per_trigger=1),
+        clip_features(src.clips_stream(spark, ordered_clips, max_files_per_trigger=1)),
         60, watermark_sec=10, grace_sec=30,
     )
     q = (
@@ -163,7 +160,7 @@ def test_stream_closed_buckets_match_batch(spark, ordered_clips):
     got = spark.table("t_twa_stream").toPandas()
     assert not got["late"].any()
     # every closed bucket equals the batch oracle bit-for-bit
-    ref = stwa.twa_stream(src.clips_batch(spark, ordered_clips), 60).toPandas()
+    ref = stwa.twa_stream(clip_features(src.clips_batch(spark, ordered_clips)), 60).toPandas()
     ref_map = {(r["prefix"], r["event_time"]): r for _, r in ref.iterrows()}
     assert len(got) > 10
     for _, r in got.iterrows():
@@ -207,7 +204,7 @@ def test_stream_late_contribution_flagged(spark, tmp_path):
     write([("aw-00000004", t(5150)), ("ay-00000097", t(5200))])
 
     res = stwa.twa_stream(
-        src.clips_stream(spark, in_dir, max_files_per_trigger=1),
+        clip_features(src.clips_stream(spark, in_dir, max_files_per_trigger=1)),
         60, watermark_sec=5, grace_sec=10,
     )
     q = (
@@ -255,7 +252,7 @@ def test_stream_drops_subwatermark_rows(spark, tmp_path):
     time.sleep(1.1)
     write([("aw-00000002", t(100))])  # 4895s below the watermark -> dropped
     res = stwa.twa_stream(
-        src.clips_stream(spark, in_dir, max_files_per_trigger=1),
+        clip_features(src.clips_stream(spark, in_dir, max_files_per_trigger=1)),
         60, watermark_sec=5, grace_sec=10,
     )
     q = (

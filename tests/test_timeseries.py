@@ -319,6 +319,38 @@ def test_percentiles_excludes_bad(spark, events):
     assert got["TAG-A"]["p99"] < 999.0
 
 
+def test_percentiles_skip_nulls_like_the_oracles(spark):
+    """NULL values are skipped as by any SQL aggregate, in the batch verb
+    and in both DuckDB oracles (batch and stream): values 1, NULL, 3, 2 give
+    cnt 3, p0 1.0, p50 2.0; an all-NULL tag gives cnt 0, NULL percentiles."""
+    import duckdb
+    import pyarrow as pa
+
+    from core_spark import registry
+
+    rows = [
+        ("a", t(0), 1.0), ("a", t(1), None), ("a", t(2), 3.0), ("a", t(3), 2.0),
+        ("n", t(0), None), ("n", t(1), None),
+        # hours later: the stream oracle's watermark closes hour 0
+        ("z", datetime(2024, 1, 1, 3), 0.0),
+    ]
+    want = {"a": (3, 1.0, 2.0), "n": (0, None, None)}
+    ps = (0.0, 0.5)
+    df = spark.createDataFrame(rows, "event_type string, ts timestamp, value double")
+    got = {
+        r[0]: tuple(r[1:])
+        for r in tsq.percentiles(df, registry.EVENTS_SPEC, ps=ps).collect()
+    }
+    con = duckdb.connect()
+    con.register("events", pa.Table.from_pylist(
+        [dict(zip(("event_type", "ts", "value"), r)) for r in rows]
+    ))
+    batch_sql = {r[0]: r[1:] for r in con.sql(registry._pctl_sql(ps)).fetchall()}
+    stream_sql = {r[0]: r[2:] for r in con.sql(registry._stream_pctl_sql(ps)).fetchall()}
+    for tag, w in want.items():
+        assert got[tag] == w and batch_sql[tag] == w and stream_sql[tag] == w, tag
+
+
 def test_topk_by_bucket(spark, events):
     out = tsq.topk_by_bucket(events, SPEC, every_sec=600, k=2).toPandas()
     a0 = out[(out["tagname"] == "TAG-A") & (out["rank"] == 1)]
