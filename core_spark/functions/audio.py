@@ -2,9 +2,11 @@
 
 The engine's per-row invariant (BASELINE.json): decoded PCM must match the
 generator's float PCM with SNR >= 30 dB, and transcripts must survive the
-pipeline byte-identical. Codecs are pcm16 (int16 LE) and G.711 mu-law —
-both decodable in pure numpy, so expected energy is analytically known
-(pure sine => mean-square = A^2/2).
+pipeline byte-identical. Codecs are pcm16 (int16 LE), G.711 mu-law and
+A-law, and IMA ADPCM, all decoded to int16 PCM through one table
+(``_DECODERS``) in pure numpy, so expected energy is analytically known
+(pure sine => mean-square = A^2/2). The Arrow pass (audio_arrow) decodes
+through the same table and runs the same spectral kernel.
 
 Design rules (north rule: never per-row Python):
 - All decode/feature computation happens inside ``pandas_udf`` bodies
@@ -12,8 +14,9 @@ Design rules (north rule: never per-row Python):
   numpy-vectorized inside.
 - The variable-length inner loop (clips have different lengths) uses
   numpy.frombuffer per clip — zero-copy views over Arrow buffers — and the
-  reductions (energy, peak) are O(n) numpy ops. For equal batch shapes this
-  is the same work a dedicated audio engine would do.
+  reductions (energy, peak) are O(n) numpy ops over int16, written once in
+  ``_energy_i16``/``_peak_i16``. For equal batch shapes this is the same
+  work a dedicated audio engine would do.
 - Feature UDFs (energy/duration/peak) return scalars, so shuffles carry
   8-byte doubles, never decoded PCM. Full PCM decode (``decode_pcm``)
   exists for pipelines that need frames downstream, but windowed aggregates
@@ -32,24 +35,27 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- codecs
+#
+# One decode table, ``_DECODERS``: a uint8 view of one payload -> int16 PCM.
+# The pandas UDFs below and the Arrow pass (audio_arrow) both decode through
+# it. Every codec has the same full scale, 32767: float samples are
+# int16 / 32767, and energy and peak divide by it.
 
+_FS = 32767.0
 _ULAW_BIAS = 0x84  # 132
 _ULAW_CLIP = 32635
+_EMPTY_I16 = np.empty(0, dtype=np.int16)
 
 
 def pcm16_encode(x: np.ndarray) -> bytes:
     """float [-1,1] -> int16 LE bytes."""
-    q = np.clip(np.rint(x * 32767.0), -32768, 32767).astype("<i2")
+    q = np.clip(np.rint(x * _FS), -32768, 32767).astype("<i2")
     return q.tobytes()
-
-
-def pcm16_decode(b: bytes) -> np.ndarray:
-    return np.frombuffer(b, dtype="<i2").astype(np.float32) / 32767.0
 
 
 def ulaw_encode(x: np.ndarray) -> bytes:
     """float [-1,1] -> G.711 mu-law bytes (vectorized, standard algorithm)."""
-    pcm = np.clip(np.rint(x * 32767.0), -32768, 32767).astype(np.int32)
+    pcm = np.clip(np.rint(x * _FS), -32768, 32767).astype(np.int32)
     sign = np.where(pcm < 0, 0x80, 0)
     mag = np.clip(np.abs(pcm), 0, _ULAW_CLIP) + _ULAW_BIAS
     exponent = (np.floor(np.log2(mag)) - 7).astype(np.int32)
@@ -60,10 +66,9 @@ def ulaw_encode(x: np.ndarray) -> bytes:
 
 
 def _build_ulaw_lut() -> np.ndarray:
-    """All 256 mu-law codes decoded once -> int16 LUT; per-clip decode is
-    then a single gather instead of six int32 temporaries per clip. Kept in
-    int16 (max magnitude 32124 fits) so the Arrow hot path can stay 2 B per
-    sample; the float32 [-1,1] LUT is derived from it."""
+    """All 256 mu-law codes decoded once -> int16 LUT (max magnitude 32124);
+    per-clip decode is then a single 1 B -> 2 B gather instead of six int32
+    temporaries per clip."""
     u = (~np.arange(256, dtype=np.int32)) & 0xFF
     sign = u & 0x80
     exponent = (u >> 4) & 0x07
@@ -74,18 +79,11 @@ def _build_ulaw_lut() -> np.ndarray:
     return pcm.astype(np.int16)
 
 
-ULAW_LUT_I16 = _build_ulaw_lut()
-ULAW_LUT = ULAW_LUT_I16.astype(np.float32) / 32767.0
-
-
-def ulaw_decode(b: bytes) -> np.ndarray:
-    return ULAW_LUT[np.frombuffer(b, dtype=np.uint8)]
-
-
 def _build_alaw_lut() -> np.ndarray:
     """G.711 A-law: all 256 codes decoded once (ITU G.711 / classic
-    alaw2linear), gathered per clip like the mu-law LUT."""
-    out = np.empty(256, dtype=np.float32)
+    alaw2linear) -> int16 LUT (max magnitude 32256), gathered per clip like
+    the mu-law LUT."""
+    out = np.empty(256, dtype=np.int16)
     for code in range(256):
         a = code ^ 0x55
         t = (a & 0x0F) << 4
@@ -96,11 +94,12 @@ def _build_alaw_lut() -> np.ndarray:
             t += 0x108
         else:
             t = (t + 0x108) << (seg - 1)
-        out[code] = (t if (a & 0x80) else -t) / 32768.0
+        out[code] = t if (a & 0x80) else -t
     return out
 
 
-ALAW_LUT = _build_alaw_lut()
+_ULAW_I16 = _build_ulaw_lut()
+_ALAW_I16 = _build_alaw_lut()
 
 _ALAW_SEG_END = np.array(
     [0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF, 0x3FFF, 0x7FFF], dtype=np.int32
@@ -109,7 +108,7 @@ _ALAW_SEG_END = np.array(
 
 def alaw_encode(x: np.ndarray) -> bytes:
     """float [-1,1] -> G.711 A-law bytes (vectorized linear2alaw)."""
-    pcm = np.clip(np.rint(x * 32768.0), -32768, 32767).astype(np.int32)
+    pcm = np.clip(np.rint(x * _FS), -32768, 32767).astype(np.int32)
     mask = np.where(pcm >= 0, 0xD5, 0x55).astype(np.int32)
     mag = np.where(pcm >= 0, pcm, -pcm - 8)
     mag = np.maximum(mag, 0)
@@ -122,17 +121,12 @@ def alaw_encode(x: np.ndarray) -> bytes:
     return ((aval ^ mask) & 0xFF).astype(np.uint8).tobytes()
 
 
-def alaw_decode(b: bytes) -> np.ndarray:
-    return ALAW_LUT[np.frombuffer(b, dtype=np.uint8)]
-
-
 # IMA ADPCM (DVI4): 4 bits/sample with a predictive state machine. Block
 # format here: 4-byte header (int16 LE predictor, uint8 step index, 1
 # reserved) + packed nibbles, low nibble first. The decode is inherently
 # sequential (each step feeds the next), so it is an O(n) Python loop —
-# correct and deterministic, but ~100x slower than the LUT codecs; real
-# deployments would swap in a native decoder via the _DECODERS registry,
-# which is exactly the injection point this entry demonstrates.
+# correct and deterministic, but ~100x slower than the LUT codecs; a native
+# decoder would replace its ``_DECODERS`` entry.
 _IMA_STEPS = np.array([
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
     41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
@@ -162,7 +156,7 @@ def _ima_step(pred: int, idx: int, nib: int) -> tuple[int, int]:
 
 def adpcm_encode(x: np.ndarray) -> bytes:
     """float [-1,1] -> IMA ADPCM block (4-byte header + packed nibbles)."""
-    pcm = np.clip(np.rint(x * 32767.0), -32768, 32767).astype(np.int32)
+    pcm = np.clip(np.rint(x * _FS), -32768, 32767).astype(np.int32)
     n = len(pcm)
     pred, idx = (int(pcm[0]) if n else 0), 0
     nibs = bytearray()
@@ -193,58 +187,77 @@ def adpcm_encode(x: np.ndarray) -> bytes:
     return header + bytes(packed)
 
 
-def adpcm_decode(b: bytes) -> np.ndarray:
-    if len(b) < 4:
-        return _EMPTY_F32
-    pred = int.from_bytes(b[:2], "little", signed=True)
+def _adpcm_i16(view: np.ndarray) -> np.ndarray:
+    if len(view) < 4:
+        return _EMPTY_I16
+    pred = int.from_bytes(view[:2].tobytes(), "little", signed=True)
     idx = 0
-    packed = np.frombuffer(b, dtype=np.uint8, offset=4)
+    packed = view[4:]
     nibs = np.empty(2 * len(packed), dtype=np.uint8)
     nibs[0::2] = packed & 0x0F
     nibs[1::2] = packed >> 4
-    out = np.empty(len(nibs), dtype=np.float32)
-    for k, nib in enumerate(nibs):
-        pred, idx = _ima_step(pred, idx, int(nib))
+    out = np.empty(len(nibs), dtype=np.int16)
+    for k, nib in enumerate(nibs.tolist()):
+        pred, idx = _ima_step(pred, idx, nib)
         out[k] = pred
-    return out / 32767.0
+    return out
 
 
+#: codec -> (uint8 view of one payload -> int16 PCM). pcm16 reinterprets the
+#: view in place, at any byte offset; a trailing odd byte is dropped, so it
+#: yields floor(n/2) samples, as ``decoded_samples`` counts them.
 _DECODERS = {
-    "pcm16": pcm16_decode,
-    "ulaw": ulaw_decode,
-    "alaw": alaw_decode,
-    "adpcm": adpcm_decode,
+    "pcm16": lambda v: v[: len(v) & ~1].view("<i2"),
+    "ulaw": lambda v: _ULAW_I16[v],
+    "alaw": lambda v: _ALAW_I16[v],
+    "adpcm": _adpcm_i16,
 }
-_EMPTY_F32 = np.empty(0, dtype=np.float32)
 
 
-def _decode_one(b: bytes | None, codec: str) -> np.ndarray:
+def _decode_view_i16(view: np.ndarray, codec: str) -> np.ndarray:
+    """Decode a uint8 view of one clip's payload to int16 PCM — the
+    minimum-traffic form: pcm16 is a zero-copy reinterpret of the Arrow
+    buffer (no decode output written at all), ulaw/alaw a 1 B -> 2 B LUT
+    gather. The scaling-bench probe shows the 4-executor fleet is
+    memory-bandwidth capped, so every decoded byte avoided is fleet
+    throughput; float32 conversion happens per cache-resident FFT chunk
+    inside ``_spectral_one_i16``."""
+    try:
+        dec = _DECODERS[codec]
+    except KeyError:
+        raise ValueError(f"unknown codec: {codec!r}") from None
+    return dec(view)
+
+
+def _decode_i16(b: bytes | None, codec: str) -> np.ndarray:
     if b is None:
         # null payload (failed ingest, outer-join product): zero samples,
         # so every downstream feature degrades to its empty-clip value
         # instead of killing the stage with a worker TypeError
-        return _EMPTY_F32
-    try:
-        return _DECODERS[codec](b)
-    except KeyError:
-        raise ValueError(f"unknown codec: {codec!r}") from None
+        return _EMPTY_I16
+    return _decode_view_i16(np.frombuffer(b, dtype=np.uint8), codec)
 
 
-def decode_batch(data: pd.Series, codec: pd.Series) -> list[np.ndarray]:
-    """Decode one Arrow batch of clips, materializing every PCM array.
+def decode(b: bytes | None, codec: str) -> np.ndarray:
+    """One payload -> float32 PCM in [-1, 1]: the int16 decode over the
+    full scale 32767. NULL bytes give zero samples; an unknown codec raises
+    ``unknown codec``."""
+    return _decode_i16(b, codec).astype(np.float32) / _FS
 
-    NOTE: holding thousands of ~100 KB arrays concurrently makes the page
-    -fault path the bottleneck when many executor cores run this at once
-    (minor-fault handling serializes kernel-side; measured 10-30x wall
-    blow-up at 8-way concurrency on this host). Use only where the decoded
-    frames themselves are the output (decode_pcm); every reducing feature
-    UDF below streams clip-by-clip instead — decode one, reduce, discard —
-    which keeps the worker's working set flat and its allocator in steady
-    state. That fused shape is also the only one that survives 100 TB.
-    """
-    codec_arr = codec.to_numpy()
-    data_arr = data.to_numpy()
-    return [_decode_one(b, c) for b, c in zip(data_arr, codec_arr)]
+
+def _energy_i16(x: np.ndarray) -> float:
+    """Mean-square energy in full-scale units: the exact int64 sum of
+    squares divided by 32767² and by n (0.0 for an empty clip)."""
+    n = len(x)
+    if n == 0:
+        return 0.0
+    return float(np.einsum("i,i->", x, x, dtype=np.int64)) / (_FS * _FS) / n
+
+
+def _peak_i16(x: np.ndarray) -> float:
+    """max|x| in full-scale units (0.0 for an empty clip). max(max, -min)
+    is two temp-free reductions instead of a full |x| temporary."""
+    return float(max(int(x.max()), -int(x.min()))) / _FS if len(x) else 0.0
 
 
 # ---------------------------------------------------------------- pandas UDFs
@@ -253,39 +266,41 @@ def decode_batch(data: pd.Series, codec: pd.Series) -> list[np.ndarray]:
 @F.pandas_udf(T.ArrayType(T.FloatType()))
 def decode_pcm(data: pd.Series, codec: pd.Series) -> pd.Series:
     """bytes + codec -> float32 PCM frames. Use only when frames are needed
-    downstream; prefer the scalar feature UDFs in aggregation paths."""
-    return pd.Series(decode_batch(data, codec))
+    downstream; prefer the scalar feature UDFs in aggregation paths.
+
+    NOTE: holding thousands of ~100 KB arrays concurrently makes the page
+    -fault path the bottleneck when many executor cores run this at once
+    (minor-fault handling serializes kernel-side; measured 10-30x wall
+    blow-up at 8-way concurrency). Every reducing feature UDF below streams
+    clip-by-clip instead — decode one, reduce, discard — which keeps the
+    worker's working set flat and its allocator in steady state. That fused
+    shape is also the only one that survives 100 TB.
+    """
+    return pd.Series([decode(b, c) for b, c in zip(data.to_numpy(), codec.to_numpy())])
 
 
 def _reduce_clips(data: pd.Series, codec: pd.Series, fn) -> pd.Series:
     """Fused decode->reduce->discard over one Arrow batch: only one decoded
-    clip is ever resident, so the allocator stays in steady state (see
-    decode_batch docstring for why that matters at high core counts)."""
-    codec_arr = codec.to_numpy()
-    data_arr = data.to_numpy()
+    int16 clip is ever resident (see the decode_pcm note)."""
     return pd.Series(
-        [fn(_decode_one(b, c)) for b, c in zip(data_arr, codec_arr)]
+        [fn(_decode_i16(b, c)) for b, c in zip(data.to_numpy(), codec.to_numpy())]
     )
-
-
-def _energy(p: np.ndarray) -> float:
-    return float(np.mean(np.square(p, dtype=np.float64))) if len(p) else 0.0
 
 
 @F.pandas_udf(T.DoubleType())
 def clip_energy(data: pd.Series, codec: pd.Series) -> pd.Series:
     """Mean-square energy of the decoded clip (pure sine => A^2/2)."""
-    return _reduce_clips(data, codec, _energy)
+    return _reduce_clips(data, codec, _energy_i16)
 
 
 @F.pandas_udf(T.DoubleType())
 def clip_rms(data: pd.Series, codec: pd.Series) -> pd.Series:
-    return _reduce_clips(data, codec, lambda p: float(np.sqrt(_energy(p))))
+    return _reduce_clips(data, codec, lambda x: float(np.sqrt(_energy_i16(x))))
 
 
 @F.pandas_udf(T.DoubleType())
 def clip_peak(data: pd.Series, codec: pd.Series) -> pd.Series:
-    return _reduce_clips(data, codec, lambda p: float(np.max(np.abs(p))) if len(p) else 0.0)
+    return _reduce_clips(data, codec, _peak_i16)
 
 
 def decoded_samples(data: Column | str, codec: Column | str) -> Column:
@@ -341,7 +356,7 @@ _HANN32 = _HANN.astype(np.float32)
 _CHUNK_FRAMES = 64
 # thread-local scratch: Spark's Python workers are single-threaded per
 # process, but a threaded driver-side caller (batch scoring harness) must
-# not share one buffer between interleaved _spectral_one calls
+# not share one buffer between interleaved _spectral_one_i16 calls
 import threading as _threading
 
 _FFT_TLS = _threading.local()
@@ -354,35 +369,39 @@ def _fft_buf() -> np.ndarray:
     return buf
 
 
-def _spectral_one(x: np.ndarray, sr: int) -> tuple:
-    """Framed-FFT features of one decoded clip. float32 windowed frames
-    (features agree with float64 to ~1e-6 relative, far inside the engine's
-    SNR>=30dB audio invariant), float64 reductions; chunked over a fixed
-    scratch (above) so the hot working set stays cache-resident."""
+def _spectral_one_i16(x: np.ndarray, sr: int) -> tuple:
+    """Framed-FFT features of one int16-decoded clip — the one spectral
+    kernel, run by the Arrow pass and by ``audio_features``.
+
+    Samples stay at 2 B each (pcm16 payloads are a zero-copy reinterpret of
+    the Arrow buffer; ulaw/alaw gather through int16 LUTs): at 4 concurrent
+    pinned executors the N-vs-4N scaling bench is bandwidth-capped, not
+    compute-capped (probe: the FFT-less pipeline scales at 0.47 while the
+    FFT-heavy one reaches 0.79 — data movement IS the ceiling), so bytes
+    saved here convert directly into fleet throughput. The windowed-frame
+    scratch converts int16 -> float32 per cache-resident chunk (above);
+    spectral shape features (dominant/centroid/band fractions) are
+    scale-invariant, and energy/peak follow ``_energy_i16``/``_peak_i16``,
+    the same reductions as ``clip_energy``/``clip_peak``."""
     n = len(x)
     if n == 0:
         return (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0)
-    x32 = x.astype(np.float32, copy=False)
-    energy = float(np.dot(x32, x32)) / n
-    # max(max, -min) == max|x| with two temp-free reductions instead of a
-    # full |x| temporary
-    peak = float(max(x32.max(), -float(x32.min())))
-    zcr = float(np.count_nonzero(np.signbit(x32[1:]) != np.signbit(x32[:-1]))) / n
-    fr = _frame(x32)
+    energy = _energy_i16(x)
+    peak = _peak_i16(x)
+    zcr = float(np.count_nonzero((x[1:] < 0) != (x[:-1] < 0))) / n
+    fr = _frame(x)
     nf = fr.shape[0]
     # numpy's pocketfft wrapper computes rfft in double regardless of input
     # dtype (complex128 out); accumulate |spec|^2 by viewing the complex
     # buffer as contiguous (re, im) float64 pairs and einsum-squaring in ONE
     # fused pass — vs spec.real*spec.real + spec.imag*spec.imag, which
     # allocates three ~200 KB strided temporaries per chunk (measured
-    # 474 -> 391 us/clip on the fft+power stage, and the removed temporary
-    # traffic is exactly the shared-LLC pressure that costs the 24-worker
-    # level more than the 6-worker level)
+    # 474 -> 391 us/clip on the fft+power stage)
     psum2 = np.zeros(2 * (_N_FFT // 2 + 1), dtype=np.float64)
     for st in range(0, nf, _CHUNK_FRAMES):
         ch = fr[st : st + _CHUNK_FRAMES]
         buf = _fft_buf()[: ch.shape[0]]
-        np.multiply(ch, _HANN32, out=buf)
+        np.multiply(ch, _HANN32, out=buf)  # int16 * f32 -> f32, in scratch
         spec = np.fft.rfft(buf, axis=1)
         v = spec.view(np.float64)
         psum2 += np.einsum("ij,ij->j", v, v)
@@ -393,47 +412,6 @@ def _spectral_one(x: np.ndarray, sr: int) -> tuple:
     dom = float(freqs[int(np.argmax(power))])
     centroid = float((freqs * power).sum() / tot) if tot > 0 else 0.0
     # band energy fractions at fixed Hz edges (telephony-ish bands)
-    lo = float(power[freqs < 300.0].sum() / tot) if tot > 0 else 0.0
-    hi = float(power[freqs >= 3400.0].sum() / tot) if tot > 0 else 0.0
-    return (energy, peak, zcr, dom, centroid, lo, hi, nf)
-
-
-def _spectral_one_i16(x: np.ndarray, sr: int) -> tuple:
-    """``_spectral_one`` over int16 PCM — the Arrow hot path's variant.
-
-    Keeping samples at 2 B each (pcm16 payloads are a zero-copy reinterpret
-    of the Arrow buffer; ulaw gathers through the int16 LUT) halves the
-    decoded-sample memory traffic of the float32 path: at 4 concurrent
-    pinned executors the N-vs-4N scaling bench is bandwidth-capped, not
-    compute-capped (probe: the FFT-less pipeline scales at 0.47 while the
-    FFT-heavy one reaches 0.79 — data movement IS the ceiling), so bytes
-    saved here convert directly into fleet throughput. The windowed-frame
-    scratch converts int16 -> float32 per cache-resident chunk; spectral
-    shape features (dominant/centroid/band fractions) are scale-invariant,
-    and energy/peak renormalize by 32767 exactly, so outputs match the
-    float path to float32 rounding (~1e-7 relative)."""
-    n = len(x)
-    if n == 0:
-        return (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0)
-    energy = float(np.einsum("i,i->", x, x, dtype=np.int64)) / (32767.0 * 32767.0) / n
-    peak = float(max(int(x.max()), -int(x.min()))) / 32767.0
-    zcr = float(np.count_nonzero((x[1:] < 0) != (x[:-1] < 0))) / n
-    fr = _frame(x)
-    nf = fr.shape[0]
-    psum2 = np.zeros(2 * (_N_FFT // 2 + 1), dtype=np.float64)
-    for st in range(0, nf, _CHUNK_FRAMES):
-        ch = fr[st : st + _CHUNK_FRAMES]
-        buf = _fft_buf()[: ch.shape[0]]
-        np.multiply(ch, _HANN32, out=buf)  # int16 * f32 -> f32, in scratch
-        spec = np.fft.rfft(buf, axis=1)
-        v = spec.view(np.float64)
-        psum2 += np.einsum("ij,ij->j", v, v)
-    power = (psum2[0::2] + psum2[1::2]) / nf
-    power[0] = 0.0
-    freqs = np.arange(len(power)) * (sr / _N_FFT)
-    tot = float(power.sum())
-    dom = float(freqs[int(np.argmax(power))])
-    centroid = float((freqs * power).sum() / tot) if tot > 0 else 0.0
     lo = float(power[freqs < 300.0].sum() / tot) if tot > 0 else 0.0
     hi = float(power[freqs >= 3400.0].sum() / tot) if tot > 0 else 0.0
     return (energy, peak, zcr, dom, centroid, lo, hi, nf)
@@ -462,13 +440,10 @@ def audio_features(data: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.Da
     frequency (within one 512-bin width). This is the engine's heavy
     vectorized path — the decode+FFT work that at 100 TB dominates the
     pipeline and must scale with cores (north rule N vs 4N)."""
-    codec_arr = codec.to_numpy()
-    data_arr = data.to_numpy()
-    sr = sr_hz.to_numpy()
-    # fused decode->feature->discard per clip (see decode_batch docstring)
+    # fused decode->feature->discard per clip (see the decode_pcm note)
     rows = [
-        _spectral_one(_decode_one(b, c), int(s))
-        for b, c, s in zip(data_arr, codec_arr, sr)
+        _spectral_one_i16(_decode_i16(b, c), int(s))
+        for b, c, s in zip(data.to_numpy(), codec.to_numpy(), sr_hz.to_numpy())
     ]
     return pd.DataFrame(
         rows,

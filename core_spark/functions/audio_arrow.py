@@ -2,16 +2,19 @@
 
 The pandas_udf path materializes one Python ``bytes`` object per clip from the
 Arrow buffer — at 32 concurrent workers that is tens of thousands of ~35 KB
-heap allocations per micro-batch, and on this host the kernel's minor-fault
-path serializes under that load (see functions/audio.py decode_batch note).
+heap allocations per micro-batch, and the kernel's minor-fault path
+serializes under that load (see the functions/audio.py decode_pcm note).
 This module reads clips **directly out of the Arrow record batch**: the
 binary column is one contiguous data buffer + an offsets vector, so each
 clip is a ``numpy`` view (no copy, no allocation), decode output and FFT
 temporaries are the only per-clip allocations, and the worker's allocator
 reaches steady state within the first batch.
 
-This is the production hot path for the streaming CEP job; the pandas UDFs in
-functions/audio.py remain the ergonomic column-expression API.
+Decode and features are the ones the pandas UDFs run: ``_decode_view_i16``
+(the one codec table, all four codecs) and ``_spectral_one_i16``, so both
+passes give the same bits for the same clip. This is the production hot path
+for the streaming CEP job; the pandas UDFs in functions/audio.py remain the
+ergonomic column-expression API.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .audio import ULAW_LUT_I16, _spectral_one_i16
+from .audio import _decode_view_i16, _spectral_one_i16
 
 FEATURE_FIELDS = [
     ("energy", T.DoubleType()),
@@ -41,24 +44,6 @@ def _binary_offsets_data(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     offsets = np.frombuffer(bufs[1], dtype=otype)[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(bufs[2], dtype=np.uint8)
     return offsets, data
-
-
-def _decode_view_i16(view: np.ndarray, codec: str) -> np.ndarray:
-    """Decode a uint8 view of one clip's payload to int16 PCM — the
-    minimum-traffic form: pcm16 is a zero-copy reinterpret of the Arrow
-    buffer (no decode output written AT ALL), ulaw a 1 B -> 2 B LUT gather.
-    The scaling-bench probe shows the 4-executor fleet is memory-bandwidth
-    capped, so every decoded byte avoided is fleet throughput; float32
-    conversion happens per cache-resident FFT chunk inside
-    ``_spectral_one_i16``."""
-    if codec == "pcm16":
-        try:
-            return view.view("<i2")
-        except ValueError:  # odd start offset in the shared buffer
-            return np.frombuffer(view.tobytes(), dtype="<i2")
-    if codec == "ulaw":
-        return ULAW_LUT_I16[view]
-    raise ValueError(f"unknown codec: {codec!r}")
 
 
 def spectral_features_arrow(df: DataFrame) -> DataFrame:

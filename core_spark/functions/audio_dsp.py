@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .audio import _decode_one, pcm16_encode
+from .audio import decode, pcm16_encode
 
 # ------------------------------------------------------------- resampling
 
@@ -274,9 +274,9 @@ def audio_resample_pcm16(data: pd.Series, codec: pd.Series, sr_hz: pd.Series,
                          out_sr: pd.Series) -> pd.Series:
     """Normalize every clip to ``out_sr`` as pcm16 bytes (rate unification
     before training). Fused decode->resample->encode per clip — only one
-    PCM array resident at a time (decode_batch docstring in audio.py
-    explains why whole-batch materialization collapses at high core
-    counts). Null payload or invalid rate => null output."""
+    PCM array resident at a time (the decode_pcm note in audio.py explains
+    why whole-batch materialization collapses at high core counts). Null
+    payload or invalid rate => null output."""
     out = []
     for b, c, sr, o in zip(data.to_numpy(), codec.to_numpy(),
                            sr_hz.to_numpy(), out_sr.to_numpy()):
@@ -284,7 +284,7 @@ def audio_resample_pcm16(data: pd.Series, codec: pd.Series, sr_hz: pd.Series,
         if b is None or c is None or s is None or t is None:
             out.append(None)
             continue
-        out.append(pcm16_encode(resample_sinc(_decode_one(b, c), s, t)))
+        out.append(pcm16_encode(resample_sinc(decode(b, c), s, t)))
     return pd.Series(out)
 
 
@@ -307,7 +307,7 @@ def audio_vad(data: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.DataFra
     rows = []
     for b, c, sr in zip(data.to_numpy(), codec.to_numpy(), sr_hz.to_numpy()):
         s = _safe_sr(sr)
-        x = _decode_one(b, c) if (s is not None and c is not None) else None
+        x = decode(b, c) if (s is not None and c is not None) else None
         if x is None or len(x) == 0:
             rows.append((0, 0, 0.0, 0, 0))
             continue
@@ -333,7 +333,7 @@ def audio_logmel(data: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.Seri
         if b is None or c is None or s is None:
             out.append(None)
             continue
-        out.append(logmel_embedding(_decode_one(b, c), s).tolist())
+        out.append(logmel_embedding(decode(b, c), s).tolist())
     return pd.Series(out)
 
 
@@ -350,7 +350,7 @@ def audio_fingerprint(data: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd
         if b is None or c is None or s is None:
             out.append(None)
             continue
-        out.append(fingerprint(_decode_one(b, c), s))
+        out.append(fingerprint(decode(b, c), s))
     return pd.Series(out)
 
 
@@ -441,7 +441,7 @@ def audio_quality(data: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.Dat
     rows = []
     for b, c, sr in zip(data.to_numpy(), codec.to_numpy(), sr_hz.to_numpy()):
         s = _safe_sr(sr)
-        x = _decode_one(b, c) if (s is not None and c is not None) else None
+        x = decode(b, c) if (s is not None and c is not None) else None
         if x is None or len(x) == 0:
             rows.append((0.0, 0.0, 0.0, 0.0))
             continue
@@ -459,5 +459,5 @@ def audio_mfcc(data: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.Series
         if b is None or c is None or s is None:
             out.append(None)
             continue
-        out.append(mfcc_embedding(_decode_one(b, c), s).tolist())
+        out.append(mfcc_embedding(decode(b, c), s).tolist())
     return pd.Series(out)

@@ -136,38 +136,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct character k-shingles of the normalized text, for Jaccard /
-    MinHash. Pure built-ins: sequence + transform + substring.
-
-    PERF HAZARD: the normalization expression is inlined into the per-element
-    lambda, so Spark re-runs the regex chain once per shingle (~300x per
-    row, interpreted). Hot paths must materialize ``normalize_text`` as a
-    real column first and use ``shingles_of_norm`` /
-    ``shingle_hashes_of_norm`` — 30x faster (see operators/dedup._derive).
-    """
-    norm = normalize_text(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
-
-
-def shingles_of_norm(norm: Column, k: int = 3) -> Column:
-    """Distinct k-shingles of an ALREADY-MATERIALIZED normalized column —
-    the lambda only slices the column value, nothing is re-derived."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
-
-
-def shingle_hashes_of_norm(norm: Column, k: int = 3) -> Column:
-    """Sorted distinct xxhash64 k-shingles of a materialized normalized
-    column: the set-similarity carrier for Jaccard/MinHash — long compares
-    beat short-string compares ~4x in the pair-scoring loop, |set| is
-    unchanged (64-bit collisions are ~2^-47 per pair at ~300 shingles)."""
-    return F.array_sort(
-        F.transform(shingles_of_norm(norm, k), lambda s: F.xxhash64(s))
-    )
-
-
 # ---------------------------------------------------------------- PII scrub
 
 #: (category, pattern, replacement) in APPLICATION ORDER. Patterns are

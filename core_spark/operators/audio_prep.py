@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.audio import _decode_one, pcm16_encode
+from ..functions.audio import decode, pcm16_encode
 from ..functions.audio_dsp import _safe_sr, audio_quality, audio_vad, vad_segments
 from ..functions.text import token_count
 
@@ -74,7 +74,7 @@ def segment_clips(
             for r in pdf.itertuples(index=False):
                 sr = _safe_sr(r.sr_hz)
                 x = (
-                    _decode_one(r.bytes, r.codec)
+                    decode(r.bytes, r.codec)
                     if (sr is not None and r.codec is not None)
                     else np.zeros(0, dtype=np.float32)
                 )

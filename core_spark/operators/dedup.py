@@ -550,43 +550,11 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64(hashes: Column, n_bits: int = 64) -> Column:
-    """64-bit SimHash over a MATERIALIZED token-hash array column: per bit,
-    sign of the sum of ±1 votes from each token hash's bit.
-
-    The per-bit vote is an ``aggregate`` over the hash array with a
-    *literal* shift per bit (shiftright requires a literal count), unrolled
-    in Python — still one JVM-side expression tree, no UDF. The input must
-    be a real column: an inline tokenize-and-hash expression would be
-    re-evaluated inside all 64 vote aggregates.
-    """
-    sig = F.lit(0).cast("long")
-
-    def _merge_for(bit_idx: int):
-        # closure (not default-arg lambda): F.aggregate introspects the
-        # callable's arity, which must be exactly (acc, x)
-        def merge(acc: Column, h: Column) -> Column:
-            return acc + F.when(
-                F.shiftright(h, bit_idx).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return merge
-
-    for j in range(n_bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _merge_for(j))
-        bit = (1 << j) if j < 63 else -(1 << 63)  # bit 63 = long min
-        sig = sig.bitwiseXOR(
-            F.when(vote > 0, F.lit(bit).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 @F.pandas_udf(T.LongType())
 def _simhash64_np(hs: pd.Series) -> pd.Series:
     """Vectorized SimHash: per doc, bit j of the signature = sign of the
-    sum of +/-1 votes from bit j of each token hash. Bit-identical to the
-    unrolled JVM aggregate (simhash64) — same hashes, same votes, ties->0 —
-    at numpy speed (unpackbits) instead of 64 interpreted folds per doc."""
+    sum of +/-1 votes from bit j of each token hash (ties -> 0), at numpy
+    speed (unpackbits) instead of 64 interpreted per-bit folds per doc."""
     import numpy as np
 
     out = np.empty(len(hs), dtype=np.int64)

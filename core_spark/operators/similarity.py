@@ -143,23 +143,15 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit j = 1 iff vec . plane_j > 0."""
-    bucket = F.lit(0).cast("long")
-    for j, p in enumerate(planes):
-        d = dot(vec, F.array(*[F.lit(float(x)).cast("double") for x in p]))
-        bucket = bucket + F.when(d > 0, F.lit(1 << j).cast("long")).otherwise(0)
-    return bucket
-
-
 def make_lsh_buckets_udf(planes: list[list[float]], bits_per_table: int):
     """All per-table sign-LSH buckets of a vector in ONE Arrow matmul.
 
-    The Column-expression form above costs O(n_planes * dim) Catalyst nodes
+    A Column-expression form costs O(n_planes * dim) Catalyst nodes
     (72 planes x 64 dims ~ a 4.6k-node interpreted expression tree — measured
     ~5x slower end-to-end); here each Arrow batch is a single (n, dim) x
     (dim, n_planes) matmul, sign-thresholded and bit-packed per table.
-    Bit order matches lsh_bucket exactly (bit j = plane j within the table).
+    Bit j of a table's bucket is 1 iff vec . plane_j > 0 (plane j within
+    the table).
     """
     from pyspark.sql import types as T
 

@@ -7,13 +7,22 @@
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from core_spark.functions import audio
-from core_spark.synth import clips_df, expected_energy, make_clips_pdf
+from core_spark.synth import CLIPS_SCHEMA, clips_df, expected_energy, make_clips_pdf
 
 N = 120
+ENCODERS = {
+    "pcm16": audio.pcm16_encode,
+    "ulaw": audio.ulaw_encode,
+    "alaw": audio.alaw_encode,
+    "adpcm": audio.adpcm_encode,
+}
 
 
 def _signal(i: int, sr: int, dur_ms: int) -> np.ndarray:
@@ -23,15 +32,47 @@ def _signal(i: int, sr: int, dur_ms: int) -> np.ndarray:
     return a * np.sin(2 * np.pi * f * t)
 
 
+def _four_codec_df(spark, n: int = 12):
+    """make_clips_pdf rows re-encoded so the codecs cycle through all four
+    (synth itself writes only pcm16 and ulaw)."""
+    pdf = make_clips_pdf(n)
+    names = list(ENCODERS)
+    codecs = [names[i % 4] for i in range(n)]
+    pdf["codec"] = codecs
+    pdf["bytes"] = [
+        ENCODERS[c](_signal(i, int(sr), int(d)))
+        for i, (c, sr, d) in enumerate(zip(codecs, pdf["sr_hz"], pdf["dur_ms"]))
+    ]
+    return spark.createDataFrame(pdf, CLIPS_SCHEMA)
+
+
 def test_codec_roundtrip_snr_numpy():
     x = _signal(5, 16000, 500)
-    for enc, dec in [
-        (audio.pcm16_encode, audio.pcm16_decode),
-        (audio.ulaw_encode, audio.ulaw_decode),
-    ]:
-        y = dec(enc(x))
+    for codec in ("pcm16", "ulaw"):
+        y = audio.decode(ENCODERS[codec](x), codec)
         assert audio.snr_db(x, y) >= 30.0
         assert len(y) == len(x)
+
+
+def test_every_codec_reduces_the_same_in_both_passes():
+    """For every codec, the Arrow pass's kernel (_decode_view_i16 then
+    _spectral_one_i16) gives the same energy and peak bits as the
+    clip_energy/clip_peak UDF bodies, and the float decode is the int16
+    decode over the one full scale 32767."""
+    from core_spark.functions.audio import _spectral_one_i16
+    from core_spark.functions.audio_arrow import _decode_view_i16
+
+    t = np.arange(8001) / 8000.0
+    x = 0.7 * np.sin(2 * np.pi * 440.0 * t)
+    for codec, enc in ENCODERS.items():
+        b = enc(x)
+        pcm = _decode_view_i16(np.frombuffer(b, dtype=np.uint8), codec)
+        assert pcm.dtype == np.int16, codec
+        feats = _spectral_one_i16(pcm, 8000)
+        one = (pd.Series([b]), pd.Series([codec]))
+        assert feats[0] == audio.clip_energy.func(*one)[0], codec
+        assert feats[1] == audio.clip_peak.func(*one)[0], codec
+        assert np.array_equal(audio.decode(b, codec), pcm.astype(np.float32) / 32767.0), codec
 
 
 def test_spark_decode_invariants(spark):
@@ -108,38 +149,81 @@ def test_spectral_features_match_generator(spark):
 
 
 def test_arrow_spectral_path_equals_pandas_udf_path(spark):
-    """The zero-copy mapInArrow extractor must produce the same features as
-    the pandas_udf column API. The Arrow path works on int16 PCM (its
-    energy accumulates EXACTLY in int64; the pandas path rounds in
-    float32), so parity is to float32 rounding (~1e-7 relative), not
-    bit-equality; dominant-frequency (argmax) must still agree exactly."""
-    from core_spark.functions.audio import audio_features
-    from core_spark.functions.audio_arrow import spectral_features_arrow
+    """The zero-copy mapInArrow extractor and the audio_features pandas UDF
+    run the same int16 decode and the same kernel, so their features are
+    bit-equal for every codec; audio_features' eight features equal the
+    kernel run here on the same payloads."""
+    from core_spark.functions.audio import _spectral_one_i16, audio_features
+    from core_spark.functions.audio_arrow import FEATURE_FIELDS, spectral_features_arrow
 
-    df = clips_df(spark, 50)
-    a = {
-        r["clip_id"]: r
-        for r in spectral_features_arrow(df).select(
-            "clip_id", "energy", "dominant_freq_hz", "spectral_centroid_hz"
-        ).collect()
-    }
+    df = _four_codec_df(spark)
+    names = [n for n, _ in FEATURE_FIELDS]
+    a = {r["clip_id"]: r for r in spectral_features_arrow(df).select("clip_id", *names).collect()}
     b = {
         r["clip_id"]: r
         for r in df.select(
-            "clip_id", audio_features("bytes", "codec", "sr_hz").alias("af")
-        ).select("clip_id", "af.energy", "af.dominant_freq_hz", "af.spectral_centroid_hz").collect()
+            "clip_id", "bytes", "codec", "sr_hz",
+            audio_features("bytes", "codec", "sr_hz").alias("af"),
+        ).collect()
     }
-    assert a.keys() == b.keys()
-    for cid in a:
-        # float32 dot over ~1e5 samples accumulates ~1e-5..1e-4 relative
-        # error on the pandas side; the int16 path is exact
-        assert abs(a[cid]["energy"] - b[cid]["energy"]) < 1e-4 * max(
-            abs(b[cid]["energy"]), 1e-6
-        ), cid
-        assert a[cid]["dominant_freq_hz"] == b[cid]["dominant_freq_hz"], cid
-        assert abs(
-            a[cid]["spectral_centroid_hz"] - b[cid]["spectral_centroid_hz"]
-        ) < 1e-5 * max(abs(b[cid]["spectral_centroid_hz"]), 1.0), cid
+    assert a.keys() == b.keys() and len(a) == 12
+    assert {r["codec"] for r in b.values()} == set(ENCODERS)
+    for cid, r in b.items():
+        af = tuple(r["af"])
+        assert tuple(a[cid][n] for n in names) == af[: len(names)], cid
+        pcm = audio._decode_view_i16(np.frombuffer(r["bytes"], np.uint8), r["codec"])
+        assert af == _spectral_one_i16(pcm, r["sr_hz"]), cid
+
+
+def test_four_codecs_through_both_feature_passes(spark):
+    """Both clip feature passes decode every codec, give the same per-clip
+    energy bits, and feed tumbling_energy without failing."""
+    from core_spark.streaming import windows as sw
+
+    df = _four_codec_df(spark)
+    spectral = sw.clip_features_spectral(df)
+    energy = sw.clip_features(df)
+    e1 = dict(spectral.select("clip_id", "energy").collect())
+    e2 = dict(energy.select("clip_id", "energy").collect())
+    assert e1 == e2 and len(e1) == 12
+    w1 = sw.tumbling_energy(spectral, 60).orderBy("window_start", "prefix").collect()
+    w2 = sw.tumbling_energy(energy, 60).orderBy("window_start", "prefix").collect()
+    assert [(r["window_start"], r["prefix"], r["n_clips"]) for r in w1] == [
+        (r["window_start"], r["prefix"], r["n_clips"]) for r in w2
+    ]
+    assert sum(r["n_clips"] for r in w1) == 12
+    for r, s in zip(w1, w2):
+        assert abs(r["avg_energy"] - s["avg_energy"]) <= 1e-12 * s["avg_energy"]
+
+
+def test_odd_length_pcm16_payloads_decode_whole_samples(spark):
+    """A pcm16 payload with a trailing odd byte decodes floor(n/2) samples
+    in every decode path, as decoded_samples counts them; the Arrow pass
+    returns one row per payload."""
+    from core_spark.functions.audio_arrow import _decode_view_i16, spectral_features_arrow
+
+    payloads = {"null": None, "odd": bytes(range(1, 8)), "even": bytes(range(1, 9))}
+    df = spark.createDataFrame(
+        [(k, b, 8000, 1, "pcm16", datetime(2024, 1, 1)) for k, b in payloads.items()],
+        "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, ingest_ts timestamp",
+    )
+    got = {
+        r["clip_id"]: (r["n"], r["m"], r["e"])
+        for r in df.select(
+            "clip_id",
+            audio.decoded_samples("bytes", "codec").alias("n"),
+            F.size(audio.decode_pcm("bytes", "codec")).alias("m"),
+            audio.clip_energy("bytes", "codec").alias("e"),
+        ).collect()
+    }
+    for k, b in payloads.items():
+        view = np.frombuffer(b or b"", dtype=np.uint8)
+        want = len(_decode_view_i16(view, "pcm16"))
+        assert want == len(view) // 2
+        assert got[k][:2] == (want, want), k
+    assert got["odd"][2] > 0 and got["null"][2] == 0.0
+    rows = spectral_features_arrow(df).collect()
+    assert sorted(r["clip_id"] for r in rows) == sorted(payloads)
 
 
 def test_corrections_range_matches_pdf_path():

@@ -154,8 +154,8 @@ def test_fingerprint_invariance_and_discrimination():
     # gain change: identical constellation
     assert best_aligned_matches(0.5 * x) >= 0.9 * best_aligned_matches(x)
     # mu-law re-encode round trip
-    from core_spark.functions.audio import ulaw_decode
-    y = ulaw_decode(ulaw_encode(x))
+    from core_spark.functions.audio import decode
+    y = decode(ulaw_encode(x), "ulaw")
     assert best_aligned_matches(y) >= 0.6 * best_aligned_matches(x)
     # whole-hop time shift
     z = np.concatenate([np.zeros(512), x])[: len(x)]

@@ -35,7 +35,7 @@ def test_pcm16_roundtrip_snr(xs):
     x = np.asarray(xs, dtype=np.float32)
     if float(np.mean(x * x)) < 1e-4:
         x = x + 0.1  # SNR undefined for silence; shift to a live signal
-    dec = au.pcm16_decode(au.pcm16_encode(x))
+    dec = au.decode(au.pcm16_encode(x), "pcm16")
     assert len(dec) == len(x)
     # int16 quantization: SNR >= 30 dB for any signal with power >= 1e-4
     assert _snr_db(x.astype(np.float64), dec.astype(np.float64)) >= 30.0
@@ -47,7 +47,7 @@ def test_ulaw_roundtrip_snr(xs):
     x = np.asarray(xs, dtype=np.float32)
     if float(np.mean(x * x)) < 1e-2:
         x = x + 0.3
-    dec = au.ulaw_decode(au.ulaw_encode(x))
+    dec = au.decode(au.ulaw_encode(x), "ulaw")
     assert len(dec) == len(x)
     # G.711 mu-law: ~38 dB SNR for speech-level signals; 30 dB is the
     # engine's per-row invariant floor (BASELINE input_hint)
@@ -61,8 +61,8 @@ def test_ulaw_lut_exhaustive_roundtrip():
     codes (0x7F/0xFF) and clip-range aliases — but the decoded value must
     survive a re-encode cycle bit-for-bit.)"""
     codes = np.arange(256, dtype=np.uint8).tobytes()
-    dec = au.ulaw_decode(codes)
-    dec2 = au.ulaw_decode(au.ulaw_encode(dec))
+    dec = au.decode(codes, "ulaw")
+    dec2 = au.decode(au.ulaw_encode(dec), "ulaw")
     assert np.array_equal(dec, dec2)
 
 
